@@ -11,11 +11,12 @@ Output contract (learned from round 1, where the driver recorded only a
 - The full per-query timing map is written to BENCH_DETAIL.json next to
   this file (key "queries_full_file" points at it).
 
-Timing attribution: the shingle / exact-Jaccard-pair frames shared by
-the dedup family (plans/dedup.py memoization) are pre-warmed BEFORE the
-timed loop and reported as their own entry ("shared_dedup_build"), so
-per-query numbers measure each plan's own work and stay comparable
-across rounds regardless of registry-name ordering.
+Timing attribution: every per-sf session stager (etl_cnpjs_spark/
+staging.py — the frames the dedup family shares, the CNPJ env, staged
+copies of tables) is built BEFORE the timed loop and reported as its own
+infra entry ("stage_<name>"), so per-query numbers measure each plan's
+own work and stay comparable across rounds regardless of registry-name
+ordering.
 
 Noise control (r2 verdict item #5): wall-clock on this box swings
 3-10× between identical runs, so each query reports the MEDIAN of
@@ -44,6 +45,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from etl_cnpjs_spark import staging  # noqa: E402
 from etl_cnpjs_spark.plans import QUERIES  # noqa: E402
 from etl_cnpjs_spark.session import get_spark  # noqa: E402
 
@@ -103,68 +105,20 @@ def main() -> None:
 
     timings: dict[str, float] = {}
 
-    # Pre-warm the memoized frames the dedup family shares, timed as a
-    # bench entry of its own (it IS real work a pipeline would stage once).
-    try:
-        from etl_cnpjs_spark.plans.dedup import _doc_shingles, _exact_pairs
-
-        t0 = time.perf_counter()
-        _doc_shingles(spark, sf_dir)
-        _exact_pairs(spark, sf_dir)
-        timings["shared_dedup_build"] = round(time.perf_counter() - t0, 4)
-    except Exception as exc:
-        print(f"bench: shared_dedup_build failed: {exc}", file=sys.stderr)
-
-    # Pre-warm the CNPJ fixture env the same way (fixture gen + raw load
-    # are input staging; the timed cnpj_flagship then measures the query).
-    try:
-        from etl_cnpjs_spark.plans.cnpj_parity import ensure_cnpj_env
-
-        t0 = time.perf_counter()
-        ensure_cnpj_env(spark, sf_dir)
-        timings["cnpj_env_build"] = round(time.perf_counter() - t0, 4)
-    except Exception as exc:
-        print(f"bench: cnpj_env_build failed: {exc}", file=sys.stderr)
-
-    # KMeans-quantizer pre-train (back since r7: sim_topk_kmeans_trained
-    # is a registered rows-only key again, r6 ADVICE item 1). Training
-    # is once-per-corpus offline work — warm the memoized model (plus
-    # pyspark.ml's one-time infra, 10-60 s cold) as its own infra entry
-    # so the timed key measures trained-quantizer ASSIGNMENT + probe,
-    # not training. sim_topk_kmeans (label-seeded) needs no warmup.
-    try:
-        from pyspark.ml.functions import array_to_vector
-        from pyspark.sql import functions as F
-
-        from etl_cnpjs_spark.plans.similarity import _kmeans_model, _vecs
-
-        t0 = time.perf_counter()
-        _kmeans_model(
-            spark,
-            sf_dir,
-            _vecs(spark, sf_dir).withColumn(
-                "features", array_to_vector(F.col("v"))
-            ),
-        )
-        timings["kmeans_train_warmup"] = round(time.perf_counter() - t0, 4)
-    except Exception as exc:
-        print(f"bench: kmeans_train_warmup failed: {exc}", file=sys.stderr)
-
-    # Stage the banded posting table as infra (r9 verdict item 4): the
-    # _banded8x2 memo IS dedup_minhash_persist's bucketBy posting table
-    # in its stated production role — a session stages it once, then
-    # every incremental screen pays only the probe. Building it here
-    # (timed as its own entry, like the shingle/pair frames above) means
-    # dedup_incremental / corpus_ingest_incremental measure the probe,
-    # not whichever of them runs first absorbing the build.
-    try:
-        from etl_cnpjs_spark.plans.dedup import _banded8x2
-
-        t0 = time.perf_counter()
-        _banded8x2(spark, sf_dir)
-        timings["banded_posting_build"] = round(time.perf_counter() - t0, 4)
-    except Exception as exc:
-        print(f"bench: banded_posting_build failed: {exc}", file=sys.stderr)
+    # Stage every per-sf input (staging.py: shingle/pair/label/banded
+    # frames, the KMeans quantizer, the CNPJ env, staged copies of tables
+    # in other formats) before the timed loop, one infra entry per
+    # stager, so per-query numbers measure each plan's own work and stay
+    # comparable across rounds regardless of registry-name ordering.
+    for stager in staging.REGISTRY.values():
+        if not stager.per_sf:
+            continue
+        try:
+            t0 = time.perf_counter()
+            stager(spark, sf_dir)
+            timings[f"stage_{stager.name}"] = round(time.perf_counter() - t0, 4)
+        except Exception as exc:
+            print(f"bench: stage_{stager.name} failed: {exc}", file=sys.stderr)
 
     # First use of the Python DataSource API spins up its worker
     # infrastructure (~15 s once per session, then <1 s per read). Warm it
@@ -189,18 +143,6 @@ def main() -> None:
         timings["arrow_infra_warmup"] = round(time.perf_counter() - t0, 4)
     except Exception as exc:
         print(f"bench: arrow_infra_warmup failed: {exc}", file=sys.stderr)
-
-    # scan_binaryfile's first run stages its binary fixture directory and
-    # initializes the binaryFile datasource (r4 fleet-noise max: 32.5×,
-    # entirely the cold first rep). Warm it once as its own entry so the
-    # timed reps measure the steady-state scan, same treatment as the
-    # Python-DS infra above.
-    try:
-        t0 = time.perf_counter()
-        run_once(spark, QUERIES["scan_binaryfile"].fn, sf_dir)
-        timings["binaryfile_fixture_warmup"] = round(time.perf_counter() - t0, 4)
-    except Exception as exc:
-        print(f"bench: binaryfile_fixture_warmup failed: {exc}", file=sys.stderr)
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     # Per-key wall budget for extra reps: keys whose runs have already

@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_cnpjs_spark.staging import staged
+
 # Driver-provided synthetic star schema (TESTDATA.md).
 TESTDATA_TABLES = (
     "region",
@@ -76,15 +78,10 @@ def table_path(sf_dir: str, name: str) -> str:
 # of cross-core-count driver runs already exercise; every opted-in key is
 # additionally re-proven against its DuckDB oracle this round.
 
-_SCAN_UNITS_CACHE: dict[str, tuple[int, int]] = {}
-
-
-def _scan_units(path: str) -> tuple[int, int]:
+@staged("scan_units")
+def _scan_units(spark: SparkSession, path: str) -> tuple[int, int]:
     """(splittable row groups, total bytes) for a parquet file or dir of
-    files — one footer read per path per process, memoized."""
-    cached = _SCAN_UNITS_CACHE.get(path)
-    if cached is not None:
-        return cached
+    files — one footer read per path per session."""
     try:
         import pyarrow.parquet as pq
 
@@ -101,7 +98,6 @@ def _scan_units(path: str) -> tuple[int, int]:
         nbytes = sum(os.path.getsize(f) for f in files)
     except Exception:  # unreadable/foreign layout: never block the read
         groups, nbytes = 1 << 30, 0  # gate stays closed
-    _SCAN_UNITS_CACHE[path] = (groups, nbytes)
     return (groups, nbytes)
 
 
@@ -115,7 +111,7 @@ def maybe_parallelize_scan(spark: SparkSession, df: DataFrame, path: str) -> Dat
     if os.environ.get("SPARK_GRAFT_SCAN_PARALLELIZE", "1") == "0":
         return df
     n = spark.sparkContext.defaultParallelism
-    groups, nbytes = _scan_units(path)
+    groups, nbytes = _scan_units(spark, path)
     if groups < n and nbytes >= _scan_parallelize_min_bytes():
         return df.repartition(n)
     return df
@@ -123,40 +119,33 @@ def maybe_parallelize_scan(spark: SparkSession, df: DataFrame, path: str) -> Dat
 
 # --- session-scoped schema memo (r14, guide §6 / VERDICT r13 #1) ------------
 #
-# Every table() call used to re-run parquet footer SCHEMA INFERENCE
-# (plus the dtypes round trip that decides the timestamp normalization)
-# — measured at ~0.09 s per call on this box
-# (tools/profile_overhead_r14.py: 'construct' is ~1/3 of a tail key's
-# wall time at sf0.1; multi-table keys pay 0.25-0.43 s; ~390 keys × 1-3
-# calls ≈ tens of seconds of the bench's query total). A production
-# engine declares its table schemas ONCE per session in a catalog;
-# re-inferring per query is an artifact of path-based reads. This memo
-# caches the INFERRED SCHEMA and the derived normalization plan per
-# (application, path); every call still issues a fresh
-# spark.read.schema(cached).parquet(path) — ~0.02 s — so each call gets
-# a fresh relation with fresh expression ids (a memoized DataFrame
-# handle was tried first and broke Spark's ambiguous-self-join check on
-# tpch_q2/q11, where two branches join the same base table).
-#
-# What this is NOT: a data cache. Nothing is materialized — every
-# execution re-lists and re-scans the parquet input at action time
-# exactly as before; only the footer schema (a write-time constant of
-# the fixture) is reused.
-#
-# Keyed by applicationId (the _shingle_cache discipline) so a
-# stopped-and-recreated session never aliases a dead entry. A caller
-# that rewrites a fixture path in-process WITH A DIFFERENT SCHEMA uses
-# clear_table_memo() (no current caller does — test fixture dirs are
-# write-once) or SPARK_GRAFT_TABLE_MEMO=0.
-
-_TABLE_META_CACHE: dict[tuple[str, str], tuple[object, tuple[tuple[str, str], ...]]] = {}
+# Re-running parquet footer SCHEMA INFERENCE (plus the dtypes round trip
+# that decides the timestamp normalization) on every table() call cost
+# ~0.09 s per call, about a third of a tail key's wall time at sf0.1. A
+# production engine declares its table schemas ONCE per session in a
+# catalog, so this stager keeps the inferred schema and normalization
+# plan per (application, path). Every call still runs a fresh
+# spark.read.schema(cached).parquet(path) — ~0.02 s — so each call gets a
+# fresh relation with fresh expression ids: a memoized DataFrame handle
+# was tried first and broke Spark's ambiguous-self-join check on
+# tpch_q2/q11, where two branches join the same base table. Nothing is
+# materialized; every execution re-lists and re-scans the input. The
+# stager's path fingerprint makes a fixture rewritten in place — with
+# another schema or timestamp encoding — re-infer on its next read.
 
 
-def clear_table_memo() -> int:
-    """Drop every memoized table schema; returns how many were dropped."""
-    n = len(_TABLE_META_CACHE)
-    _TABLE_META_CACHE.clear()
-    return n
+@staged("table_meta")
+def _table_meta(spark: SparkSession, path: str) -> tuple[object, tuple[tuple[str, str], ...]]:
+    """(inferred schema, timestamp fixes) of one parquet table."""
+    df = spark.read.parquet(path)
+    fixes = []
+    dtypes = df.dtypes
+    if os.path.basename(path) == "events.parquet" and dict(dtypes).get("ts") == "bigint":
+        fixes.append(("ts", "nanos_as_long"))
+    for col, dtype in dtypes:
+        if dtype == "timestamp_ntz":
+            fixes.append((col, "ntz_cast"))
+    return df.schema, tuple(fixes)
 
 
 def table(
@@ -183,25 +172,10 @@ def table(
     exactly one place and the rest of the engine sees one timestamp type.
     """
     path = table_path(sf_dir, name)
-    memo_on = os.environ.get("SPARK_GRAFT_TABLE_MEMO", "1") != "0"
-    key = (spark.sparkContext.applicationId, path)
-    meta = _TABLE_META_CACHE.get(key) if memo_on else None
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if meta is None:
-        df = spark.read.parquet(path)
-        fixes = []
-        dtypes = df.dtypes
-        if name == "events" and dict(dtypes).get("ts") == "bigint":
-            fixes.append(("ts", "nanos_as_long"))
-        for col, dtype in dtypes:
-            if dtype == "timestamp_ntz":
-                fixes.append((col, "ntz_cast"))
-        if memo_on:
-            _TABLE_META_CACHE[key] = (df.schema, tuple(fixes))
-    else:
-        schema, fixes = meta
-        df = spark.read.schema(schema).parquet(path)
+    schema, fixes = _table_meta(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     for col, kind in fixes:
         if kind == "nanos_as_long":
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))

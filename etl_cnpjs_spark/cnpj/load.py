@@ -41,6 +41,20 @@ def read_raw(spark: SparkSession, paths: list[str] | str, table: str) -> DataFra
     )
 
 
+class RawLoadError(RuntimeError):
+    """One or more table loads failed. ``failed`` maps each failed table to
+    its exception; ``written`` is the {table: path} of the loads that
+    finished, whose outputs exist."""
+
+    def __init__(self, failed: dict[str, BaseException], written: dict[str, str]):
+        self.failed, self.written = failed, written
+        detail = "; ".join(
+            f"{t}: {type(e).__name__}: {(str(e).splitlines() or [''])[0]}"
+            for t, e in failed.items()
+        )
+        super().__init__(f"raw load failed for {sorted(failed)} ({detail}); written: {written}")
+
+
 def load_raw_parquet(spark: SparkSession, routed: dict[str, list[str]], out_dir: str, partition_estab_by_uf: bool = False) -> dict[str, str]:
     """Load every discovered table to raw parquet; returns {table: path}.
 
@@ -50,7 +64,9 @@ def load_raw_parquet(spark: SparkSession, routed: dict[str, list[str]], out_dir:
     read+write no longer serializes behind six small dimension loads —
     its tail tasks back-fill with the next table's scan. 3 in flight is
     the guide's "enough to fill the tail" sizing; results and
-    idempotence are unchanged (each job touches only its own dest)."""
+    idempotence are unchanged (each job touches only its own dest).
+    Every load runs to its end; if any failed, RawLoadError names them and
+    carries the {table: path} of the ones that were written."""
     from concurrent.futures import ThreadPoolExecutor
 
     todo = [
@@ -59,18 +75,22 @@ def load_raw_parquet(spark: SparkSession, routed: dict[str, list[str]], out_dir:
         if paths and table in TABLE_COLUMNS
     ]
 
-    def load_one(item: tuple[str, list[str]]) -> tuple[str, str]:
-        table, paths = item
+    def load_one(table: str, paths: list[str]) -> str:
         dest = os.path.join(out_dir, f"{table}.parquet")
         df = read_raw(spark, paths, table)
         writer = df.write.mode("overwrite")
         if table == "estabelecimentos" and partition_estab_by_uf:
             writer = writer.partitionBy("uf")
         writer.parquet(dest)
-        return table, dest
+        return dest
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        return dict(pool.map(load_one, todo))
+        futures = {table: pool.submit(load_one, table, paths) for table, paths in todo}
+    failed = {t: f.exception() for t, f in futures.items() if f.exception() is not None}
+    written = {t: f.result() for t, f in futures.items() if t not in failed}
+    if failed:
+        raise RawLoadError(failed, written) from next(iter(failed.values()))
+    return written
 
 
 def register_raw(spark: SparkSession, table_paths: dict[str, str]) -> None:

@@ -21,11 +21,9 @@ the driver, and additionally by tests/test_cnpj_parity.py.
 
 from __future__ import annotations
 
-import atexit
+import hashlib
 import os
 import re
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,14 +38,12 @@ from etl_cnpjs_spark.cnpj.ingest import discover
 from etl_cnpjs_spark.cnpj.load import load_raw_parquet, register_raw
 from etl_cnpjs_spark.cnpj.schemas import AFFINITY_KEYS, DIM_COLUMNS, TABLE_COLUMNS
 from etl_cnpjs_spark.plans.registry import register
+from etl_cnpjs_spark.staging import STAGE_ROOT, disk_stage, session_tmpdir, staged
 
 # Fixture volume tracks the requested SF so the bench measures the
 # flagship at real-shaped row counts (sf0.1 ≈ the suggested FIXTURES.md
 # sizes ×100), while driver correctness (sf0.01) stays quick.
 _SIZES = {"0.001": (1_000, 2_500), "0.01": (10_000, 25_000), "0.1": (100_000, 250_000)}
-
-# applicationId → sizes currently registered in that session's views.
-_env_cache: dict[str, tuple[int, int]] = {}
 
 
 def _sizes_for(sf_dir: str) -> tuple[int, int]:
@@ -55,126 +51,66 @@ def _sizes_for(sf_dir: str) -> tuple[int, int]:
     return _SIZES.get(m.group(1).rstrip(".") if m else "", _SIZES["0.001"])
 
 
-# Deterministic oracle-feed location baked into the oracle SQL string.
-# SIZE-KEYED: each fixture volume stages into its own directory, so
-# processes comparing at different SFs (the driver at sf0.01, the local
-# suite at sf0.001/0.1, bench at sf0.1 — possibly concurrently) never
-# clobber each other's feed between the Spark run and the oracle run.
-_ORACLE_FEED_ROOT = os.path.join(tempfile.gettempdir(), "cnpj_oracle_feed")
-
-
-def _feed_dir(sizes: tuple[int, int]) -> str:
-    return os.path.join(_ORACLE_FEED_ROOT, f"{sizes[0]}x{sizes[1]}")
-
-
-# Generated fixture SOURCE (the CSV/zip drop), memoized per size and
-# process — and, since r14, staged IDEMPOTENTLY ACROSS PROCESSES at a
-# deterministic size-keyed path with a _DONE manifest, exactly the
-# stage_oracle_feed discipline below: the generator is deterministic
-# (seed 42, byte-identical shards every run) and produces INPUT data,
-# so re-running it per process was ~6.5 s of the sf0.1 staging budget
-# spent recreating bytes that already exist. The marker carries a
-# digest of the generator source, so editing fixtures.py invalidates
-# the staged drop; generation lands in a unique temp dir and is
-# atomically renamed into place (a concurrent loser just rereads the
-# winner's identical bytes).
-_fixture_src_cache: dict[tuple[int, int], tuple[str, dict]] = {}
-
-_FIXTURE_SRC_ROOT = os.path.join(tempfile.gettempdir(), "cnpj_fixture_src")
-
-
+# The fixture SOURCE (the CSV/zip drop) and the DuckDB oracle FEED are
+# deterministic input files (seed 42, byte-identical every run), so each
+# is staged once across processes (staging.disk_stage) at a path keyed by
+# fixture sizes and a digest of the generator source: editing fixtures.py
+# restages both. Size keying lets processes comparing at different SFs
+# (oracle checks at sf0.01, the local suite at sf0.001/0.1, bench at sf0.1 —
+# possibly concurrently) never clobber each other's feed between the
+# Spark run and the oracle run.
 def _generator_digest() -> str:
-    import hashlib
-
     with open(fixtures.__file__, "rb") as f:
         return hashlib.sha256(f.read()).hexdigest()[:16]
 
 
-def _generated_fixtures(sizes: tuple[int, int]) -> tuple[str, dict]:
-    hit = _fixture_src_cache.get(sizes)
-    if hit is not None:
-        return hit
-    import json
+def _stage_key(sizes: tuple[int, int]) -> str:
+    return f"{sizes[0]}x{sizes[1]}-{_generator_digest()}"
 
-    src = os.path.join(
-        _FIXTURE_SRC_ROOT, f"{sizes[0]}x{sizes[1]}-{_generator_digest()}"
-    )
-    manifest = os.path.join(src, "_DONE")
-    try:
-        with open(manifest) as f:
-            rel = json.load(f)
-        paths = {
-            t: [os.path.join(src, p) for p in ps] for t, ps in rel.items()
-        }
-        _fixture_src_cache[sizes] = (src, paths)
-        return src, paths
-    except (OSError, ValueError):
-        pass
-    work = tempfile.mkdtemp(prefix="cnpj_fixtures_")
-    paths = fixtures.generate(
-        work, seed=42, n_empresas=sizes[0], n_estab=sizes[1]
-    )
-    rel = {
-        t: [os.path.relpath(p, work) for p in ps] for t, ps in paths.items()
-    }
-    os.makedirs(_FIXTURE_SRC_ROOT, exist_ok=True)
-    tmp_manifest = os.path.join(work, f"._DONE.tmp{os.getpid()}")
-    with open(tmp_manifest, "w") as f:
-        json.dump(rel, f)
-    os.replace(tmp_manifest, os.path.join(work, "_DONE"))
-    try:
-        os.rename(work, src)  # atomic publish; loser keeps the winner's
-    except OSError:
-        if os.path.exists(os.path.join(src, "_DONE")):
-            shutil.rmtree(work, ignore_errors=True)  # someone else won
-        else:  # rename failed for another reason: serve this process
-            atexit.register(shutil.rmtree, work, ignore_errors=True)
-            src = work
-    paths = {t: [os.path.join(src, p) for p in ps] for t, ps in rel.items()}
-    _fixture_src_cache[sizes] = (src, paths)
-    return src, paths
+
+def _feed_dir(sizes: tuple[int, int]) -> str:
+    """Where the oracle feed for `sizes` lives — the one resolver shared by
+    the oracle SQL, stage_oracle_feed and __spark_entry__.oracle_sql."""
+    return os.path.join(STAGE_ROOT, "cnpj_oracle_feed", _stage_key(sizes))
+
+
+def _generated_fixtures(sizes: tuple[int, int]) -> tuple[str, dict]:
+    """(fixture root, {table: [shard paths]}) of the staged fixture drop."""
+
+    def build(work: str) -> dict:
+        paths = fixtures.generate(work, seed=42, n_empresas=sizes[0], n_estab=sizes[1])
+        return {t: [os.path.relpath(p, work) for p in ps] for t, ps in paths.items()}
+
+    src, rel = disk_stage(os.path.join(STAGE_ROOT, "cnpj_fixture_src", _stage_key(sizes)), build)
+    return src, {t: [os.path.join(src, p) for p in ps] for t, ps in rel.items()}
 
 
 def stage_oracle_feed(sizes: tuple[int, int] | None = None) -> str:
     """Publish the DuckDB oracle feed: deterministic fixture shards
     (seed 42) ingested exactly as the reference ingests them — pandas
     dtype=str over latin-1 ';' headerless CSV (etl.py:87) — one parquet
-    per QUERY_FINAL table at a deterministic size-keyed path. Idempotent
-    per size (marker file); per-file os.replace keeps readers consistent.
-    Only the fixture generator is shared with the Spark path: the bytes
-    under comparison are produced by two independent ingestion stacks."""
+    per QUERY_FINAL table at _feed_dir(sizes). Only the fixture
+    generator is shared with the Spark path: the bytes under comparison
+    are produced by two independent ingestion stacks."""
     sizes = sizes or _SIZES["0.01"]
-    feed = _feed_dir(sizes)
-    marker = os.path.join(feed, "_DONE")
-    try:
-        with open(marker) as f:
-            if f.read() == "done":
-                return feed
-    except OSError:
-        pass
-    import pandas as pd
 
-    os.makedirs(feed, exist_ok=True)
-    _, paths = _generated_fixtures(sizes)
-    for t in AFFINITY_KEYS:  # exactly the QUERY_FINAL-facing tables
-        pdf = pd.concat(
-            [
-                pd.read_csv(
-                    p, sep=";", header=None, dtype=str,
-                    encoding="latin1", names=TABLE_COLUMNS[t],
-                )
-                for p in paths[t]
-            ],
-            ignore_index=True,
-        )
-        tmp = os.path.join(feed, f".{t}.tmp{os.getpid()}.parquet")
-        pdf.to_parquet(tmp, index=False)
-        os.replace(tmp, os.path.join(feed, f"{t}.parquet"))
-    tmp = f"{marker}.tmp{os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write("done")
-    os.replace(tmp, marker)
-    return feed
+    def build(work: str) -> None:
+        import pandas as pd
+
+        _, paths = _generated_fixtures(sizes)
+        for t in AFFINITY_KEYS:  # exactly the QUERY_FINAL-facing tables
+            pd.concat(
+                [
+                    pd.read_csv(
+                        p, sep=";", header=None, dtype=str,
+                        encoding="latin1", names=TABLE_COLUMNS[t],
+                    )
+                    for p in paths[t]
+                ],
+                ignore_index=True,
+            ).to_parquet(os.path.join(work, f"{t}.parquet"), index=False)
+
+    return disk_stage(_feed_dir(sizes), build)[0]
 
 
 def _oracle_sql() -> str:
@@ -194,25 +130,35 @@ def _oracle_sql() -> str:
     return "WITH " + ",\n     ".join(ctes) + QUERY_FINAL
 
 
-def ensure_cnpj_env(spark: SparkSession, sf_dir: str) -> None:
-    """Generate fixtures + raw-load + register views, once per
-    (session, size) — staging, not query work (bench pre-warms it)."""
-    sizes = _sizes_for(sf_dir)
-    stage_oracle_feed(sizes)  # keep the DuckDB feed in lockstep with the SF
-    if _env_cache.get(spark.sparkContext.applicationId) == sizes:
-        return
+@staged("cnpj_raw")
+def _cnpj_raw(spark: SparkSession, sizes: tuple[int, int]) -> dict[str, str]:
+    """Raw-load the staged fixture drop of `sizes`: {table: parquet path}."""
     src, paths = _generated_fixtures(sizes)
-    base = tempfile.mkdtemp(prefix="cnpj_plan_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)  # scratch, not output
+    base = session_tmpdir("cnpj_plan_")
     routed = discover(os.path.join(src, "zips"))
     table_paths = load_raw_parquet(spark, routed, os.path.join(base, "raw"))
     dim_routed = {t: paths[t] for t in DIM_COLUMNS}
     table_paths.update(
         load_raw_parquet(spark, dim_routed, os.path.join(base, "raw"))
     )
-    register_raw(spark, table_paths)
+    return table_paths
+
+
+@staged("cnpj_env", per_session=True)
+def _cnpj_env(spark: SparkSession, sf_dir: str) -> None:
+    """Point the session's raw and affinity views at the raw load for
+    sf_dir's fixture sizes. Views are session state: one entry per
+    session, re-registered when the sf_dir changes."""
+    register_raw(spark, _cnpj_raw(spark, _sizes_for(sf_dir)))
     register_affinity_views(spark)
-    _env_cache[spark.sparkContext.applicationId] = sizes
+
+
+def ensure_cnpj_env(spark: SparkSession, sf_dir: str) -> None:
+    """Stage the fixture drop and oracle feed, raw-load once per
+    (session, size), and point the views at that load — staging, not
+    query work (bench pre-warms it)."""
+    stage_oracle_feed(_sizes_for(sf_dir))  # keep the DuckDB feed in lockstep with the SF
+    _cnpj_env(spark, sf_dir)
 
 
 @register("cnpj_flagship", oracle=_oracle_sql(), tags=("cnpj", "parity", "pipeline"))

@@ -27,6 +27,7 @@ from pyspark.sql import Window as W
 
 from etl_cnpjs_spark.catalog import table
 from etl_cnpjs_spark.plans.registry import register
+from etl_cnpjs_spark.staging import session_tmpdir, staged
 
 # --- graph_clustering_coeff -------------------------------------------------
 #
@@ -1894,29 +1895,23 @@ _DPP_SQL = """
     GROUP BY 1
     """
 
-_dpp_path_cache: dict = {}
-
-
+@staged("dpp")
 def _dpp_fact(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the status-partitioned fact once per (app, sf)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _dpp_path_cache.get(key)
-    if path is None:
-        path = _os.path.join(_tempfile.mkdtemp(prefix="dpp_"), "orders_part")
-        (
-            table(spark, sf_dir, "orders")
-            .select(
-                "o_orderkey",
-                F.floor(F.col("o_totalprice") * 100 + 0.5)
-                .cast("bigint")
-                .alias("cents"),
-                "o_orderstatus",
-            )
-            .write.mode("overwrite")
-            .partitionBy("o_orderstatus")
-            .parquet(path)
+    """Materialize the status-partitioned fact once per (session, sf)."""
+    path = _os.path.join(session_tmpdir("dpp_"), "orders_part")
+    (
+        table(spark, sf_dir, "orders")
+        .select(
+            "o_orderkey",
+            F.floor(F.col("o_totalprice") * 100 + 0.5)
+            .cast("bigint")
+            .alias("cents"),
+            "o_orderstatus",
         )
-        _dpp_path_cache[key] = path
+        .write.mode("overwrite")
+        .partitionBy("o_orderstatus")
+        .parquet(path)
+    )
     return path
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import Window as W
 
 from etl_cnpjs_spark.catalog import table
 from etl_cnpjs_spark.plans.registry import register
+from etl_cnpjs_spark.staging import session_tmpdir, staged
 
 # --- text_exact_substr_spans -------------------------------------------------
 #
@@ -1187,18 +1188,11 @@ def corpus_substr_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # push the nested comparison down. The oracle re-derives from flat
 # orders, so staging adds no semantics.
 
-_nested_cache: dict[tuple[str, str], str] = {}
-
-
+@staged("nested")
 def _stage_nested_parquet(spark: SparkSession, sf_dir: str) -> str:
-    from etl_cnpjs_spark.plans.extended3 import _session_tmpdir
     import os
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _nested_cache.get(key)
-    if cached is not None:
-        return cached
-    out = os.path.join(_session_tmpdir("nested_stage_"), "orders_nested.parquet")
+    out = os.path.join(session_tmpdir("nested_stage_"), "orders_nested.parquet")
     o = table(spark, sf_dir, "orders")
     o.select(
         "o_orderkey",
@@ -1210,7 +1204,6 @@ def _stage_nested_parquet(spark: SparkSession, sf_dir: str) -> str:
             .alias("cents"),
         ).alias("info"),
     ).write.mode("overwrite").parquet(out)
-    _nested_cache[key] = out
     return out
 
 
@@ -1540,7 +1533,15 @@ def fn_isoweek(spark: SparkSession, sf_dir: str) -> DataFrame:
 # values. Completes the codec matrix beside gzip CSV (scan_csv_gzip)
 # and snappy-default parquet (every other sink).
 
-_zstd_cache: dict[tuple[str, str], str] = {}
+@staged("zstd")
+def _stage_zstd_parquet(spark: SparkSession, sf_dir: str) -> str:
+    import os
+
+    path = os.path.join(session_tmpdir("zstd_stage_"), "docs.parquet")
+    table(spark, sf_dir, "documents").write.mode("overwrite").option(
+        "compression", "zstd"
+    ).parquet(path)
+    return path
 
 
 @register(
@@ -1557,18 +1558,7 @@ def sink_parquet_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves bit-identical content (md5 over text) after the
     write-read cycle. Distributed write, one staged copy per
     (session, sf)."""
-    import os
-
-    from etl_cnpjs_spark.plans.extended3 import _session_tmpdir
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _zstd_cache.get(key)
-    if path is None:
-        path = os.path.join(_session_tmpdir("zstd_stage_"), "docs.parquet")
-        table(spark, sf_dir, "documents").write.mode("overwrite").option(
-            "compression", "zstd"
-        ).parquet(path)
-        _zstd_cache[key] = path
+    path = _stage_zstd_parquet(spark, sf_dir)
     df = spark.read.parquet(path)
     return df.select(
         "doc_id",
@@ -1652,19 +1642,11 @@ def sql_not_in_null(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (doc_id % 7 == 3 lines are truncated mid-record), so the good/bad
 # split is oracle-checkable from the clean table.
 
-_jsonl_cache: dict[tuple[str, str], str] = {}
-
-
+@staged("jsonl")
 def _stage_corrupt_jsonl(spark: SparkSession, sf_dir: str) -> str:
     import os
 
-    from etl_cnpjs_spark.plans.extended3 import _session_tmpdir
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _jsonl_cache.get(key)
-    if cached is not None:
-        return cached
-    out = os.path.join(_session_tmpdir("jsonl_stage_"), "feed.jsonl")
+    out = os.path.join(session_tmpdir("jsonl_stage_"), "feed.jsonl")
     d = table(spark, sf_dir, "documents").select(
         F.when(
             F.col("doc_id") % 7 == 3,
@@ -1677,7 +1659,6 @@ def _stage_corrupt_jsonl(spark: SparkSession, sf_dir: str) -> str:
         .alias("value")
     )
     d.write.mode("overwrite").text(out)
-    _jsonl_cache[key] = out
     return out
 
 

@@ -11,26 +11,15 @@ engine capabilities a training-data pipeline needs on top of it
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_cnpjs_spark.catalog import table
 from etl_cnpjs_spark.plans.registry import quantize, quantize_sql, register
+from etl_cnpjs_spark.staging import session_tmpdir, staged
 
-
-def _session_tmpdir(prefix: str) -> str:
-    """mkdtemp that cleans itself up at interpreter exit — staged scan
-    inputs (ORC / evolved-parquet) are per-process scratch, and without
-    the atexit hook every fresh session leaked a staged copy to /tmp
-    (ADVICE r2)."""
-    out = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    return out
 
 # --- text_repetition -------------------------------------------------------
 
@@ -116,21 +105,14 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- scan_orc --------------------------------------------------------------
 
-_orc_cache: dict[tuple[str, str], str] = {}
-
-
+@staged("orc")
 def _stage_orc(spark: SparkSession, sf_dir: str) -> str:
     """Stage documents as an ORC table once per (session, sf) — a
     distributed write (Spark's ORC sink), no driver staging."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _orc_cache.get(key)
-    if cached is not None:
-        return cached
-    out = os.path.join(_session_tmpdir("orc_stage_"), "documents.orc")
+    out = os.path.join(session_tmpdir("orc_stage_"), "documents.orc")
     table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "text"
     ).write.mode("overwrite").orc(out)
-    _orc_cache[key] = out
     return out
 
 
@@ -1012,20 +994,14 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- scan_merge_schema -----------------------------------------------------
 
-_mergestage_cache: dict[tuple[str, str], str] = {}
-
-
+@staged("mergestage")
 def _stage_evolved_parquet(spark: SparkSession, sf_dir: str) -> str:
     """Two parquet drops of the same logical table written under an
     EVOLVED schema: generation 1 carries (c_custkey, c_name), a later
     generation adds the c_acctbal column. Staged via ordinary Spark
-    writes (executor-side), memoized per (applicationId, sf) — input
-    setup, not query work."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _mergestage_cache.get(key)
-    if cached is not None:
-        return cached
-    out = _session_tmpdir("evolved_")
+    writes (executor-side), once per (session, sf) — input setup, not
+    query work."""
+    out = session_tmpdir("evolved_")
     c = table(spark, sf_dir, "customer")
     c.filter(F.col("c_nationkey") == 3).select("c_custkey", "c_name").write.mode(
         "overwrite"
@@ -1033,7 +1009,6 @@ def _stage_evolved_parquet(spark: SparkSession, sf_dir: str) -> str:
     c.filter(F.col("c_nationkey") == 7).select(
         "c_custkey", "c_name", "c_acctbal"
     ).write.mode("overwrite").parquet(f"{out}/gen=2")
-    _mergestage_cache[key] = out
     return out
 
 

@@ -26,7 +26,7 @@ from etl_cnpjs_spark.cnpj.flagship import (
     run_flagship_sql,
 )
 from etl_cnpjs_spark.cnpj.ingest import discover, read_manifest
-from etl_cnpjs_spark.cnpj.load import load_raw_parquet, register_raw
+from etl_cnpjs_spark.cnpj.load import RawLoadError, load_raw_parquet, register_raw
 from etl_cnpjs_spark.cnpj.schemas import DIM_COLUMNS, TABLE_COLUMNS
 from etl_cnpjs_spark.cnpj.typed import register_typed
 
@@ -82,6 +82,24 @@ def test_flagship_dataframe_parity(spark, cnpj_env):
     got = run_flagship(spark).toPandas()
     want = con.execute(QUERY_FINAL).df()
     assert_frames_match(got, want, "flagship_df")
+
+
+def test_load_failure_names_table_and_keeps_written(spark, cnpj_env, tmp_path):
+    """One table's shards point at a missing file: every other load still
+    runs, and the error names the failed table and lists what was written."""
+    env, _ = cnpj_env
+    routed = {
+        "cnae": env["paths"]["cnae"],
+        "municipios": [str(tmp_path / "missing.MUNICCSV")],
+        "motivo_situacao_cadastral": env["paths"]["motivo_situacao_cadastral"],
+    }
+    with pytest.raises(RawLoadError) as err:
+        load_raw_parquet(spark, routed, str(tmp_path / "raw"))
+    assert set(err.value.failed) == {"municipios"}
+    assert "municipios" in str(err.value)
+    assert sorted(err.value.written) == ["cnae", "motivo_situacao_cadastral"]
+    for path in err.value.written.values():
+        assert os.path.exists(os.path.join(path, "_SUCCESS")) and path in str(err.value)
 
 
 def test_flagship_covers_49_of_50_cnaes(spark, cnpj_env):

@@ -1,45 +1,43 @@
-"""clear_memos: the eviction hook for dedup.py's session-scoped memo
-frames (r9 ADVICE low #4 — the caches never evicted on their own, which
-is fine for one-application bench/driver runs but leaks block sets in a
-long-lived session that walks many sf_dirs)."""
+"""staging.clear: the eviction hook for the session stagers (r9 ADVICE
+low #4 — the memos never evict on their own, which is fine for
+one-application bench runs but leaks block sets in a long-lived
+session that walks many sf_dirs)."""
 
 from __future__ import annotations
 
+from etl_cnpjs_spark import staging
 from etl_cnpjs_spark.plans import dedup
 
+DEDUP_STAGERS = ("shingles", "pairs", "labels", "banded")
 
-def test_clear_memos_evicts_and_rebuilds(spark, sf_dir):
+
+def _memo(name: str) -> dict:
+    return staging.REGISTRY[name].memo
+
+
+def test_clear_evicts_and_rebuilds(spark, sf_dir):
     app = spark.sparkContext.applicationId
 
     before = {tuple(r) for r in dedup._banded8x2(spark, sf_dir).select("doc_id").collect()}
-    assert (app, sf_dir) in dedup._banded_cache
-    assert (app, sf_dir) in dedup._shingle_cache
+    assert (app, (sf_dir,)) in _memo("banded")
+    assert (app, (sf_dir,)) in _memo("shingles")
 
-    n = dedup.clear_memos(app)
+    n = staging.clear(app)
     assert n >= 2
-    assert all(
-        key[0] != app
-        for cache in (
-            dedup._shingle_cache,
-            dedup._pairs_cache,
-            dedup._label_cache,
-            dedup._banded_cache,
-        )
-        for key in cache
-    )
+    assert all(key[0] != app for name in DEDUP_STAGERS for key in _memo(name))
 
     # the memo rebuilds transparently and reproduces the same frame
     after = {tuple(r) for r in dedup._banded8x2(spark, sf_dir).select("doc_id").collect()}
     assert after == before
-    assert (app, sf_dir) in dedup._banded_cache
+    assert (app, (sf_dir,)) in _memo("banded")
 
 
-def test_clear_memos_all_and_scoped_noop(spark, sf_dir):
+def test_clear_all_and_scoped_noop(spark, sf_dir):
     dedup._doc_shingles(spark, sf_dir)
     # a scoped clear for an unknown app touches nothing
-    assert dedup.clear_memos("application_nonexistent_0") == 0
-    assert dedup._shingle_cache
+    assert staging.clear("application_nonexistent_0") == 0
+    assert _memo("shingles")
     # an unscoped clear drops everything
-    assert dedup.clear_memos() >= 1
-    assert not dedup._shingle_cache
-    assert not dedup._banded_cache
+    assert staging.clear() >= 1
+    assert not _memo("shingles")
+    assert not _memo("banded")

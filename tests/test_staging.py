@@ -1,0 +1,125 @@
+"""Session stagers (etl_cnpjs_spark/staging.py): memo hits, self-
+invalidation on rewritten inputs, per-session view state, and the
+cross-process disk stage's manifest check."""
+
+from __future__ import annotations
+
+import ast
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from etl_cnpjs_spark import staging
+from etl_cnpjs_spark.catalog import table
+from etl_cnpjs_spark.plans import QUERIES, cnpj_parity
+from tests.compare import assert_frames_match
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "etl_cnpjs_spark")
+
+
+def test_rewritten_table_invalidates_schema_memo(spark, tmp_path):
+    """A fixture rewritten in place with another column type is re-read
+    with its new schema, with no clear call in between."""
+    sf = str(tmp_path)
+    path = os.path.join(sf, "widgets.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2, 3], pa.int64())}), path)
+    assert table(spark, sf, "widgets").dtypes == [("k", "bigint")]
+
+    pq.write_table(pa.table({"k": pa.array(["a", "b", "c"], pa.string())}), path)
+    df = table(spark, sf, "widgets")
+    assert df.dtypes == [("k", "string")]
+    assert sorted(r.k for r in df.collect()) == ["a", "b", "c"]
+
+
+def test_stager_builds_once(spark, tmp_path):
+    built = []
+
+    @staging.staged("test_builds_once")
+    def stager(spark, sf_dir):
+        built.append(sf_dir)
+        return len(built)
+
+    try:
+        assert stager(spark, str(tmp_path)) == stager(spark, str(tmp_path)) == 1
+        assert stager.builds == 1 and stager.last_build_s is not None
+        assert staging.REGISTRY["test_builds_once"] is stager
+    finally:
+        del staging.REGISTRY["test_builds_once"]
+
+
+def test_cnpj_views_follow_size_sequence(spark):
+    """A→B→A re-points the session's raw views at A's load."""
+    a, b = "staging_test/sf0.001", "staging_test/sf0.01"
+
+    def estab_rows() -> int:
+        return spark.table("raw_estabelecimentos").count()
+
+    cnpj_parity.ensure_cnpj_env(spark, a)
+    n_a = estab_rows()
+    cnpj_parity.ensure_cnpj_env(spark, b)
+    assert estab_rows() != n_a
+    cnpj_parity.ensure_cnpj_env(spark, a)
+    assert estab_rows() == n_a
+    raw_a = cnpj_parity._cnpj_raw(spark, cnpj_parity._sizes_for(a))
+    files = spark.table("raw_estabelecimentos").inputFiles()
+    assert files and all(raw_a["estabelecimentos"] in f for f in files)
+
+
+def test_deleted_shard_is_restaged(spark, oracle_con, sf_dir):
+    """A shard deleted under a valid manifest is regenerated by the next
+    stage, and cnpj_flagship still matches its oracle."""
+    sizes = cnpj_parity._sizes_for(os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "sf0.01"))
+    _, paths = cnpj_parity._generated_fixtures(sizes)
+    shard = paths["estabelecimentos"][0]
+    size = os.path.getsize(shard)
+    os.remove(shard)
+    feed_file = os.path.join(cnpj_parity._feed_dir(sizes), "empresas.parquet")
+    os.remove(feed_file)
+
+    _, again = cnpj_parity._generated_fixtures(sizes)
+    assert again == paths and os.path.getsize(shard) == size
+    assert cnpj_parity.stage_oracle_feed(sizes) == cnpj_parity._feed_dir(sizes)
+    assert os.path.exists(feed_file)
+
+    spec = QUERIES["cnpj_flagship"]
+    got = spec.fn(spark, sf_dir).toPandas()
+    assert len(got) > 0
+    assert_frames_match(got, oracle_con.execute(spec.oracle).df(), "cnpj_flagship")
+
+
+def test_stage_root_is_private():
+    staging._private_root()
+    st = os.stat(staging.STAGE_ROOT)
+    assert st.st_uid == os.getuid() and st.st_mode & 0o777 == 0o700
+
+
+def test_no_hand_rolled_memos():
+    """Only staging.py keys state by applicationId, and no module defines
+    a module-level _*_cache / _*_CACHE dict: session memos go through
+    @staged."""
+    offenders = []
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            rel = os.path.relpath(path, PKG)
+            with open(path) as fh:
+                src = fh.read()
+            if rel != "staging.py" and "sparkContext.applicationId" in src:
+                offenders.append(f"{rel}: sparkContext.applicationId")
+            for node in ast.parse(src).body:
+                targets = (
+                    node.targets if isinstance(node, ast.Assign)
+                    else [node.target] if isinstance(node, ast.AnnAssign)
+                    else []
+                )
+                for t in targets:
+                    if (
+                        isinstance(t, ast.Name)
+                        and t.id.startswith("_")
+                        and t.id.lower().endswith("_cache")
+                    ):
+                        offenders.append(f"{rel}:{node.lineno}: {t.id}")
+    assert offenders == []

@@ -51,14 +51,21 @@ def iso_median(v) -> float | None:
     return float(v) if isinstance(v, (int, float)) and v > 0 else None
 
 
+def _posting_build(line: dict) -> float | None:
+    """The banded posting build's infra entry, under its pre- or
+    post-staging.py name."""
+    infra = line.get("infra") or {}
+    return infra.get("banded_posting_build", infra.get("stage_banded"))
+
+
 def comparable_totals(a: dict, b: dict) -> tuple[float | None, float | None, str]:
     """total_queries_sec pair, re-including banded_posting_build on the
     side that staged it as infra when the other side did not (i.e. the
     other side's query timings absorbed that build cost)."""
     ta, tb = a.get("total_queries_sec"), b.get("total_queries_sec")
     note = ""
-    ba = (a.get("infra") or {}).get("banded_posting_build")
-    bb = (b.get("infra") or {}).get("banded_posting_build")
+    ba = _posting_build(a)
+    bb = _posting_build(b)
     if ta and tb:
         if bb and not ba:
             tb, note = round(tb + bb, 4), f" (B +{bb}s posting build re-added)"

@@ -316,7 +316,7 @@ def main() -> int:
     # this, whichever key the registry order happens to put first carries
     # the whole shared build's exchanges in its plan string and the
     # audit's findings change when the presentation order rotates.
-    # (bench.py stages the same frames as its shared_dedup_build entry.)
+    # (bench.py stages the same frames as its stage_* infra entries.)
     try:
         from etl_cnpjs_spark.plans.dedup import (
             _doc_shingles,
