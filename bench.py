@@ -32,6 +32,11 @@ Each query is fully materialized through the noop DataSourceV2 sink —
 every operator executes, nothing collects to the driver (the 100 TB
 posture: the "fetch" is a distributed write, never collect();
 SURVEY.md §2.1 O17).
+
+Failure records: BENCH_DETAIL.json carries {"status": ok|error|timeout,
+"error": "<Class>: <first line>"} for every in-suite entry (key "status")
+and every isolated subprocess (key "isolated_status"), so a -1 in the
+timings names its cause. Every subprocess goes through run_json_child.
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ import json
 import math
 import os
 import re
+import subprocess
 import sys
 import time
 
@@ -80,6 +86,35 @@ HEADLINE = [
 ]
 
 
+def describe(exc: BaseException) -> str:
+    lines = str(exc).strip().splitlines()
+    return f"{type(exc).__name__}: {lines[0] if lines else ''}"
+
+
+def ok() -> dict:
+    return {"status": "ok", "error": None}
+
+
+def failed(exc: BaseException) -> dict:
+    return {"status": "error", "error": describe(exc)}
+
+
+def run_json_child(cmd: list[str], timeout: float) -> tuple[dict, object]:
+    """Run cmd in a fresh process; return its record {status, error} and
+    the JSON value of its last stdout line (None unless status is ok)."""
+    try:
+        out = subprocess.run(cmd, capture_output=True, text=True, timeout=timeout)
+    except subprocess.TimeoutExpired as exc:
+        return {"status": "timeout", "error": describe(exc)}, None
+    if out.returncode != 0:
+        tail = (out.stderr.strip().splitlines() or [""])[-1]
+        return failed(ChildProcessError(f"exit {out.returncode}: {tail}")), None
+    try:
+        return ok(), json.loads(out.stdout.strip().splitlines()[-1])
+    except (IndexError, ValueError) as exc:  # no line, or not JSON
+        return failed(exc), None
+
+
 def run_once(spark, fn, sf_dir: str) -> float:
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
@@ -104,6 +139,7 @@ def main() -> None:
         pass
 
     timings: dict[str, float] = {}
+    status: dict[str, dict] = {}
 
     # Stage every per-sf input (staging.py: shingle/pair/label/banded
     # frames, the KMeans quantizer, the CNPJ env, staged copies of tables
@@ -113,12 +149,15 @@ def main() -> None:
     for stager in staging.REGISTRY.values():
         if not stager.per_sf:
             continue
+        entry = f"stage_{stager.name}"
         try:
             t0 = time.perf_counter()
             stager(spark, sf_dir)
-            timings[f"stage_{stager.name}"] = round(time.perf_counter() - t0, 4)
+            timings[entry] = round(time.perf_counter() - t0, 4)
+            status[entry] = ok()
         except Exception as exc:
-            print(f"bench: stage_{stager.name} failed: {exc}", file=sys.stderr)
+            print(f"bench: {entry} failed: {exc}", file=sys.stderr)
+            status[entry] = failed(exc)
 
     # First use of the Python DataSource API spins up its worker
     # infrastructure (~15 s once per session, then <1 s per read). Warm it
@@ -128,8 +167,10 @@ def main() -> None:
         t0 = time.perf_counter()
         run_once(spark, QUERIES["source_python_ds"].fn, sf_dir)
         timings["python_ds_infra_warmup"] = round(time.perf_counter() - t0, 4)
+        status["python_ds_infra_warmup"] = ok()
     except Exception as exc:
         print(f"bench: python_ds_infra_warmup failed: {exc}", file=sys.stderr)
+        status["python_ds_infra_warmup"] = failed(exc)
 
     # First use of an Arrow-batched Python path (mapInPandas /
     # pandas_udf) spins up the Python worker pool + Arrow IPC once per
@@ -141,8 +182,10 @@ def main() -> None:
             lambda it: it, "id long"
         ).write.format("noop").mode("overwrite").save()
         timings["arrow_infra_warmup"] = round(time.perf_counter() - t0, 4)
+        status["arrow_infra_warmup"] = ok()
     except Exception as exc:
         print(f"bench: arrow_infra_warmup failed: {exc}", file=sys.stderr)
+        status["arrow_infra_warmup"] = failed(exc)
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     # Per-key wall budget for extra reps: keys whose runs have already
@@ -160,18 +203,18 @@ def main() -> None:
     failures = 0
     for name in sorted(QUERIES):
         runs: list[float] = []
-        failed = False
+        status[name] = ok()
         for _ in range(reps):
             try:
                 runs.append(round(run_once(spark, QUERIES[name].fn, sf_dir), 4))
             except Exception as exc:  # a failing query must not hide the rest
                 print(f"bench: {name} failed: {exc}", file=sys.stderr)
-                failed = True
+                status[name] = failed(exc)
                 break
             if len(runs) >= 2 and sum(runs) >= rep_budget:
                 break
         all_reps[name] = runs
-        if failed or not runs:
+        if status[name]["status"] != "ok" or not runs:
             timings[name] = -1.0
             failures += 1
         else:
@@ -223,26 +266,12 @@ def main() -> None:
     # (tools/box_canary.py — same workload byte-for-byte) so the
     # normalizer measures only box state, not this process's resident
     # JVM heap / allocator fragmentation after the full suite.
-    try:
-        import subprocess as _sp
-
-        _out = _sp.run(
-            [
-                sys.executable,
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "tools",
-                    "box_canary.py",
-                ),
-            ],
-            capture_output=True,
-            text=True,
-            timeout=120,
-        )
-        canary = json.loads(_out.stdout.strip().splitlines()[-1])
-    except Exception as exc:  # canary must never fail the bench line
-        print(f"bench: box canary failed: {exc}", file=sys.stderr)
-        canary = None
+    tools_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
+    status["box_canary"], canary = run_json_child(
+        [sys.executable, os.path.join(tools_dir, "box_canary.py")], timeout=120
+    )
+    if canary is None:  # canary must never fail the bench line
+        print(f"bench: box canary failed: {status['box_canary']['error']}", file=sys.stderr)
 
     # Isolated-headline mode (r6 verdict item 4): the in-suite flagship /
     # corpus_curate numbers drift round-over-round with session AGE (the
@@ -286,9 +315,9 @@ def main() -> None:
     # Additions-only: the in-suite timed path is untouched.
     isolated: dict[str, dict[str, float]] = {}
     isolated_reps: dict[str, list[list[float]]] = {}
+    isolated_status: dict[str, list[dict]] = {}
     if os.environ.get("SPARK_GRAFT_BENCH_ISOLATED", "1") != "0":
         import statistics
-        import subprocess
 
         iso_reps = os.environ.get("SPARK_GRAFT_BENCH_ISOLATED_REPS", "5")
         iso_procs = int(os.environ.get("SPARK_GRAFT_BENCH_ISOLATED_PROCS", "2"))
@@ -308,33 +337,18 @@ def main() -> None:
         ):
             pooled: list[float] = []
             isolated_reps[key] = []
+            isolated_status[key] = []
             for _ in range(iso_procs):
-                try:
-                    out = subprocess.run(
-                        [
-                            sys.executable,
-                            os.path.join(
-                                os.path.dirname(os.path.abspath(__file__)),
-                                "tools",
-                                "bench_isolated.py",
-                            ),
-                            key,
-                            iso_reps,
-                            sf_dir,
-                        ],
-                        capture_output=True,
-                        text=True,
-                        timeout=300,
-                    )
-                    runs = json.loads(out.stdout.strip().splitlines()[-1])[
-                        "reps"
-                    ]
-                    pooled.extend(runs)
-                    isolated_reps[key].append(runs)
-                except Exception as exc:
-                    print(
-                        f"bench: isolated {key} failed: {exc}", file=sys.stderr
-                    )
+                record, value = run_json_child(
+                    [sys.executable, os.path.join(tools_dir, "bench_isolated.py"), key, iso_reps, sf_dir],
+                    timeout=300,
+                )
+                if record["status"] == "ok":
+                    pooled.extend(value["reps"])
+                    isolated_reps[key].append(value["reps"])
+                else:
+                    print(f"bench: isolated {key} {record['status']}: {record['error']}", file=sys.stderr)
+                isolated_status[key].append(record)
             isolated[key] = (
                 {
                     "median": round(statistics.median(pooled), 3),
@@ -361,6 +375,8 @@ def main() -> None:
                     "queries_reps": all_reps,
                     "queries_noise": noise_per_key,
                     "isolated_reps": isolated_reps,
+                    "isolated_status": isolated_status,
+                    "status": status,
                     "reps": reps,
                     "sf": sf,
                     "failures": failures,

@@ -1,7 +1,8 @@
 """QUERY_FINAL — the reference's entire analytical surface, verbatim
 (ETLCNPJFinalEmpresaEstabelecimentos.py:191-234; semantics SURVEY.md §2.3).
 
-Two execution surfaces over the same raw tables:
+Two SQL surfaces over the same affinity views, both spark.sql() of the
+one constant; there is no DataFrame-API form:
 
 - run_flagship_sql: the reference SQL string, unmodified, via spark.sql()
   over *affinity views* — per-table views that TRY_CAST exactly the
@@ -10,10 +11,11 @@ Two execution surfaces over the same raw tables:
   etl.py:224-233). Text columns stay raw — padding, decimal-comma and
   yyyymmdd text survive to the output, as in the golden CSV. The identical
   string + identical views run on DuckDB as the parity oracle.
-- run_flagship: the DataFrame-API form with explicit broadcast hints on
-  the four dimension tables — the plan we want at 100 TB: one shuffle
-  (empresas ⋈ estabelecimentos sort-merge; AQE may promote it) and zero
-  shuffles for the dims.
+- run_flagship: the same string with one hint, BROADCAST_HINT, after its
+  first SELECT — the plan we want at 100 TB: the three code-table dims
+  (cnae, municipios, motivo) broadcast, zero shuffles for them, and the
+  one big-big join (empresas ⋈ estabelecimentos) left to the planner
+  (sort-merge, or a broadcast when empresas is small).
 
 Quirks preserved (SURVEY.md §2.3): motivo_situacao_cadastral joined on the
 *status* code; cnpj_basico projected from the fact side; IN-list duplicate
@@ -23,9 +25,7 @@ literals are set semantics; no ORDER BY — output order never asserted.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from etl_cnpjs_spark.cnpj.fixtures import QUERY_CNAES, QUERY_MUNICIPIOS, QUERY_SITUACOES
 from etl_cnpjs_spark.cnpj.schemas import AFFINITY_KEYS, TABLE_COLUMNS
 
 # etl.py:191-234, verbatim (whitespace included).
@@ -74,6 +74,11 @@ WHERE
     )
 """
 
+# The table aliases are QUERY_FINAL's own (c, m, mot): bounded-cardinality
+# code tables. The hinted text is derived, never a second copy of the query.
+BROADCAST_HINT = "/*+ BROADCAST(c, m, mot) */"
+QUERY_FINAL_BROADCAST = QUERY_FINAL.replace("SELECT", f"SELECT {BROADCAST_HINT}", 1)
+
 
 def affinity_view_sql(table: str, source: str) -> str:
     """SELECT that retypes exactly the AFFINITY_KEYS columns of `table` to
@@ -101,50 +106,5 @@ def run_flagship_sql(spark: SparkSession) -> DataFrame:
 
 
 def run_flagship(spark: SparkSession) -> DataFrame:
-    """DataFrame-API form with the physical design we want at scale:
-    the three dims and cnae broadcast (bounded cardinality — code tables),
-    the single big-big join (estabelecimentos ⋈ empresas) left to
-    sort-merge/AQE on cnpj_basico."""
-    e = spark.table("estabelecimentos").alias("e")
-    emp = spark.table("empresas").alias("emp")
-    c = spark.table("cnae").alias("c")
-    m = spark.table("municipios").alias("m")
-    mot = spark.table("motivo_situacao_cadastral").alias("mot")
-
-    cnaes = sorted(set(QUERY_CNAES))  # IN dedups (etl.py:227,230-231)
-    filtered = e.filter(
-        F.col("e.id_municipio").isin(QUERY_MUNICIPIOS)
-        & F.col("e.id_situacao_cadastral").isin(QUERY_SITUACOES)
-        & F.col("e.id_cnae").isin(cnaes)
-    )
-    joined = (
-        filtered.join(F.broadcast(c), F.col("e.id_cnae") == F.col("c.id_cnae"))
-        .join(emp, F.col("emp.cnpj_basico") == F.col("e.cnpj_basico"))
-        .join(F.broadcast(m), F.col("m.id_municipio") == F.col("e.id_municipio"))
-        .join(
-            F.broadcast(mot),
-            F.col("mot.id_situacao_cadastral") == F.col("e.id_situacao_cadastral"),
-        )
-    )
-    return joined.select(
-        F.col("e.cnpj_basico"),
-        F.col("e.nome_fantasia"),
-        F.col("emp.razao_social"),
-        F.col("c.descricao_cnae"),
-        F.col("e.bairro"),
-        F.col("m.nome_municipio"),
-        F.col("e.tipo_do_logradouro"),
-        F.col("e.logradouro"),
-        F.col("e.numero"),
-        F.col("e.cep"),
-        F.col("e.complemento"),
-        F.col("e.ddd1"),
-        F.col("e.telefone1"),
-        F.col("e.ddd2"),
-        F.col("e.telefone2"),
-        F.col("e.correio_eletronico"),
-        F.col("e.data_de_inicio_atividade"),
-        F.col("e.data_situacao_cadastro"),
-        F.col("emp.capital_social"),
-        F.col("mot.descricao_situacao_cadastral"),
-    )
+    """QUERY_FINAL with the dims broadcast (QUERY_FINAL_BROADCAST)."""
+    return spark.sql(QUERY_FINAL_BROADCAST)

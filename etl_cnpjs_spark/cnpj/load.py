@@ -5,7 +5,9 @@ The reference stamps names on 25k-row pandas chunks and appends to SQLite
 under PRAGMA foreign_keys=OFF. Here the whole stage is one declarative
 read + one distributed write:
 
-- schema declared positionally (schemas.raw_schema), never inferred;
+- schema declared positionally (schemas.raw_schema) on every read,
+  including the read-back: register_raw reads the parquet this stage
+  wrote with the schema it wrote it with, so no job infers it again;
 - all shards of a table read as one multi-path scan (the reference's
   per-file append loop disappears — union is the scan);
 - mode('overwrite') replaces DROP+CREATE+append (O9/O10), atomic via
@@ -95,6 +97,8 @@ def load_raw_parquet(spark: SparkSession, routed: dict[str, list[str]], out_dir:
 
 def register_raw(spark: SparkSession, table_paths: dict[str, str]) -> None:
     """Register raw parquet tables as temp views (the catalog surface the
-    flagship and typed layers build on)."""
+    flagship and typed layers build on). The read declares the schema
+    read_raw wrote with, so it launches no schema-inference job; a
+    uf-partitioned load still reads back with uf last, as inference would."""
     for table, path in table_paths.items():
-        spark.read.parquet(path).createOrReplaceTempView(f"raw_{table}")
+        spark.read.schema(raw_schema(table)).parquet(path).createOrReplaceTempView(f"raw_{table}")

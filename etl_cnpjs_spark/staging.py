@@ -14,8 +14,8 @@ application through one memo, ``@staged(name)``:
 - ``per_session=True`` is for a build whose product is session state
   (temp views): one entry per application, rebuilt and replaced when
   called with other arguments.
-- ``REGISTRY`` lists every stager by name with its build count and last
-  build time; ``clear`` evicts one application's entries, or all.
+- ``REGISTRY`` lists every stager by name with its build and hit counts
+  and last build time; ``clear`` evicts one application's entries, or all.
 
 ``disk_stage`` is the cross-process counterpart for deterministic input
 files.
@@ -66,6 +66,7 @@ class Stager:
         self.per_session = per_session
         self.memo: dict[tuple, tuple[tuple, object]] = {}
         self.builds = 0
+        self.hits = 0
         self.last_build_s: float | None = None
 
     def __call__(self, spark, *args):
@@ -74,6 +75,7 @@ class Stager:
         stamp = (args, _fingerprint(args)) if self.per_session else _fingerprint(args)
         hit = self.memo.get(key)
         if hit is not None and hit[0] == stamp:
+            self.hits += 1
             return hit[1]
         t0 = time.perf_counter()
         value = self.fn(spark, *args)

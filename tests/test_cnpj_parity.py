@@ -19,7 +19,9 @@ import pytest
 from etl_cnpjs_spark.cnpj import fixtures
 from etl_cnpjs_spark.cnpj.export import export_csv, merge_single_file
 from etl_cnpjs_spark.cnpj.flagship import (
+    BROADCAST_HINT,
     QUERY_FINAL,
+    QUERY_FINAL_BROADCAST,
     affinity_view_sql,
     register_affinity_views,
     run_flagship,
@@ -77,11 +79,95 @@ def test_flagship_sql_parity(spark, cnpj_env):
 
 
 def test_flagship_dataframe_parity(spark, cnpj_env):
-    """DataFrame-API flagship (broadcast physical design) ≡ the SQL form."""
+    """run_flagship (QUERY_FINAL with the dims broadcast by one hint) ≡ the
+    DuckDB oracle of the verbatim SQL."""
     _env, con = cnpj_env
     got = run_flagship(spark).toPandas()
     want = con.execute(QUERY_FINAL).df()
     assert_frames_match(got, want, "flagship_df")
+
+
+def _group_jobs(spark, group: str, fn) -> int:
+    """Spark jobs fn launches, counted as the job ids statusTracker files
+    under a job group set for this call only."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_register_raw_launches_no_jobs(spark, cnpj_env):
+    """The read-back declares the schema the load wrote with: no schema
+    inference job. The inferring read launches jobs under the same probe."""
+    env, _ = cnpj_env
+    paths = env["table_paths"]
+    assert _group_jobs(spark, "probe_register_raw", lambda: register_raw(spark, paths)) == 0
+    inferred = _group_jobs(spark, "probe_inferred_read", lambda: [spark.read.parquet(p) for p in paths.values()])
+    assert inferred >= len(paths)
+
+
+@pytest.mark.parametrize("by_uf", [False, True], ids=["flat", "uf_partitioned"])
+def test_declared_read_matches_inferred(spark, cnpj_env, tmp_path, by_uf):
+    """register_raw's declared read has the schema (uf last when the load
+    is partitioned by uf) and the rows of spark.read.parquet's inference."""
+    env, _ = cnpj_env
+    routed = {"estabelecimentos": env["paths"]["estabelecimentos"]}
+    paths = load_raw_parquet(spark, routed, str(tmp_path / "raw"), partition_estab_by_uf=by_uf)
+    register_raw(spark, paths)
+    declared = spark.table("raw_estabelecimentos")
+    inferred = spark.read.parquet(paths["estabelecimentos"])
+    try:
+        assert declared.schema == inferred.schema
+        assert (declared.columns[-1] == "uf") == by_uf
+        assert declared.count() == inferred.count() > 0
+        assert declared.exceptAll(inferred).isEmpty() and inferred.exceptAll(declared).isEmpty()
+    finally:
+        register_raw(spark, env["table_paths"])  # later tests read the module's load
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Class names of every node of an executed plan, AQE stages included."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _plan_nodes(plan.executedPlan())
+    out = [name] + (_plan_nodes(plan.plan()) if name.endswith("QueryStageExec") else [])
+    kids = plan.children()
+    for i in range(kids.size()):
+        out += _plan_nodes(kids.apply(i))
+    return out
+
+
+def test_run_flagship_broadcasts_every_join(spark, cnpj_env):
+    """run_flagship has QUERY_FINAL's 20 columns, and its executed plan is
+    four broadcast hash joins with no shuffle."""
+    df = run_flagship(spark)
+    assert df.columns == run_flagship_sql(spark).columns and len(df.columns) == 20
+    df.collect()
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+    assert nodes.count("BroadcastHashJoinExec") == 4, nodes
+    assert "ShuffleExchangeExec" not in nodes, nodes
+
+
+def test_run_flagship_sql_is_query_final_plus_one_hint():
+    assert QUERY_FINAL_BROADCAST.count("/*+") == 1
+    assert QUERY_FINAL_BROADCAST.replace(f" {BROADCAST_HINT}", "", 1) == QUERY_FINAL
+
+
+def test_merge_failure_leaves_no_file(tmp_path):
+    """A part that cannot be copied (a directory) makes the merge raise and
+    leave neither the final file nor its temp file."""
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    (parts / "part-00000.csv").write_bytes(b"a;b\n1;2\n")
+    (parts / "part-00001.csv").mkdir()
+    final = tmp_path / "final.csv"
+    with pytest.raises(IsADirectoryError):
+        merge_single_file(str(parts), str(final))
+    assert not final.exists()
+    assert not (tmp_path / "final.csv.tmp").exists()
 
 
 def test_load_failure_names_table_and_keeps_written(spark, cnpj_env, tmp_path):

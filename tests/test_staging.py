@@ -48,6 +48,27 @@ def test_stager_builds_once(spark, tmp_path):
         del staging.REGISTRY["test_builds_once"]
 
 
+def test_stager_counts_hits_and_rebuilds(spark, tmp_path):
+    """Two calls are one build and one hit; a rewritten input file is one
+    more build."""
+    fixture = tmp_path / "fixture.csv"
+    fixture.write_text("a\n")
+
+    @staging.staged("test_hits")
+    def stager(spark, path):
+        return os.path.getsize(path)
+
+    try:
+        stager(spark, str(fixture))
+        stager(spark, str(fixture))
+        assert (stager.builds, stager.hits) == (1, 1)
+        fixture.write_text("a\nb\n")
+        assert stager(spark, str(fixture)) == 4
+        assert (stager.builds, stager.hits) == (2, 1)
+    finally:
+        del staging.REGISTRY["test_hits"]
+
+
 def test_cnpj_views_follow_size_sequence(spark):
     """A→B→A re-points the session's raw views at A's load."""
     a, b = "staging_test/sf0.001", "staging_test/sf0.01"
