@@ -5,9 +5,11 @@ registry.QUERIES; __spark_entry__.py re-exports that dict as the driver
 contract.
 """
 
+from collections.abc import Collection, Mapping
+
 from etl_cnpjs_spark.plans.registry import QUERIES, QuerySpec, register  # noqa: F401
 
-# Import order == SURVEY.md §2 inventory order; each import populates QUERIES.
+# Each import populates QUERIES; presentation_order below sets the final order.
 from etl_cnpjs_spark.plans import relational  # noqa: E402,F401
 from etl_cnpjs_spark.plans import sinks  # noqa: E402,F401
 from etl_cnpjs_spark.plans import functions  # noqa: E402,F401
@@ -39,72 +41,17 @@ from etl_cnpjs_spark.plans import layout  # noqa: E402,F401
 from etl_cnpjs_spark.plans import cnpj_parity  # noqa: E402,F401
 
 # ---------------------------------------------------------------------------
-# Registry presentation order — COMPUTED from shipped driver evidence.
+# Registry presentation order — computed from shipped driver evidence.
 #
-# The round driver's CORRECTNESS harness verifies a bounded prefix of
-# queries() in registration order (~50 keys per round). Registration
-# order is a presentation concern, so reorder the dict here from the
-# CORRECTNESS_r*.json files the driver itself ships back into the repo:
-# keys that already have a full-green row (rows+schema+hash) rotate to
-# the back; keys with no green row rotate to the front, highest-value
-# families first, so every round's window reaches evidence-less keys.
-# Semantics of every plan are unchanged.
+# The external driver hashes a bounded prefix of queries() (~50 keys) against
+# its DuckDB oracle each round, so the order decides which keys get verified.
+# One rule sets it: sort by (bucket, latest green round, key name), with
+# buckets 0 flagship, 1 oracle-bearing with no green row, 2 never-seen
+# rows-only, 3 green, 4 already-seen rows-only. Unverified keys lead, green
+# keys re-confirm stalest evidence first, and the order does not depend on
+# which module registered a key or in what order. Plan semantics are
+# unchanged.
 # ---------------------------------------------------------------------------
-
-# Within the no-green-row set, verify these first (capstone composites,
-# keys whose oracle was newly added, and the post-freeze round-2 tier the
-# r2 verdict called out); everything else follows registration order.
-_FRONT_HINT = [
-    # oracles added in round 3 — previously rows-only, must re-verify
-    "cnpj_flagship",
-    "dedup_simhash",
-    # capstone composites / iterative
-    "corpus_training_set",
-    "dedup_stopshingle",
-    "cdc_apply",
-    "graph_pagerank",
-    "sql_recursive_closure",
-    # TPC-H additions
-    "tpch_q1",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q15",
-    # streaming / events
-    "stream_dedup",
-    "events_funnel",
-    "events_anomaly",
-    "events_resample",
-    "events_ohlc",
-    "events_streaks",
-    # corpus / text
-    "sample_weighted_mix",
-    "doc_pack_sequences",
-    "text_decontaminate",
-    "text_ngram_freq",
-    # joins / scans / layout
-    "join_asof_tolerance",
-    "join_cross",
-    "join_full",
-    "join_null_safe",
-    "scan_orc",
-    "scan_merge_schema",
-    "scan_csv_permissive",
-    "scan_binaryfile",
-    # embeddings / multimodal
-    "embedding_normalize",
-    "mm_decode_wav",
-    # windows / aggs / sampling
-    "window_percentiles",
-    "window_topk_group",
-    "window_range_frame",
-    "agg_approx_topk",
-    "agg_skew_kurtosis",
-    "agg_grouping_sets",
-    "sample_stratified",
-    "sample_hash",
-    "fn_try_arith",
-    "fn_xml",
-]
 
 
 def _driver_evidence() -> tuple[dict[str, int], set[str]]:
@@ -141,144 +88,28 @@ def _driver_evidence() -> tuple[dict[str, int], set[str]]:
     return green, seen
 
 
-# Keys ADDED in round 3 (surface growth is otherwise frozen per the r2
-# verdict): they queue BEHIND every pre-existing evidence-less key so
-# they displace nothing from the rotation plan — the driver window
-# reaches them once the backlog clears.
-_ADDED_R3 = [
-    "tpch_q2",
-    "tpch_q9",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q19",
-    "tpch_q20",
-    "tpch_q21",
-    "text_lm_score",
-    "text_dup_span_frac",
-    "mm_audio_features",
-    "join_interval_overlap",
-    "stream_join",
-    "cdc_scd2",
-    "dedup_url_canonical",
-    "mm_resize",
-    "embedding_gram",
-    "dq_check",
-    "text_sentiment",
-    "stream_stateful_totals",
-]
-
-# Keys ADDED in round 5 (the r4 verdict's "unfreeze the surface" item):
-# they queue behind tpch_q2 — the one unverified pre-existing key — and
-# ahead of green re-confirmations, so the r5 driver window lands
-# tpch_q2's fix first, then first-ever evidence for these, then rotates
-# the stalest green rows.
-_ADDED_R5 = [
-    "stream_interval_join",
-    "join_point_in_interval",
-    "cdc_snapshot_at",
-    "text_quality_classifier",
-    "dedup_minhash_persist",
-    "graph_label_propagation",
-    "agg_countmin",
-    "text_perplexity_bucket",
-    "mm_decode_bmp",
-    "agg_countmin_heavy",
-    "dedup_containment",
-    "sample_reservoir",
-    "events_rolling_distinct",
-    "agg_countmin_merge",
-    "graph_triangle_count",
-    "dedup_containment_capped",
-    "agg_linreg",
-    "events_downsample_bucket",
-    "graph_common_neighbors",
-    "corpus_dedup_sweep",
-    "agg_corr_matrix",
-    "join_asof_nearest",
-    "events_gap_detect",
-    "agg_diversity",
-    "events_forecast_eval",
-    "fn_collation",
-    "set_except_all",
-    "set_intersect_all",
-    "events_markov_transitions",
-    "events_interpolate_linear",
-    "scan_xml",
-    "sample_temperature_mix",
-    "events_attribution",
-    "agg_cooccurrence",
-    "dq_drift",
-    "join_spatial_grid",
-    "graph_jaccard",
-    "events_anomaly_mad",
-    "events_survival_hazard",
-    "join_spatial_knn",
-    "mm_image_dedup",
-    "events_cohort_matrix",
-    "agg_rfm",
-    "events_ab_lift",
-    "agg_decay_sum",
-    "stream_topk",
-    "sample_negative",
-    "mm_audio_vad",
-]
-
-
-def _reorder() -> None:
-    missing = [k for k in [*_FRONT_HINT, *_ADDED_R3, *_ADDED_R5] if k not in QUERIES]
-    assert not missing, f"priority lists name unknown keys: {missing}"
-    green, seen = _driver_evidence()
+def presentation_order(
+    specs: Mapping[str, QuerySpec], green: Mapping[str, int], seen: Collection[str]
+) -> list[str]:
+    """Keys of `specs` in presentation order. `green` maps key -> latest
+    round with a full rows+schema+hash pass; `seen` holds every key with
+    any driver row."""
 
     def bucket(k: str) -> int:
         if k == "flagship":
-            return 0  # headline/smoke key stays first
+            return 0
         if k in green:
-            return 3  # evidence exists — safe at the back
-        if k in seen and QUERIES[k].oracle is None:
-            return 4  # rows-only row exists and no oracle: re-run adds nothing
-        if QUERIES[k].oracle is not None:
-            return 1  # no green row, oracle-bearing: the window must see these
-        return 2  # no row at all, rows-only check still beats nothing
+            return 3
+        if specs[k].oracle is None:
+            return 4 if k in seen else 2
+        return 1
 
-    def added_tier(k: str) -> int:
-        # newer additions never displace older unverified keys: within a
-        # bucket, pre-freeze backlog (0) < round-3 additions (1) <
-        # round-5 additions (2). After r4 the only unverified R3 key is
-        # tpch_q2 (its first driver row failed), so it leads the window
-        # ahead of every R5 key — the r4 verdict's item #4 ordering.
-        if k in _ADDED_R5:
-            return 2
-        if k in _ADDED_R3:
-            return 1
-        return 0
-
-    hint_rank = {k: i for i, k in enumerate(_FRONT_HINT)}
-    reg_rank = {k: i for i, k in enumerate(QUERIES)}
-    ordered_keys = sorted(
-        QUERIES,
-        key=lambda k: (
-            bucket(k),
-            # tiers exist to order UNVERIFIED keys; once a key is
-            # driver-green only evidence age matters (stalest first) —
-            # a tier-0 key re-greened in r6 must NOT outrank an R3 key
-            # whose latest green row is r4 (r6 verdict, finding #1)
-            0 if k in green else added_tier(k),
-            # within the green bucket: stalest evidence first, so driver
-            # freshness doesn't decay as the surface grows (~60 keys'
-            # only green row is r1); 0 for non-green keys
-            green.get(k, 0),
-            hint_rank.get(k, len(_FRONT_HINT)),
-            reg_rank[k],
-        ),
-    )
-    ordered = {k: QUERIES[k] for k in ordered_keys}
-    assert len(ordered) == len(QUERIES)
-    QUERIES.clear()
-    QUERIES.update(ordered)
+    return sorted(specs, key=lambda k: (bucket(k), green.get(k, 0), k))
 
 
-_reorder()
+_ordered = {k: QUERIES[k] for k in presentation_order(QUERIES, *_driver_evidence())}
+QUERIES.clear()
+QUERIES.update(_ordered)
+del _ordered
 
 __all__ = ["QUERIES", "QuerySpec", "register"]

@@ -231,8 +231,8 @@ def agg_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is bit-identical to the int64 form everywhere below the
     boundary (DuckDB's HUGEINT sum widens the same way — the oracle's
     arithmetic is unchanged). The int64 form is the documented fast
-    path (~25% cheaper at sf0.1, tools/stress_r7.py) for deployments
-    that can BOUND per-category sums below 2^63/1e6; past ~1e8
+    path (~25% cheaper at sf0.1, tools/stress_r7.py at fc69e2e) for
+    deployments that can BOUND per-category sums below 2^63/1e6; past ~1e8
     rows/category the right rewrite is the (sum, count) groupBy +
     broadcast-join-back of the same LOO identity — window parallelism
     is capped at |categories| long before arithmetic overflows."""

@@ -413,7 +413,7 @@ def doc_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # amortization knob. 64 is the REGISTERED (oracle-checked) width so
 # sf0.01's 500 docs exercise multiple shards and the stitch arithmetic
 # is inside the hash check; production uses 1e5-1e6 (tools/stress_r8.py
-# measured the tradeoff at 10x: width 64 pays ~6x in per-group
+# at fc69e2e measured the tradeoff at 10x: width 64 pays ~6x in per-group
 # applyInPandas overhead, width 4096 is already flat at 1.25 s — group
 # START cost, not the fold, is what a too-small width buys).
 # Shard derivation domain (r8 ADVICE): shard = Spark `doc_id DIV 64`

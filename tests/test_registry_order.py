@@ -1,16 +1,69 @@
-"""The registry presentation order IS the driver's verification plan:
-the round driver hashes a bounded prefix (~50 keys) of queries() against
-DuckDB each round, so keys with no green CORRECTNESS row from any shipped
-round must sort ahead of keys the scoreboard has already verified, and
-round-3 additions must queue behind the pre-existing backlog (they
-displace nothing). A refactor that silently breaks `_reorder` would cost
-a full round of driver evidence — cheap insurance to pin it.
+"""The registry presentation order IS the driver's verification plan: the
+external driver hashes a bounded prefix (~50 keys) of queries() against
+DuckDB each round. `presentation_order` sets it by one rule, (bucket,
+latest green round, key name), from the shipped CORRECTNESS_r*.json
+evidence. These tests pin the rule on synthetic evidence and on the real
+evidence, and keep hand-kept priority lists and round-stamped tool
+scripts from coming back.
 """
 
 from __future__ import annotations
 
-from etl_cnpjs_spark.plans import QUERIES
-from etl_cnpjs_spark.plans import _ADDED_R3, _ADDED_R5, _driver_evidence
+import ast
+import pathlib
+import random
+import re
+
+from etl_cnpjs_spark.plans import QUERIES, _driver_evidence, presentation_order
+from etl_cnpjs_spark.plans.registry import QuerySpec
+
+REPO = pathlib.Path(__file__).resolve().parents[1]
+
+
+def _spec(name: str, oracle: str | None) -> QuerySpec:
+    return QuerySpec(name=name, fn=lambda spark, sf_dir: None, oracle=oracle)
+
+
+def _assert_unverified_lead_green(order: list[str], green: dict[str, int]) -> None:
+    unverified = [
+        i
+        for i, k in enumerate(order)
+        if k != "flagship" and k not in green and QUERIES[k].oracle is not None
+    ]
+    greens = [i for i, k in enumerate(order) if k != "flagship" and k in green]
+    if unverified and greens:
+        assert max(unverified) < min(greens), (
+            f"driver-green keys occupy window slots ahead of unverified keys: "
+            f"{[order[i] for i in greens if i < max(unverified)][:5]}"
+        )
+
+
+def test_presentation_order_synthetic_evidence():
+    # One key per bucket, green keys from two rounds, name ties inside a
+    # round and inside the non-green oracle bucket.
+    expected = [
+        "flagship",  # bucket 0, even though it is green
+        "failed_oracle",  # bucket 1: seen, oracle, no green row
+        "new_oracle",  # bucket 1: never seen, oracle
+        "new_rows_only",  # bucket 2: never seen, no oracle
+        "green_r2",  # bucket 3, round 2 (stalest first)
+        "green_r4_a",  # bucket 3, round 4, name tie
+        "green_r4_b",
+        "seen_rows_only",  # bucket 4: seen, no oracle
+    ]
+    oracles = {"new_rows_only": None, "seen_rows_only": None}
+    specs = {k: _spec(k, oracles.get(k, "SELECT 1")) for k in reversed(expected)}
+    green = {"flagship": 9, "green_r2": 2, "green_r4_b": 4, "green_r4_a": 4}
+    seen = set(green) | {"failed_oracle", "seen_rows_only"}
+    assert presentation_order(specs, green, seen) == expected
+
+
+def test_order_ignores_registration_order():
+    green, seen = _driver_evidence()
+    items = list(QUERIES.items())
+    for seed in range(3):
+        random.Random(seed).shuffle(items)
+        assert presentation_order(dict(items), green, seen) == list(QUERIES)
 
 
 def test_flagship_first():
@@ -18,50 +71,17 @@ def test_flagship_first():
 
 
 def test_green_keys_sort_behind_unverified_oracle_keys():
-    green, _seen = _driver_evidence()
-    order = list(QUERIES)
-    unverified_oracle = [
-        k for k in order if k != "flagship" and k not in green and QUERIES[k].oracle is not None
-    ]
-    if not unverified_oracle:
-        # Scoreboard fully green (the r4 goal state): there is no backlog
-        # to order ahead of anything — the rule is moot, not violated.
-        # (Asserting non-emptiness here would turn full driver coverage
-        # into a red suite, the exact failure class of the r3 guard.)
-        return
-    last_unverified = max(order.index(k) for k in unverified_oracle)
-    early_green = [k for k in green if k in QUERIES and order.index(k) < last_unverified]
-    assert early_green == ["flagship"] or early_green == [], (
-        f"driver-green keys occupy window slots ahead of unverified keys: {early_green[:5]}"
-    )
-
-
-def test_additions_queue_behind_older_backlog():
-    """Each addition wave queues behind every OLDER unverified key:
-    pre-freeze backlog < _ADDED_R3 < _ADDED_R5. (After r4 the only
-    unverified R3 key is tpch_q2 — whose first driver row failed — so it
-    must lead the window ahead of all R5 keys.)"""
-    green, _seen = _driver_evidence()
-    order = list(QUERIES)
-
-    def tier(k: str) -> int:
-        return 2 if k in _ADDED_R5 else 1 if k in _ADDED_R3 else 0
-
-    unverified = [
-        k
-        for k in order
-        if k != "flagship" and k not in green and QUERIES[k].oracle is not None
-    ]
-    for older_tier in (0, 1):
-        older = [k for k in unverified if tier(k) == older_tier]
-        newer = [k for k in unverified if tier(k) > older_tier]
-        if not older or not newer:
-            continue
-        last_older = max(order.index(k) for k in older)
-        early_new = [k for k in newer if order.index(k) < last_older]
-        assert early_new == [], (
-            f"newer additions displace tier-{older_tier} unverified keys: {early_new}"
-        )
+    green, seen = _driver_evidence()
+    _assert_unverified_lead_green(list(QUERIES), green)
+    # The shipped evidence leaves no oracle key unverified, so also drop the
+    # green rows of three freshly verified keys: they must lead the window.
+    dropped = [
+        k for k in QUERIES if k in green and k != "flagship" and QUERIES[k].oracle is not None
+    ][-3:]
+    evidence = {k: r for k, r in green.items() if k not in dropped}
+    order = presentation_order(QUERIES, evidence, seen)
+    assert order[1:4] == sorted(dropped)
+    _assert_unverified_lead_green(order, evidence)
 
 
 def test_window_prefix_is_all_oracle_bearing():
@@ -77,10 +97,34 @@ def test_window_prefix_is_all_oracle_bearing():
 def test_green_bucket_rotates_stalest_evidence_first():
     """Within driver-green keys, re-confirmation order is oldest latest-
     green round first, so evidence freshness doesn't decay as the
-    surface grows (r4 verdict item #4)."""
+    surface grows."""
     green, _seen = _driver_evidence()
     order = list(QUERIES)
     green_in_order = [green[k] for k in order if k in green and k != "flagship"]
     assert green_in_order == sorted(green_in_order), (
         "green keys are not ordered stalest-evidence-first"
     )
+
+
+def test_no_round_stamped_tool_scripts():
+    stamped = sorted(
+        p.name for p in (REPO / "tools").glob("*.py") if re.search(r"_r\d+[a-z]?\.py$", p.name)
+    )
+    assert stamped == [], f"round-stamped tool scripts: {stamped}"
+
+
+def test_registry_order_names_no_keys():
+    # The order comes from evidence alone; a key named as a literal in the
+    # registry package is the start of a hand-kept priority list.
+    tree = ast.parse((REPO / "etl_cnpjs_spark" / "plans" / "__init__.py").read_text())
+    named = sorted(
+        {
+            node.value
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and node.value in QUERIES
+            and node.value != "flagship"
+        }
+    )
+    assert named == [], f"registry keys named in plans/__init__.py: {named}"
