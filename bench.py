@@ -198,7 +198,7 @@ def main() -> None:
     # an 18 s outlier for a key that measures 7-8 s in isolation did
     # exactly that. Two reps bound the damage (lower-of-2) for at most
     # one extra slow-key run.
-    rep_budget = float(os.environ.get("SPARK_GRAFT_BENCH_REP_BUDGET_SEC", "12"))
+    rep_budget = 12.0
     all_reps: dict[str, list[float]] = {}
     failures = 0
     for name in sorted(QUERIES):
@@ -319,8 +319,7 @@ def main() -> None:
     if os.environ.get("SPARK_GRAFT_BENCH_ISOLATED", "1") != "0":
         import statistics
 
-        iso_reps = os.environ.get("SPARK_GRAFT_BENCH_ISOLATED_REPS", "5")
-        iso_procs = int(os.environ.get("SPARK_GRAFT_BENCH_ISOLATED_PROCS", "2"))
+        iso_reps, iso_procs = "5", 2
         for key in (
             "flagship",
             "corpus_curate",

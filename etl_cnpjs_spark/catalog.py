@@ -67,9 +67,9 @@ def table_path(sf_dir: str, name: str) -> str:
 #     off and the win is taken only where the compute justifies it.
 # (b) It fires only when the table's splittable units (row groups summed
 #     across files) cannot feed the session's default parallelism AND the
-#     table is big enough for a shuffle to pay for itself (env-tunable
-#     floor, default 512 KiB). At cluster scale, real tables have many
-#     files × many row groups, the gate is false, and plans are
+#     table is big enough for a shuffle to pay for itself (fixed floor
+#     SCAN_PARALLELIZE_MIN_BYTES, 512 KiB). At cluster scale, real tables
+#     have many files × many row groups, the gate is false, and plans are
 #     byte-identical to the ungated form — input-derived partitioning,
 #     not a local[32] tune.
 #
@@ -101,18 +101,15 @@ def _scan_units(spark: SparkSession, path: str) -> tuple[int, int]:
     return (groups, nbytes)
 
 
-def _scan_parallelize_min_bytes() -> int:
-    return int(os.environ.get("SPARK_GRAFT_SCAN_PARALLELIZE_MIN_BYTES", str(512 * 1024)))
+SCAN_PARALLELIZE_MIN_BYTES = 512 * 1024
 
 
 def maybe_parallelize_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """Round-robin repartition to session parallelism iff the parquet
     layout cannot (row groups < parallelism) and the bytes floor passes."""
-    if os.environ.get("SPARK_GRAFT_SCAN_PARALLELIZE", "1") == "0":
-        return df
     n = spark.sparkContext.defaultParallelism
     groups, nbytes = _scan_units(spark, path)
-    if groups < n and nbytes >= _scan_parallelize_min_bytes():
+    if groups < n and nbytes >= SCAN_PARALLELIZE_MIN_BYTES:
         return df.repartition(n)
     return df
 
@@ -184,10 +181,3 @@ def table(
     if parallel:
         df = maybe_parallelize_scan(spark, df, path)
     return df
-
-
-def register_all(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES) -> None:
-    """Register every catalog table as a temp view for spark.sql plans."""
-    for name in names:
-        if os.path.exists(table_path(sf_dir, name)):
-            table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -81,18 +81,6 @@ def jaccard_pairs(
     )
 
 
-def minhash_signature(shingles_col: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as an array<long>: sig[j] = min over shingles of
-    xxhash64(j, shingle). Computed per-row via transform/array_min — the
-    whole signature costs one pass over the shingle array, no shuffle."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles_col, _seeded_hash(j)))
-            for j in range(num_hashes)
-        ]
-    )
-
-
 def minhash_band_keys(shingles_col: Column, bands: int, rows: int) -> Column:
     """Band keys straight from the shingle array: key[b] = xxhash64(b,
     sig[b·rows], …, sig[b·rows+rows-1]) with sig[j] the j-seeded min-hash.

@@ -527,7 +527,6 @@ def bucket_cosine_pairs(
 
 
 # DuckDB twins (same math, same accumulation order):
-SQL_VEC = "embedding::DOUBLE[]"
 
 
 def sql_cosine(a: str, b: str) -> str:

@@ -2,7 +2,9 @@
 
 Modules register plans via @register(name, oracle=...) into
 registry.QUERIES; __spark_entry__.py re-exports that dict as the driver
-contract.
+contract. Each key lives in the family module its name prefix selects
+(agg_* in agg.py, events_* and cdc_* in events.py, …); the prefix table
+is pinned in tests/test_plan_layout.py.
 """
 
 from collections.abc import Collection, Mapping
@@ -11,33 +13,19 @@ from etl_cnpjs_spark.plans.registry import QUERIES, QuerySpec, register  # noqa:
 
 # Each import populates QUERIES; presentation_order below sets the final order.
 from etl_cnpjs_spark.plans import relational  # noqa: E402,F401
-from etl_cnpjs_spark.plans import sinks  # noqa: E402,F401
-from etl_cnpjs_spark.plans import functions  # noqa: E402,F401
+from etl_cnpjs_spark.plans import agg  # noqa: E402,F401
+from etl_cnpjs_spark.plans import events  # noqa: E402,F401
 from etl_cnpjs_spark.plans import text  # noqa: E402,F401
+from etl_cnpjs_spark.plans import functions  # noqa: E402,F401
 from etl_cnpjs_spark.plans import dedup  # noqa: E402,F401
-from etl_cnpjs_spark.plans import similarity  # noqa: E402,F401
-from etl_cnpjs_spark.plans import multimodal  # noqa: E402,F401
-from etl_cnpjs_spark.plans import streaming  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended2  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended3  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended4  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended5  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended6  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended7  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended8  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended9  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended10  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended11  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended12  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended13  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended14  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended15  # noqa: E402,F401
-from etl_cnpjs_spark.plans import extended16  # noqa: E402,F401
-from etl_cnpjs_spark.plans import tpch  # noqa: E402,F401
 from etl_cnpjs_spark.plans import corpus  # noqa: E402,F401
-from etl_cnpjs_spark.plans import udtf_plans  # noqa: E402,F401
-from etl_cnpjs_spark.plans import layout  # noqa: E402,F401
+from etl_cnpjs_spark.plans import similarity  # noqa: E402,F401
+from etl_cnpjs_spark.plans import graph  # noqa: E402,F401
+from etl_cnpjs_spark.plans import multimodal  # noqa: E402,F401
+from etl_cnpjs_spark.plans import io  # noqa: E402,F401
+from etl_cnpjs_spark.plans import streaming  # noqa: E402,F401
+from etl_cnpjs_spark.plans import tpch  # noqa: E402,F401
+from etl_cnpjs_spark.plans import dq  # noqa: E402,F401
 from etl_cnpjs_spark.plans import cnpj_parity  # noqa: E402,F401
 
 # ---------------------------------------------------------------------------

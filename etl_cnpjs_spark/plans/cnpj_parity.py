@@ -40,6 +40,7 @@ from etl_cnpjs_spark.cnpj.schemas import AFFINITY_KEYS, DIM_COLUMNS, TABLE_COLUM
 from etl_cnpjs_spark.plans.registry import register
 from etl_cnpjs_spark.staging import STAGE_ROOT, disk_stage, session_tmpdir, staged
 
+
 # Fixture volume tracks the requested SF so the bench measures the
 # flagship at real-shaped row counts (sf0.1 ≈ the suggested FIXTURES.md
 # sizes ×100), while driver correctness (sf0.01) stays quick.

@@ -1,5 +1,6 @@
-"""Dedup plan family (north_star): detection → clustering → canonical
-corpus, over `documents`, plus fuzzy record linkage over entity names.
+"""Dedup plan family: detection → clustering → canonical corpus, over
+`documents`, plus record linkage over entity names and embedding-space
+near-duplicates.
 
 Pair detectors — output (i, j, score) for pairs i<j:
 - dedup_ngram_jaccard — exact 3-gram-shingle Jaccard ≥ 0.8 via
@@ -16,6 +17,8 @@ Pair detectors — output (i, j, score) for pairs i<j:
   all-pairs oracle (completeness makes banded ≡ all-pairs).
 - dedup_fuzzy_names — edit-distance linkage with three stacked blocking
   passes (prefix + sorted neighborhood + reversed-key neighborhood).
+- dedup_embedding_* / dedup_semantic — cosine near-duplicates over
+  `embeddings` (exact, LSH-banded, and SemDeDup cluster pruning).
 
 From pairs to a deduplicated corpus:
 - dedup_cluster — connected components over near-dup pairs
@@ -34,7 +37,6 @@ from pyspark.sql import functions as F
 
 from etl_cnpjs_spark.catalog import table
 from etl_cnpjs_spark.functions.text import shingles, tokens
-from etl_cnpjs_spark.operators.graph import connected_components
 from etl_cnpjs_spark.operators.dedup import (
     candidate_pairs,
     exact_jaccard,
@@ -42,8 +44,63 @@ from etl_cnpjs_spark.operators.dedup import (
     minhash_band_keys,
     simhash_signatures,
 )
+from etl_cnpjs_spark.operators.graph import connected_components
+from etl_cnpjs_spark.operators.relational import dedup_keep_latest
+from etl_cnpjs_spark.operators.similarity import (
+    all_pairs_cosine_blocked,
+    embedding_lsh_pairs,
+    sql_cosine,
+)
 from etl_cnpjs_spark.plans.registry import register
+from etl_cnpjs_spark.plans.similarity import (
+    _SQL_ASSIGN_CTES,
+    _SQL_VECS,
+    NEAR_DUP_TAU,
+    SEMANTIC_TAU,
+    _label_centroid_assignment,
+    _vecs,
+)
 from etl_cnpjs_spark.staging import staged
+
+
+# --- dedup (north_star) ----------------------------------------------------
+
+
+@register(
+    "dedup_exact",
+    oracle="""
+    SELECT DISTINCT l_returnflag, l_linestatus, l_shipdate FROM lineitem
+    """,
+    tags=("north_star", "dedup"),
+)
+def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact whole-row dedup = DISTINCT: hash aggregate with map-side
+    partial — one shuffle of the already-reduced keys (north_star)."""
+    from etl_cnpjs_spark.operators.relational import dedup_exact
+
+    return dedup_exact(
+        table(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus", "l_shipdate")
+    )
+
+
+@register(
+    "dedup_keep_latest",
+    oracle="""
+    SELECT user_id, event_id, ts, event_type FROM (
+      SELECT user_id, event_id, ts, event_type,
+             ROW_NUMBER() OVER (PARTITION BY user_id
+                                ORDER BY ts DESC, event_id DESC) AS rn
+      FROM events) t
+    WHERE rn = 1
+    """,
+    tags=("north_star", "dedup"),
+)
+def dedup_keep_latest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Keyed dedup, deterministic survivor = latest event per user
+    (tiebreak on event_id). Single shuffle on the key — no self-join."""
+    ev = table(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type")
+    return dedup_keep_latest(ev, ["user_id"], [F.desc("ts"), F.desc("event_id")])
+
 
 JACCARD_THRESHOLD = 0.8
 
@@ -684,58 +741,6 @@ def dedup_stopshingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.unionByName(verified)
 
 
-# --- text_dup_span_frac ----------------------------------------------------
-
-
-@register(
-    "text_dup_span_frac",
-    oracle=_SQL_SHINGLES
-    + """
-  , e AS (SELECT doc_id, unnest(shingles) AS s FROM sh WHERE len(shingles) > 0),
-  df AS (SELECT doc_id, count(*) OVER (PARTITION BY s) AS df FROM e)
-  SELECT doc_id,
-         CAST(count(*) AS BIGINT)                                   AS n_shingles,
-         CAST(sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT)   AS n_dup,
-         CAST((sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END) * 1000000)
-              // count(*) AS BIGINT)                                AS dup_frac_q6
-  FROM df GROUP BY doc_id
-    """,
-    tags=("north_star", "dedup", "text"),
-)
-def text_dup_span_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document duplicated-text fraction — the Gopher/RefinedWeb
-    repetition-ACROSS-documents gate (text_repetition measures repetition
-    WITHIN a doc): the share of a doc's distinct 3-gram shingles that
-    appear in at least one OTHER document, in parts-per-1e6 (bigint
-    floor-division — engine-portable, no doubles). Boilerplate-heavy and
-    templated pages score high and get dropped/downweighted before
-    near-dup pair detection ever runs, shrinking the posting join's
-    candidate volume at the source.
-
-    Scale shape: corpus-level document frequency is a count window over
-    hash(shingle) — the one posting-grain exchange (same convention as
-    dedup_stopshingle, NOT a groupBy + re-join that would shuffle the
-    postings twice) — followed by the doc-grain aggregate. Reuses the
-    memoized shingle frame the rest of the dedup family shares."""
-    sh = _doc_shingles(spark, sf_dir)
-    e = sh.select("doc_id", F.explode("sh").alias("s"))
-    df = e.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("s")))
-    n_dup = F.sum(F.when(F.col("__df") >= 2, 1).otherwise(0)).cast("bigint")
-    return (
-        df.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            n_dup.alias("n_dup"),
-        )
-        .select(
-            "doc_id",
-            "n_shingles",
-            "n_dup",
-            F.expr("n_dup * 1000000L DIV n_shingles").alias("dup_frac_q6"),
-        )
-    )
-
-
 # --- dedup_url_canonical ---------------------------------------------------
 #
 # The URL is DERIVED deterministically from (doc_id, source) — the
@@ -882,7 +887,7 @@ def dedup_minhash_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output ≡ dedup_incremental — (new_id, corpus_id, jaccard ≥ 0.8) —
     so the from-scratch oracle re-derives it exactly; the key's value is
     proving the persisted-layout path hash-matches the in-memory one."""
-    from etl_cnpjs_spark.plans.layout import write_bucketed
+    from etl_cnpjs_spark.plans.io import write_bucketed
 
     docs = _doc_shingles(spark, sf_dir)
     signed = docs.select(
@@ -1112,3 +1117,267 @@ def dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("__r")
     ).select("__r.*")
     return directed.filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
+
+
+@register(
+    "dedup_embedding_cosine",
+    oracle=f"""
+    WITH n AS ({_SQL_VECS})
+    SELECT a.vec_id AS i, b.vec_id AS j, {sql_cosine("a.v", "b.v")} AS cos_sim
+    FROM n a JOIN n b ON a.vec_id < b.vec_id
+    WHERE {sql_cosine("a.v", "b.v")} >= {NEAR_DUP_TAU}
+    """,
+    tags=("north_star", "similarity", "dedup"),
+)
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding near-dup pairs: cosine ≥ τ over all pairs i<j, via the
+    blocked cross-product + vectorized-numpy scorer
+    (operators/similarity.py::all_pairs_cosine_blocked).
+
+    The row-expression crossJoin form is O(n²) *interpreted* aggregates;
+    blocking keeps the same exact O(n²) arithmetic but runs it as
+    NB(NB+1)/2 bounded Arrow tasks of SIMD numpy — ~25× faster at sf0.1
+    and the layout that survives a cluster (per-task memory is capped by
+    the block size, tasks are embarrassingly parallel). Scores stay
+    bit-identical to the DuckDB oracle (sequential fold, same op order).
+    At 100 TB brute force itself is the wrong shape — this key is the
+    oracle-grade exact baseline; the production path is
+    dedup_embedding_lsh (banded candidates, bucket-local verify), with
+    sim_topk_ivf's centroid bucketing as the ANN alternative. That split
+    is ENFORCED, not advisory: the operator refuses corpora above 50k
+    vectors (ValueError naming the twins; max_rows=None opts back in for
+    deliberate conformance runs on sampled slices), so the baseline
+    cannot be silently misused as a scale path."""
+    n = _vecs(spark, sf_dir)
+    return all_pairs_cosine_blocked(
+        n.select("vec_id", "v"), "vec_id", "v", NEAR_DUP_TAU
+    )
+
+
+@register(
+    "dedup_embedding_lsh",
+    oracle=f"""
+    WITH n AS ({_SQL_VECS})
+    SELECT a.vec_id AS i, b.vec_id AS j, {sql_cosine("a.v", "b.v")} AS cos_sim
+    FROM n a JOIN n b ON a.vec_id < b.vec_id
+    WHERE {sql_cosine("a.v", "b.v")} >= {NEAR_DUP_TAU}
+    """,
+    tags=("north_star", "similarity", "dedup", "lsh"),
+)
+def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding near-dup pairs via hyperplane-LSH banding — the bucketed
+    replacement for dedup_embedding_cosine's all-pairs layout: random-
+    hyperplane sign signatures (Arrow-batched matmul), one band-bucket
+    equi-join for candidates, exact-cosine verify on candidates only.
+    Nothing in the plan materializes the n² pair space, and no verify
+    task collects an unbounded payload: buckets over 1024 members salt
+    into bounded group-pair tasks with exact pair coverage
+    (operators/similarity.py::salted_buckets; planted hot-bucket proof
+    in tests/test_dedup_recall.py::test_lsh_hot_bucket_cap).
+
+    Operating point (32 bands × 2 bits, measured on this corpus): per-pair
+    miss probability at τ=0.4 is (1−0.631²)^32 ≈ 9e-8, and measured recall
+    is 100% at sf0.001/0.01/0.1 — so the key carries the EXACT all-pairs
+    oracle, the same contract dedup_minhash has with exact Jaccard.
+
+    Honesty note, measured: τ=0.4 on this near-orthogonal corpus
+    (background p(bit) ≈ 0.5–0.59 vs true-pair p ≈ 0.63) is the regime
+    where banding cannot also prune — every 100%-recall config keeps
+    ≥94% of pairs as candidates (sweep: r=2..8, B=16..48). LSH pruning
+    becomes real in the production near-dup regime: at τ=0.9 with
+    16 bands × 8 bits the same operator prunes >90% of pairs at full
+    recall (asserted with planted duplicates in
+    tests/test_dedup_recall.py). The operator is the scale path; the τ
+    is this corpus's quirk."""
+    n = _vecs(spark, sf_dir)
+    return embedding_lsh_pairs(
+        n.select("vec_id", "v"), "vec_id", "v", NEAR_DUP_TAU, bands=32, rows=2
+    )
+
+
+_SQL_SEMANTIC = f"""
+    WITH n AS ({_SQL_VECS}),
+    {_SQL_ASSIGN_CTES},
+    dropped AS (
+      SELECT DISTINCT a.vec_id
+      FROM assign a JOIN assign b
+        ON a.cid = b.cid AND b.vec_id < a.vec_id
+      WHERE {sql_cosine("a.v", "b.v")} >= {SEMANTIC_TAU})
+    SELECT a.vec_id, a.cid, (d.vec_id IS NULL) AS kept
+    FROM assign a LEFT JOIN dropped d ON a.vec_id = d.vec_id
+"""
+
+
+@register(
+    "dedup_semantic",
+    oracle=_SQL_SEMANTIC,
+    tags=("north_star", "similarity", "dedup", "semantic"),
+)
+def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup-style semantic deduplication (Abbas et al. 2023, public
+    arXiv:2303.09540 recipe): coarse-cluster the embeddings, compare
+    pairs ONLY within a cluster, and keep one survivor per semantic
+    near-dup set. Concretely: (1) deterministic label-mean centroids +
+    nearest-centroid assignment (_label_centroid_assignment — the same
+    exact-arithmetic quantizer sim_topk_kmeans uses; production swaps
+    in the trained KMeans quantizer, same layout); (2) a bucket-local
+    self-join scores cos(a,b) for pairs in the SAME bucket; (3) a
+    vector is dropped iff a lower-id vector in its bucket is
+    near-duplicate (cos ≥ τ) — the deterministic keep-lowest-id form of
+    SemDeDup's keep-one rule, which both engines can re-derive, making
+    this approximate algorithm fully hash-checkable (like sim_topk_ivf,
+    the approximation is in the algorithm the oracle re-runs, not the
+    arithmetic).
+
+    Scale shape — the reason SemDeDup exists: the pair space is
+    Σ_buckets (n_b choose 2), ~n²/k for balanced buckets, instead of
+    the global n²; assignment is a broadcast-centroid map pass, and the
+    intra-bucket verify runs as the SAME salted numpy bucket scorer
+    dedup_embedding_lsh verifies with (bucket_cosine_pairs — one
+    bucket-keyed shuffle, hot clusters salt into bounded group-pair
+    tasks, scores bit-identical to the SQL fold; measured ~4× over the
+    row-expression self-join at sf0.1). k grows with the corpus so
+    bucket size stays bounded; cross-bucket near-dups are the accepted
+    miss (the paper's trade), measured against the exact cosine family
+    in tests/test_dedup_recall.py."""
+    from etl_cnpjs_spark.operators.similarity import bucket_cosine_pairs
+
+    n = _vecs(spark, sf_dir)
+    _, assign = _label_centroid_assignment(n)
+    a = assign.localCheckpoint()  # two consumers: pair scorer + rebuild
+    pairs = bucket_cosine_pairs(a, "cid", "vec_id", "v", SEMANTIC_TAU)
+    dropped = pairs.select(F.col("j").alias("vec_id")).distinct()
+    return a.join(dropped.withColumn("d", F.lit(1)), "vec_id", "left").select(
+        "vec_id", "cid", F.col("d").isNull().alias("kept")
+    )
+
+
+# --- dedup_minhash_estimate --------------------------------------------------
+#
+# MinHash as an ESTIMATOR, made engine-exact: per near-dup pair, the
+# 16-permutation signature agreement (each permutation = min over
+# shingles of an md5-keyed hash, the conv(hex,16,10) idiom DuckDB
+# computes identically) BESIDE the exact Jaccard — the report that
+# justifies a sketch operating point empirically instead of by the
+# (1-j^r)^b formula alone. The detection keys (dedup_minhash,
+# dedup_incremental) prove banding finds the pairs; this key proves
+# the SIGNATURE VALUES themselves are deterministic and portable.
+
+_MH_PERMS = 16
+
+
+def _mh_est_oracle() -> str:
+    from etl_cnpjs_spark.plans.dedup import _SQL_SHINGLES, JACCARD_THRESHOLD
+
+    mins = ",\n             ".join(
+        f"min(('0x' || substr(md5('{p}|' || s), 1, 15))::BIGINT) AS mh{p}"
+        for p in range(_MH_PERMS)
+    )
+    agree = " + ".join(
+        f"CASE WHEN a.mh{p} = b.mh{p} THEN 1 ELSE 0 END"
+        for p in range(_MH_PERMS)
+    )
+    return (
+        _SQL_SHINGLES
+        + f"""
+  , ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh WHERE len(shingles) > 0),
+  sz AS (SELECT doc_id, len(shingles) AS n FROM sh),
+  p0 AS (SELECT a.doc_id AS i, b.doc_id AS j, count(*) AS inter
+         FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+  pairs AS (SELECT i, j,
+                   CAST(inter * 1000000 // (s1.n + s2.n - inter) AS BIGINT)
+                     AS exact_ppm
+            FROM p0 JOIN sz s1 ON p0.i = s1.doc_id
+                    JOIN sz s2 ON p0.j = s2.doc_id
+            WHERE inter / (s1.n + s2.n - inter) >= {JACCARD_THRESHOLD}),
+  mh AS (SELECT doc_id,
+             {mins}
+         FROM ex GROUP BY doc_id)
+  SELECT p.i, p.j, p.exact_ppm,
+         CAST({agree} AS BIGINT) AS agree,
+         CAST(({agree}) * 1000000 // {_MH_PERMS} AS BIGINT) AS est_ppm
+  FROM pairs p JOIN mh a ON p.i = a.doc_id JOIN mh b ON p.j = b.doc_id
+"""
+    )
+
+
+@register(
+    "dedup_minhash_estimate",
+    oracle=_mh_est_oracle(),
+    tags=("dedup", "north_star", "similarity"),
+)
+def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per near-dup pair: exact Jaccard (ppm) beside the 16-permutation
+    MinHash agreement estimate (ppm).
+
+    Shapes: ONE posting explode feeds a 16-min groupBy (signatures in
+    a single doc-keyed pass — adding permutations widens the aggregate,
+    never adds exchanges); the pair frame reuses the memoized exact
+    pairs; two broadcast-sized joins attach signatures. The md5→
+    conv(hex,16,10) hash is the r3 idiom both engines compute bit-
+    identically, so E[agreement] = J is not just a theorem here — the
+    estimator's exact output is hash-pinned. At corpus scale the same
+    signature table is what dedup_minhash_persist buckets and stores."""
+    from etl_cnpjs_spark.plans.dedup import (
+        JACCARD_THRESHOLD,
+        _doc_shingles,
+        _exact_pairs,
+    )
+
+    sh = _doc_shingles(spark, sf_dir)
+    ex = sh.filter(F.size("sh") > 0).select(
+        "doc_id", F.explode("sh").alias("s")
+    )
+    mins = [
+        F.min(
+            F.expr(
+                f"cast(conv(substring(md5(concat('{p}|', s)), 1, 15), 16, 10)"
+                " as bigint)"
+            )
+        ).alias(f"mh{p}")
+        for p in range(_MH_PERMS)
+    ]
+    mh = ex.groupBy("doc_id").agg(*mins)
+
+    pairs = _exact_pairs(spark, sf_dir)
+    sz = sh.select("doc_id", F.size("sh").alias("n"))
+    shd = sh.select("doc_id", "sh")
+    p = (
+        pairs.select("i", "j")
+        .join(shd.select(F.col("doc_id").alias("i"), F.col("sh").alias("sha")), "i")
+        .join(shd.select(F.col("doc_id").alias("j"), F.col("sh").alias("shb")), "j")
+    )
+    inter = F.size(F.array_intersect("sha", "shb"))
+    union = F.size("sha") + F.size("shb") - inter
+    p = p.select(
+        "i",
+        "j",
+        F.expr(
+            "CAST(size(array_intersect(sha, shb)) * 1000000 DIV "
+            "(size(sha) + size(shb) - size(array_intersect(sha, shb))) "
+            "AS BIGINT)"
+        ).alias("exact_ppm"),
+    )
+    a = mh.select(
+        F.col("doc_id").alias("i"), *[F.col(f"mh{q}").alias(f"a{q}") for q in range(_MH_PERMS)]
+    )
+    b = mh.select(
+        F.col("doc_id").alias("j"), *[F.col(f"mh{q}").alias(f"b{q}") for q in range(_MH_PERMS)]
+    )
+    agree_expr = sum(
+        F.when(F.col(f"a{q}") == F.col(f"b{q}"), 1).otherwise(0)
+        for q in range(_MH_PERMS)
+    )
+    return (
+        p.join(a, "i")
+        .join(b, "j")
+        .select(
+            "i",
+            "j",
+            "exact_ppm",
+            agree_expr.cast("bigint").alias("agree"),
+            (agree_expr * 1000000 / _MH_PERMS)
+            .cast("bigint")
+            .alias("est_ppm"),
+        )
+    )

@@ -1,4 +1,9 @@
-"""Similarity-search plans over `embeddings` (north_star).
+"""Similarity-search plans over `embeddings` (sim_*) and embedding
+transforms (embedding_*): exact and filtered top-k, k-NN joins, IVF
+probing with label-seeded and trained coarse quantizers, recall
+reports, late-interaction (MaxSim) scoring, random projections,
+normalization, centroids, Gram matrices, scalar and product
+quantization.
 
 All scores are exact doubles, bit-identical to DuckDB (see
 operators/similarity.py) — every plan here carries a full oracle,
@@ -8,14 +13,15 @@ including the IVF approximate path (the approximation is in the
 
 from __future__ import annotations
 
+import random as _random
+
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from etl_cnpjs_spark.catalog import table
 from etl_cnpjs_spark.operators.similarity import (
-    all_pairs_cosine_blocked,
     cosine,
-    embedding_lsh_pairs,
     gram_upper_map_in_pandas,
     knn_join_blocked,
     sql_cosine,
@@ -23,6 +29,7 @@ from etl_cnpjs_spark.operators.similarity import (
 )
 from etl_cnpjs_spark.plans.registry import quantize, register
 from etl_cnpjs_spark.staging import staged
+
 
 TOP_K = 10
 NEAR_DUP_TAU = 0.4  # this corpus's embeddings are near-orthogonal (max
@@ -72,82 +79,6 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "label", cosine(F.col("v"), F.col("qv")).alias("cos_sim"))
     )
     return scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(TOP_K)
-
-
-@register(
-    "dedup_embedding_cosine",
-    oracle=f"""
-    WITH n AS ({_SQL_VECS})
-    SELECT a.vec_id AS i, b.vec_id AS j, {sql_cosine("a.v", "b.v")} AS cos_sim
-    FROM n a JOIN n b ON a.vec_id < b.vec_id
-    WHERE {sql_cosine("a.v", "b.v")} >= {NEAR_DUP_TAU}
-    """,
-    tags=("north_star", "similarity", "dedup"),
-)
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs: cosine ≥ τ over all pairs i<j, via the
-    blocked cross-product + vectorized-numpy scorer
-    (operators/similarity.py::all_pairs_cosine_blocked).
-
-    The row-expression crossJoin form is O(n²) *interpreted* aggregates;
-    blocking keeps the same exact O(n²) arithmetic but runs it as
-    NB(NB+1)/2 bounded Arrow tasks of SIMD numpy — ~25× faster at sf0.1
-    and the layout that survives a cluster (per-task memory is capped by
-    the block size, tasks are embarrassingly parallel). Scores stay
-    bit-identical to the DuckDB oracle (sequential fold, same op order).
-    At 100 TB brute force itself is the wrong shape — this key is the
-    oracle-grade exact baseline; the production path is
-    dedup_embedding_lsh (banded candidates, bucket-local verify), with
-    sim_topk_ivf's centroid bucketing as the ANN alternative. That split
-    is ENFORCED, not advisory: the operator refuses corpora above 50k
-    vectors (ValueError naming the twins; max_rows=None opts back in for
-    deliberate conformance runs on sampled slices), so the baseline
-    cannot be silently misused as a scale path."""
-    n = _vecs(spark, sf_dir)
-    return all_pairs_cosine_blocked(
-        n.select("vec_id", "v"), "vec_id", "v", NEAR_DUP_TAU
-    )
-
-
-@register(
-    "dedup_embedding_lsh",
-    oracle=f"""
-    WITH n AS ({_SQL_VECS})
-    SELECT a.vec_id AS i, b.vec_id AS j, {sql_cosine("a.v", "b.v")} AS cos_sim
-    FROM n a JOIN n b ON a.vec_id < b.vec_id
-    WHERE {sql_cosine("a.v", "b.v")} >= {NEAR_DUP_TAU}
-    """,
-    tags=("north_star", "similarity", "dedup", "lsh"),
-)
-def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs via hyperplane-LSH banding — the bucketed
-    replacement for dedup_embedding_cosine's all-pairs layout: random-
-    hyperplane sign signatures (Arrow-batched matmul), one band-bucket
-    equi-join for candidates, exact-cosine verify on candidates only.
-    Nothing in the plan materializes the n² pair space, and no verify
-    task collects an unbounded payload: buckets over 1024 members salt
-    into bounded group-pair tasks with exact pair coverage
-    (operators/similarity.py::salted_buckets; planted hot-bucket proof
-    in tests/test_dedup_recall.py::test_lsh_hot_bucket_cap).
-
-    Operating point (32 bands × 2 bits, measured on this corpus): per-pair
-    miss probability at τ=0.4 is (1−0.631²)^32 ≈ 9e-8, and measured recall
-    is 100% at sf0.001/0.01/0.1 — so the key carries the EXACT all-pairs
-    oracle, the same contract dedup_minhash has with exact Jaccard.
-
-    Honesty note, measured: τ=0.4 on this near-orthogonal corpus
-    (background p(bit) ≈ 0.5–0.59 vs true-pair p ≈ 0.63) is the regime
-    where banding cannot also prune — every 100%-recall config keeps
-    ≥94% of pairs as candidates (sweep: r=2..8, B=16..48). LSH pruning
-    becomes real in the production near-dup regime: at τ=0.9 with
-    16 bands × 8 bits the same operator prunes >90% of pairs at full
-    recall (asserted with planted duplicates in
-    tests/test_dedup_recall.py). The operator is the scale path; the τ
-    is this corpus's quirk."""
-    n = _vecs(spark, sf_dir)
-    return embedding_lsh_pairs(
-        n.select("vec_id", "v"), "vec_id", "v", NEAR_DUP_TAU, bands=32, rows=2
-    )
 
 
 KNN_K = 5
@@ -641,58 +572,567 @@ def embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SEMANTIC_TAU = NEAR_DUP_TAU  # same near-dup threshold as the cosine family
 
-_SQL_SEMANTIC = f"""
-    WITH n AS ({_SQL_VECS}),
-    {_SQL_ASSIGN_CTES},
-    dropped AS (
-      SELECT DISTINCT a.vec_id
-      FROM assign a JOIN assign b
-        ON a.cid = b.cid AND b.vec_id < a.vec_id
-      WHERE {sql_cosine("a.v", "b.v")} >= {SEMANTIC_TAU})
-    SELECT a.vec_id, a.cid, (d.vec_id IS NULL) AS kept
-    FROM assign a LEFT JOIN dropped d ON a.vec_id = d.vec_id
-"""
+
+# --- embedding_normalize ---------------------------------------------------
 
 
 @register(
-    "dedup_semantic",
-    oracle=_SQL_SEMANTIC,
-    tags=("north_star", "similarity", "dedup", "semantic"),
+    "embedding_normalize",
+    oracle="""
+    WITH d AS (SELECT vec_id,
+                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+               FROM embeddings),
+    n AS (SELECT vec_id, v,
+                 CASE WHEN len(v) > 0 THEN
+                   sqrt(list_aggregate(list_transform(v, x -> x * x), 'sum'))
+                 END AS l2_norm
+          FROM d)
+    SELECT vec_id,
+           floor(l2_norm * 1e6 + 0.5) / 1e6                         AS l2_norm,
+           CAST(len(v) AS INT)                                      AS dim,
+           floor(CASE WHEN l2_norm > 0 THEN v[1] / l2_norm END
+                 * 1e6 + 0.5) / 1e6                                     AS unit0,
+           floor(CASE WHEN len(v) > 0 THEN list_aggregate(v, 'sum') / len(v) END
+                 * 1e6 + 0.5) / 1e6                                 AS mean_c,
+           floor(CASE WHEN len(v) > 0 THEN
+                   list_aggregate(list_transform(v, x -> abs(x)), 'max')
+                 END * 1e6 + 0.5) / 1e6                             AS max_abs
+    FROM n
+    """,
+    tags=("similarity", "embedding", "fn"),
 )
-def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023, public
-    arXiv:2303.09540 recipe): coarse-cluster the embeddings, compare
-    pairs ONLY within a cluster, and keep one survivor per semantic
-    near-dup set. Concretely: (1) deterministic label-mean centroids +
-    nearest-centroid assignment (_label_centroid_assignment — the same
-    exact-arithmetic quantizer sim_topk_kmeans uses; production swaps
-    in the trained KMeans quantizer, same layout); (2) a bucket-local
-    self-join scores cos(a,b) for pairs in the SAME bucket; (3) a
-    vector is dropped iff a lower-id vector in its bucket is
-    near-duplicate (cos ≥ τ) — the deterministic keep-lowest-id form of
-    SemDeDup's keep-one rule, which both engines can re-derive, making
-    this approximate algorithm fully hash-checkable (like sim_topk_ivf,
-    the approximation is in the algorithm the oracle re-runs, not the
-    arithmetic).
+def embedding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding hygiene pass: L2 norm, dimension check, first unit
+    component, mean component, max |x| — the validation profile run
+    before any similarity work (catching zero vectors, wrong dims,
+    unnormalized batches). Degenerate inputs stay visible AND oracle-
+    equivalent: a zero-length embedding reports dim=0 with NULL
+    norm/moments on both sides (Spark's fold would return the initial
+    0.0 where DuckDB's list_aggregate returns NULL — both sides guard
+    on emptiness explicitly instead). All higher-order array
+    expressions folding
+    left-to-right in both engines over double-promoted floats, with a
+    round(…,6) boundary as the float-path convention
+    (plans/registry.py). No UDF, no shuffle — the scan is the cost, and
+    at 100 TB this runs as a side-output of whatever scan touches the
+    embeddings anyway."""
+    e = table(spark, sf_dir, "embeddings")
+    d = e.select(
+        "vec_id", F.expr("transform(embedding, x -> cast(x as double))").alias("v")
+    )
+    nonempty = F.size("v") > 0
+    n = d.withColumn(
+        "norm_raw",
+        F.when(
+            nonempty,
+            F.sqrt(
+                F.expr(
+                    "aggregate(transform(v, x -> x * x), cast(0 as double), (a, x) -> a + x)"
+                )
+            ),
+        ),
+    )
+    return n.select(
+        "vec_id",
+        quantize(F.col("norm_raw")).alias("l2_norm"),
+        F.size("v").alias("dim"),
+        quantize(
+            F.when(F.col("norm_raw") > 0, F.expr("v[0]") / F.col("norm_raw"))
+        ).alias("unit0"),
+        quantize(
+            F.when(
+                nonempty,
+                F.expr("aggregate(v, cast(0 as double), (a, x) -> a + x)")
+                / F.size("v"),
+            )
+        ).alias("mean_c"),
+        quantize(
+            F.when(
+                nonempty,
+                F.expr(
+                    "aggregate(transform(v, x -> abs(x)), cast(0 as double), (a, x) -> greatest(a, x))"
+                ),
+            )
+        ).alias("max_abs"),
+    )
 
-    Scale shape — the reason SemDeDup exists: the pair space is
-    Σ_buckets (n_b choose 2), ~n²/k for balanced buckets, instead of
-    the global n²; assignment is a broadcast-centroid map pass, and the
-    intra-bucket verify runs as the SAME salted numpy bucket scorer
-    dedup_embedding_lsh verifies with (bucket_cosine_pairs — one
-    bucket-keyed shuffle, hot clusters salt into bounded group-pair
-    tasks, scores bit-identical to the SQL fold; measured ~4× over the
-    row-expression self-join at sf0.1). k grows with the corpus so
-    bucket size stays bounded; cross-bucket near-dups are the accepted
-    miss (the paper's trade), measured against the exact cosine family
-    in tests/test_dedup_recall.py."""
-    from etl_cnpjs_spark.operators.similarity import bucket_cosine_pairs
+
+# --- sim_maxsim -------------------------------------------------------------
+#
+# ColBERT-style late interaction: a "document" is a BAG of token
+# vectors, and score(Q, D) = Σ_{q∈Q} max_{d∈D} cos(q, d) — the
+# retrieval scoring model between single-vector ANN (sim_topk) and
+# full cross-attention. Token bags are modeled on the embeddings
+# table: vec_id DIV {G} groups 5 consecutive vectors into one bag;
+# bag 0 is the query.
+
+_MAXSIM_GROUP = 5
+_MAXSIM_TOPK = 10
+
+
+_MAXSIM_SQL = f"""
+    WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    g AS (SELECT vec_id, vec_id // {_MAXSIM_GROUP} AS gid,
+                 vec_id % {_MAXSIM_GROUP} AS tix, v FROM n),
+    q AS (SELECT tix AS qix, v AS qv FROM g WHERE gid = 0),
+    s AS (
+      SELECT g.gid, q.qix, max({sql_cosine('g.v', 'q.qv')}) AS m
+      FROM g, q WHERE g.gid <> 0
+      GROUP BY g.gid, q.qix),
+    p AS (
+      SELECT gid,
+             max(CASE WHEN qix = 0 THEN m END) AS m0,
+             max(CASE WHEN qix = 1 THEN m END) AS m1,
+             max(CASE WHEN qix = 2 THEN m END) AS m2,
+             max(CASE WHEN qix = 3 THEN m END) AS m3,
+             max(CASE WHEN qix = 4 THEN m END) AS m4
+      FROM s GROUP BY gid)
+    SELECT CAST(gid AS BIGINT) AS gid,
+           m0 + m1 + m2 + m3 + m4 AS maxsim
+    FROM p
+    ORDER BY maxsim DESC, gid
+    LIMIT {_MAXSIM_TOPK}
+    """
+
+
+@register("sim_maxsim", oracle=_MAXSIM_SQL, tags=("similarity", "north_star", "ml"))
+def sim_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Late-interaction MaxSim top-k over token-bag groups.
+
+    Shapes: the query bag (G rows) BROADCASTS against the token scan;
+    per-(bag, query-token) maxima partial-aggregate map-side; the Σ
+    over query tokens is a fixed-order column addition on the
+    bag-sized frame (row-aggregating doubles would be partition-order
+    dependent — the one wrong way to write MaxSim). TakeOrdered heap
+    for the top-k. At 100 TB: token vectors never shuffle — only
+    (gid, qix, max) partials; this is the documented scale shape of
+    late-interaction scoring (score-then-prune, no index)."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id", vec_double(F.col("embedding")).alias("v")
+    )
+    g = e.select(
+        F.expr(f"vec_id DIV {_MAXSIM_GROUP}").alias("gid"),
+        (F.col("vec_id") % _MAXSIM_GROUP).alias("tix"),
+        "v",
+    )
+    q = g.filter(F.col("gid") == 0).select(
+        F.col("tix").alias("qix"), F.col("v").alias("qv")
+    )
+    s = (
+        g.filter(F.col("gid") != 0)
+        .crossJoin(F.broadcast(q))
+        .groupBy("gid", "qix")
+        .agg(F.max(cosine(F.col("v"), F.col("qv"))).alias("m"))
+    )
+    p = s.groupBy("gid").agg(
+        *[
+            F.max(F.when(F.col("qix") == i, F.col("m"))).alias(f"m{i}")
+            for i in range(_MAXSIM_GROUP)
+        ]
+    )
+    maxsim = F.col("m0") + F.col("m1") + F.col("m2") + F.col("m3") + F.col("m4")
+    return (
+        p.select(F.col("gid").cast("bigint").alias("gid"), maxsim.alias("maxsim"))
+        .orderBy(F.desc("maxsim"), F.asc("gid"))
+        .limit(_MAXSIM_TOPK)
+    )
+
+
+# --- sim_topk_filtered ------------------------------------------------------
+#
+# FILTERED vector search: top-k cosine neighbors of the query vector
+# WITHIN each label class (the "metadata-filtered ANN" every modern
+# vector store names as a first-class feature — filter-then-score, not
+# score-then-filter, so the predicate prunes the scan before any
+# distance math). Composes the similarity family's exact scorer with a
+# per-label rank window.
+
+_FILTERED_TOPK = 3
+
+
+def _filtered_sql() -> str:
+    from etl_cnpjs_spark.operators.similarity import sql_cosine
+
+    return f"""
+    WITH n AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+    q AS (SELECT v AS qv FROM n ORDER BY vec_id LIMIT 1),
+    s AS (
+      SELECT n.vec_id, n.label, {sql_cosine('n.v', 'q.qv')} AS cos_sim
+      FROM n, q
+      WHERE n.vec_id <> (SELECT min(vec_id) FROM n)),
+    r AS (
+      SELECT vec_id, label, cos_sim,
+             row_number() OVER (PARTITION BY label
+                                ORDER BY cos_sim DESC, vec_id) AS rk
+      FROM s)
+    SELECT label, CAST(rk AS BIGINT) AS rk, vec_id, cos_sim
+    FROM r WHERE rk <= {_FILTERED_TOPK}
+    """
+
+
+@register(
+    "sim_topk_filtered",
+    oracle=_filtered_sql(),
+    tags=("similarity", "north_star", "ml"),
+)
+def sim_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label top-k cosine neighbors of the corpus's first vector.
+
+    Shapes: the 1-row query broadcasts; scoring is scan-side (the
+    label predicate — here the partition itself — prunes BEFORE
+    distance math, the filtered-ANN contract); the per-label top-k is
+    one rank window over the scored frame. At 100 TB with a selective
+    label filter this is a fraction-of-scan scorer + a tiny window —
+    the production argument for storing label as a partition column.
+    Determinism: cosine is the sequential-fold dot (bit-exact), rank
+    ties break on vec_id."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", vec_double(F.col("embedding")).alias("v")
+    )
+    q = (
+        e.orderBy("vec_id")
+        .limit(1)
+        .select(F.col("v").alias("qv"), F.col("vec_id").alias("qid"))
+    )
+    s = (
+        e.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select("vec_id", "label", cosine(F.col("v"), F.col("qv")).alias("cos_sim"))
+    )
+    from pyspark.sql.window import Window as W
+
+    r = s.withColumn(
+        "rk",
+        F.row_number().over(
+            W.partitionBy("label").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+        ),
+    )
+    return r.filter(F.col("rk") <= _FILTERED_TOPK).select(
+        "label", F.col("rk").cast("bigint").alias("rk"), "vec_id", "cos_sim"
+    )
+
+
+# --- sim_random_projection --------------------------------------------------
+#
+# Johnson–Lindenstrauss sign projection: embed 64-d vectors into 8
+# dims via a FIXED ±1 matrix (seeded, embedded as literals in both
+# plans — no runtime randomness), scaled by 1/√8. The
+# dimensionality-reduction front end for sketch-space ANN (SimHash is
+# this matrix's sign bits; here the projected coordinates themselves
+# are the output). Dot products reuse the sequential-fold /
+# list_dot_product pair every cosine key already proved
+# engine-identical at 1e-6 quantization.
+
+
+_RP_DIMS = 8
+_RP_IN = 64
+_rp_rng = _random.Random(20260815)
+_RP_SIGNS = [
+    [float(_rp_rng.choice((-1, 1))) for _ in range(_RP_IN)] for _ in range(_RP_DIMS)
+]
+_RP_SCALE = 0.3535533905932738  # 1/sqrt(8), fixed literal both engines
+
+
+def _rp_oracle() -> str:
+    cols = []
+    for k, row in enumerate(_RP_SIGNS):
+        lit = "[" + ", ".join(str(s) for s in row) + "]::DOUBLE[]"
+        cols.append(
+            f"floor(list_dot_product(embedding::DOUBLE[], {lit})"
+            f" * {_RP_SCALE} * 1e6 + 0.5) / 1e6 AS proj_{k}"
+        )
+    return "SELECT vec_id, " + ", ".join(cols) + " FROM embeddings"
+
+
+@register("sim_random_projection", oracle=_rp_oracle(), tags=("similarity", "ml"))
+def sim_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JL ±1 sign projection 64-d → 8-d (quantized doubles).
+
+    Shapes: pure per-row map — zero shuffles; the 8×64 matrix lives in
+    the plan as literals (closed over at codegen, broadcast-free). The
+    fold/list_dot_product determinism pair is the one
+    operators/similarity.py established. At 100 TB this is the
+    cheapest pre-LSH compaction: 8 doubles/row downstream instead of
+    64 floats."""
+    from etl_cnpjs_spark.operators.similarity import dot, vec_double
+
+    e = table(spark, sf_dir, "embeddings")
+    v = vec_double(F.col("embedding"))
+    out = [F.col("vec_id")]
+    for k, row in enumerate(_RP_SIGNS):
+        signs = F.array(*[F.lit(s) for s in row])
+        out.append(
+            (
+                F.floor(dot(v, signs) * _RP_SCALE * 1e6 + 0.5) / 1e6
+            ).alias(f"proj_{k}")
+        )
+    return e.select(*out)
+
+
+# --- embedding_pq -----------------------------------------------------------
+#
+# Product quantization (Jégou et al.): split each 64-d vector into 8
+# subvectors of 8 dims, assign each to the nearest of 4 codebook
+# entries per subspace, emit the 8 codes + total quantization error —
+# the compression layout inside IVF-PQ indexes (8 bytes/vector
+# instead of 256). Codebook = the subvectors of vec_id 0..3 (the
+# k-means++ seeding step, frozen — deterministic both engines; a
+# production index refines it with embedding_centroids iterations).
+# Distances use the dot-product identity ‖a−b‖² = a·a − 2a·b + b·b in
+# the SAME textual order both sides, micro-quantized BEFORE the
+# argmin so ties and comparisons are integer.
+
+_PQ_SUBS = 8
+_PQ_SUBDIM = 8
+_PQ_K = 4
+
+
+def _pq_oracle() -> str:
+    return f"""
+    WITH n AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    seeds AS (SELECT vec_id AS cid, v AS cv FROM n WHERE vec_id < {_PQ_K}),
+    sub AS (SELECT unnest(generate_series(0, {_PQ_SUBS - 1})) AS s),
+    d AS (
+      SELECT n.vec_id, sub.s, seeds.cid,
+             CAST(floor((
+               list_dot_product(n.v[sub.s * {_PQ_SUBDIM} + 1 :
+                                    (sub.s + 1) * {_PQ_SUBDIM}],
+                                n.v[sub.s * {_PQ_SUBDIM} + 1 :
+                                    (sub.s + 1) * {_PQ_SUBDIM}])
+               - 2 * list_dot_product(n.v[sub.s * {_PQ_SUBDIM} + 1 :
+                                          (sub.s + 1) * {_PQ_SUBDIM}],
+                                      seeds.cv[sub.s * {_PQ_SUBDIM} + 1 :
+                                               (sub.s + 1) * {_PQ_SUBDIM}])
+               + list_dot_product(seeds.cv[sub.s * {_PQ_SUBDIM} + 1 :
+                                           (sub.s + 1) * {_PQ_SUBDIM}],
+                                  seeds.cv[sub.s * {_PQ_SUBDIM} + 1 :
+                                           (sub.s + 1) * {_PQ_SUBDIM}])
+             ) * 1000000 + 0.5) AS BIGINT) AS dist_micro
+      FROM n CROSS JOIN sub CROSS JOIN seeds),
+    best AS (
+      SELECT vec_id, s, cid, dist_micro,
+             row_number() OVER (PARTITION BY vec_id, s
+                                ORDER BY dist_micro, cid) AS rk
+      FROM d)
+    SELECT vec_id,
+           {', '.join(f"CAST(max(CASE WHEN s = {k} THEN cid END) AS BIGINT) AS code_{k}" for k in range(_PQ_SUBS))},
+           CAST(sum(dist_micro) AS BIGINT) AS err_micro
+    FROM best WHERE rk = 1 GROUP BY vec_id
+    """
+
+
+@register("embedding_pq", oracle=_pq_oracle(), tags=("similarity", "ml"))
+def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization codes (8 × 2-bit) + reconstruction error
+    per vector (integer micro).
+
+    Shapes: the codebook frame is {_PQ_K} rows and BROADCAST; the
+    (vector × 8 subspaces × 4 centroids) expansion is scan-side and
+    narrow (32 small rows per vector), collapsed by one vec_id-keyed
+    aggregate (the argmin folds into max-CASE over the rank window
+    partitioned on (vec_id, s) — same exchange). At 100 TB: PQ codes
+    shrink the ANN candidate scan 32×; assignment is embarrassingly
+    parallel, exactly this plan with a trained codebook."""
+    from etl_cnpjs_spark.operators.similarity import dot, vec_double
+
+    e = table(spark, sf_dir, "embeddings", parallel=True).select(
+        "vec_id", vec_double(F.col("embedding")).alias("v")
+    )
+    seeds = e.filter(F.col("vec_id") < _PQ_K).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+    )
+    sub = F.expr(f"explode(sequence(0, {_PQ_SUBS - 1}))").alias("s")
+    exp = e.select("vec_id", "v", sub).crossJoin(F.broadcast(seeds))
+    va = F.expr(f"slice(v, s * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})")
+    vb = F.expr(f"slice(cv, s * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})")
+    dist = dot(va, va) - 2 * dot(va, vb) + dot(vb, vb)
+    d = exp.select(
+        "vec_id",
+        "s",
+        "cid",
+        F.floor(dist * 1000000 + 0.5).cast("bigint").alias("dist_micro"),
+    )
+    best = d.select(
+        "vec_id",
+        "s",
+        "cid",
+        "dist_micro",
+        F.row_number()
+        .over(W.partitionBy("vec_id", "s").orderBy("dist_micro", "cid"))
+        .alias("rk"),
+    )
+    aggs = [
+        F.max(F.when(F.col("s") == k, F.col("cid")))
+        .cast("bigint")
+        .alias(f"code_{k}")
+        for k in range(_PQ_SUBS)
+    ]
+    return (
+        best.filter(F.col("rk") == 1)
+        .groupBy("vec_id")
+        .agg(
+            *aggs,
+            F.sum("dist_micro").cast("bigint").alias("err_micro"),
+        )
+    )
+
+
+# --- sim_recall_report -------------------------------------------------------
+#
+# Per-query recall@k of the IVF index (sim_topk_kmeans's label-seeded
+# coarse quantizer) against the exact brute-force top-k, over a fixed
+# probe set of the NQ lowest vec_ids. This is the index-quality gate a
+# pipeline runs before trusting ANN dedup/search at scale: recall is
+# computed IN-PLAN (no collect), and because the quantizer is the
+# oracle-derivable one, the whole eval — exact ranking, bucket probing,
+# IVF ranking, overlap — carries a full DuckDB hash oracle. The
+# trained-quantizer twin keeps its recall evidence in
+# tests/test_blocked_ops.py::test_kmeans_ivf_recall_vs_exact.
+
+RECALL_NQ = 20  # probe-set size: the NQ lowest vec_ids query the index
+
+
+def _recall_oracle() -> str:
+    from etl_cnpjs_spark.operators.similarity import sql_cosine
+    from etl_cnpjs_spark.plans.similarity import (
+        _SQL_ASSIGN_CTES,
+        _SQL_VECS,
+        KMEANS_N_PROBE,
+        TOP_K,
+    )
+
+    return f"""
+    WITH n AS ({_SQL_VECS}),
+    {_SQL_ASSIGN_CTES},
+    q AS (SELECT vec_id AS qid, v AS qv FROM n ORDER BY vec_id
+          LIMIT {RECALL_NQ}),
+    ex AS (
+      SELECT qid, vec_id FROM (
+        SELECT q.qid, n.vec_id,
+               ROW_NUMBER() OVER (PARTITION BY q.qid
+                 ORDER BY {sql_cosine("n.v", "q.qv")} DESC, n.vec_id) AS rn
+        FROM n, q WHERE n.vec_id <> q.qid) t
+      WHERE rn <= {TOP_K}),
+    pr AS (
+      SELECT qid, cid FROM (
+        SELECT q.qid, c.cid,
+               ROW_NUMBER() OVER (PARTITION BY q.qid
+                 ORDER BY {sql_cosine("q.qv", "c.cv")} DESC, c.cid) AS rn
+        FROM c, q) t
+      WHERE rn <= {KMEANS_N_PROBE}),
+    iv AS (
+      SELECT qid, vec_id FROM (
+        SELECT p.qid, a.vec_id,
+               ROW_NUMBER() OVER (PARTITION BY p.qid
+                 ORDER BY {sql_cosine("a.v", "q.qv")} DESC, a.vec_id) AS rn
+        FROM assign a JOIN pr p ON a.cid = p.cid
+        JOIN q ON q.qid = p.qid
+        WHERE a.vec_id <> p.qid) t
+      WHERE rn <= {TOP_K})
+    SELECT ex.qid,
+           CAST({TOP_K} AS BIGINT) AS k,
+           CAST(count(iv.vec_id) AS BIGINT) AS n_overlap,
+           CAST(count(iv.vec_id) * 1000000 // {TOP_K} AS BIGINT)
+             AS recall_micro
+    FROM ex LEFT JOIN iv ON ex.qid = iv.qid AND ex.vec_id = iv.vec_id
+    GROUP BY ex.qid
+    """
+
+
+@register(
+    "sim_recall_report",
+    oracle=_recall_oracle(),
+    tags=("north_star", "similarity", "ann", "eval"),
+)
+def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-query recall@k of the label-seeded IVF against exact
+    brute-force: (qid, k, n_overlap, recall_micro) for the RECALL_NQ
+    lowest vec_ids.
+
+    Shapes: the probe set and the centroid table are broadcast (NQ
+    and |labels| rows); the exact side is ONE corpus scan scored
+    against all NQ probes (cross of corpus x broadcast probes),
+    ranked by a window on qid — the exchange carries corpus x NQ
+    narrow rows, the documented cost of measuring exact ground truth
+    on a SAMPLED probe set (how ANN recall is measured in production;
+    never all-queries). The IVF side reuses the broadcast-centroid
+    assignment pass and touches only probed buckets per query. Both
+    rankings break cosine ties by vec_id and quantize nothing — every
+    compared value is an exact integer count; recall_micro is an
+    exact integer ratio (count * 1e6 / k).
+
+    The trained-quantizer twin (sim_topk_kmeans_trained) keeps its
+    recall evidence in tests/test_blocked_ops.py — this key makes the
+    oracle-derivable index's quality a hash-checked, distributed
+    query."""
+    from etl_cnpjs_spark.operators.similarity import cosine
+    from etl_cnpjs_spark.plans.similarity import (
+        KMEANS_N_PROBE,
+        TOP_K,
+        _label_centroid_assignment,
+        _vecs,
+    )
 
     n = _vecs(spark, sf_dir)
-    _, assign = _label_centroid_assignment(n)
-    a = assign.localCheckpoint()  # two consumers: pair scorer + rebuild
-    pairs = bucket_cosine_pairs(a, "cid", "vec_id", "v", SEMANTIC_TAU)
-    dropped = pairs.select(F.col("j").alias("vec_id")).distinct()
-    return a.join(dropped.withColumn("d", F.lit(1)), "vec_id", "left").select(
-        "vec_id", "cid", F.col("d").isNull().alias("kept")
+    q = (
+        n.orderBy("vec_id")
+        .limit(RECALL_NQ)
+        .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"))
+    )
+    wq = Window.partitionBy("qid")
+
+    ex = (
+        n.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("qid"))
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                wq.orderBy(F.desc(cosine(F.col("v"), F.col("qv"))), F.asc("vec_id"))
+            ),
+        )
+        .filter(F.col("rn") <= TOP_K)
+        .select("qid", "vec_id")
+    )
+
+    c, assign = _label_centroid_assignment(n)
+    pr = (
+        c.crossJoin(F.broadcast(q))
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                wq.orderBy(F.desc(cosine(F.col("qv"), F.col("cv"))), F.asc("cid"))
+            ),
+        )
+        .filter(F.col("rn") <= KMEANS_N_PROBE)
+        .select("qid", "cid")
+    )
+    iv = (
+        assign.join(F.broadcast(pr), "cid")
+        .join(F.broadcast(q), "qid")
+        .filter(F.col("vec_id") != F.col("qid"))
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                wq.orderBy(F.desc(cosine(F.col("v"), F.col("qv"))), F.asc("vec_id"))
+            ),
+        )
+        .filter(F.col("rn") <= TOP_K)
+        .select("qid", F.col("vec_id").alias("iv_id"), F.lit(1).alias("_hit"))
+    )
+
+    return (
+        ex.join(
+            iv,
+            (ex["qid"] == iv["qid"]) & (ex["vec_id"] == iv["iv_id"]),
+            "left",
+        )
+        .select(ex["qid"], "_hit")
+        .groupBy("qid")
+        .agg(
+            F.lit(TOP_K).cast("bigint").alias("k"),
+            F.count("_hit").cast("bigint").alias("n_overlap"),
+            F.expr(f"CAST(count(_hit) * 1000000 DIV {TOP_K} AS BIGINT)").alias(
+                "recall_micro"
+            ),
+        )
     )

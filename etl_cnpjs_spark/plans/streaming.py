@@ -1,5 +1,6 @@
-"""Streaming-shaped plans over `events`, registered in their batch form
-(the driver's oracle runs batch SQL; TESTDATA is static parquet).
+"""Streaming-shaped plans over `events` (stream_*), registered in their
+batch form (the driver's oracle runs batch SQL; TESTDATA is static
+parquet).
 
 The SAME transforms execute under Structured Streaming — readStream →
 withWatermark → transform → writeStream — in tests/test_streaming.py.
@@ -245,3 +246,38 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("eid"), F.col("ts").alias("ets")
     )
     return signup_error_interval_join(signups, errors)
+
+
+# --- stream_topk --------------------------------------------------------------
+#
+# Streaming leaderboard: top-k users by lifetime purchase value — the
+# complete-output-mode aggregation+sort+limit face Structured Streaming
+# supports natively (unlike append mode, where sorting is illegal).
+# Batch form here is the oracle contract; tests/test_streaming.py runs
+# the IDENTICAL transform under readStream and pins equality.
+
+_TOPK_USERS = 10
+
+
+@register(
+    "stream_topk",
+    oracle=f"""
+    SELECT user_id,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(SUM(CAST(value AS DECIMAL(27,6))) AS DOUBLE) AS total_value
+    FROM events
+    GROUP BY user_id
+    ORDER BY SUM(CAST(value AS DECIMAL(27,6))) DESC, user_id
+    LIMIT {_TOPK_USERS}
+    """,
+    tags=("streaming", "sort", "agg"),
+)
+def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-{k} users by decimal-exact total event value (ties broken by
+    user_id — a total order, so the cut line is deterministic). Batch
+    plan: partial-agg shuffle to user grain, then TakeOrderedAndProject
+    (no global sort materialization). Streaming face: the same
+    groupBy→orderBy→limit under complete output mode."""
+    from etl_cnpjs_spark.streaming.windows import top_users_by_value
+
+    return top_users_by_value(table(spark, sf_dir, "events"), _TOPK_USERS)

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from etl_cnpjs_spark.catalog import table
 from etl_cnpjs_spark.plans.registry import register
 
+
 _DEC = "decimal(27,6)"
 _REV_SQL = f"SUM(CAST(l_extendedprice * (1 - l_discount) AS {_DEC}))"
 

@@ -71,7 +71,7 @@ pickle_by_value(__name__)
 
 # --- streaming SCD2 build (the lakehouse CDC story's streaming face) -------
 #
-# The batch twin is plans/extended3.py::cdc_scd2 (lag-suppress + lead
+# The batch twin is plans/events.py::cdc_scd2 (lag-suppress + lead
 # intervals over the whole feed). Here the SAME interval table builds
 # incrementally from an UNBOUNDED change stream: per-key state carries the
 # one open interval (status + valid_from); each arriving change either
@@ -142,7 +142,7 @@ def scd2_closed_intervals(feed: DataFrame) -> DataFrame:
 
 # --- streaming last-touch attribution (events_attribution's stream face) ---
 #
-# The batch twin is plans/extended5.py::events_attribution (running
+# The batch twin is plans/events.py::events_attribution (running
 # (unbounded, -1) window frame). Here the SAME semantics run over an
 # unbounded event stream: per-user state carries the latest touch
 # (click/view type + its event-time µs); each purchase emits one
@@ -157,9 +157,9 @@ def scd2_closed_intervals(feed: DataFrame) -> DataFrame:
 # EventTimeTimeout at the lookback horizon (after 72 h without a touch
 # the state can only ever attribute 'none', so it may be dropped).
 
-from ..plans.extended5 import _ATTR_LOOKBACK_H
+ATTR_LOOKBACK_H = 72
 
-ATTR_LOOKBACK_US = _ATTR_LOOKBACK_H * 3600 * 1_000_000
+ATTR_LOOKBACK_US = ATTR_LOOKBACK_H * 3600 * 1_000_000
 
 ATTR_OUTPUT_SCHEMA = StructType(
     [
@@ -220,7 +220,7 @@ def last_touch_attribution(events: DataFrame) -> DataFrame:
 
 # --- incremental CEP automaton (events_pattern_match's streaming face) ------
 #
-# The batch plan (plans/extended7.py::events_pattern_match) materializes
+# The batch plan (plans/events.py::events_pattern_match) materializes
 # each user's full event string and runs one regex — fine for bounded
 # history, impossible for an unbounded stream. This face runs the SAME
 # pattern s[^e]*c[^e]*p as an explicit NFA collapsed to maximal

@@ -209,7 +209,7 @@ def test_hits_matches_python(spark, tmp_path):
     """Tiny orders fixture -> the plan's synthetic edge derivation and
     3 max-normalized HITS rounds replayed in plain Python integer
     arithmetic (ppm bigints, no floats anywhere on either side)."""
-    from etl_cnpjs_spark.plans.extended11 import _HITS_N, _HITS_ROUNDS
+    from etl_cnpjs_spark.plans.graph import _HITS_N, _HITS_ROUNDS
 
     keys = [1, 2, 3, 7, 501, 502, 1003, 1504, 999, 42]
     pd.DataFrame({"o_orderkey": keys}).to_parquet(
@@ -330,7 +330,7 @@ def _undirected_evenodd(memb):
 
 
 def test_bfs_bounded_matches_python(spark, li_graph_dir):
-    from etl_cnpjs_spark.plans.extended7 import _BFS_HOPS
+    from etl_cnpjs_spark.plans.graph import _BFS_HOPS
 
     d, memb = li_graph_dir
     e = _undirected_evenodd(memb)
@@ -360,7 +360,7 @@ def test_pagerank_matches_python(spark, li_graph_dir):
     """Replays the exact arithmetic: per-edge contribution quantized to
     1e-15 bigints (floor), exact integer sums, double finish, final
     quantize at 1e-12 — identical op order, so equality is exact."""
-    from etl_cnpjs_spark.plans.extended3 import _PR_D, _PR_ITERS
+    from etl_cnpjs_spark.plans.graph import _PR_D, _PR_ITERS
 
     d, memb = li_graph_dir
     e = sorted(_undirected_evenodd(memb))
@@ -386,7 +386,7 @@ def test_label_propagation_matches_python(spark, li_graph_dir):
     """Two synchronous LPA iterations replayed in Python with the same
     deterministic (count, smallest-label) mode rule (lexicographic max
     over (cnt, -label) — the r12 scale-exact tie-break)."""
-    from etl_cnpjs_spark.plans.extended3 import _LPA_ITERS
+    from etl_cnpjs_spark.plans.graph import _LPA_ITERS
 
     d, memb = li_graph_dir
     e = sorted(_undirected_evenodd(memb))
@@ -467,10 +467,7 @@ def test_kcore_matches_python(spark, tmp_path):
     suppliers survives, a pendant chain peels away round by round."""
     import itertools
 
-    from etl_cnpjs_spark.plans.extended10 import (
-        _KCORE_K,
-        _KCORE_ROUNDS,
-    )
+    from etl_cnpjs_spark.plans.graph import _KCORE_K, _KCORE_ROUNDS
 
     # bipartite: parts 1..9 each use suppliers 1..9 -> bipartite
     # 9x9 biclique (degree 9 >= k=8 everywhere, survives). parts

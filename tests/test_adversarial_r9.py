@@ -118,7 +118,7 @@ def test_corpus_build_is_eval_matches_pure_python(spark):
     parquet doc_ids with Python big-ints only (no Spark expression, no
     DuckDB SQL) — pins the r9 knuth32 rewrite against an
     identical-on-both-engines regression."""
-    from etl_cnpjs_spark.plans.extended import _KEEP
+    from etl_cnpjs_spark.plans.corpus import _KEEP
 
     ids = pq.read_table(
         os.path.join(SF_DIR, "documents.parquet"), columns=["doc_id"]
@@ -188,7 +188,7 @@ def test_sample_hash_xx_membership_matches_pure_python(spark):
     """The registered rows-only key's exact selection, re-derived from
     raw parquet keys through the from-spec XXH64 — the independent
     value evidence a rows-only driver check can't provide."""
-    from etl_cnpjs_spark.plans.extended import _KEEP
+    from etl_cnpjs_spark.plans.corpus import _KEEP
 
     t = pq.read_table(
         os.path.join(SF_DIR, "lineitem.parquet"),
@@ -233,11 +233,8 @@ def test_corpus_ingest_incremental_matches_pure_python(spark):
     discipline the other capstone keys carry."""
     from etl_cnpjs_spark.plans import QUERIES
     from etl_cnpjs_spark.plans.dedup import _INCR_SPLIT, JACCARD_THRESHOLD
-    from etl_cnpjs_spark.plans.extended import _KEEP, _KNUTH, _MOD
-    from etl_cnpjs_spark.plans.extended14 import (
-        GREEDY_PACK_BUDGET,
-        GREEDY_SHARD_WIDTH,
-    )
+    from etl_cnpjs_spark.plans.corpus import _KEEP, _KNUTH, _MOD
+    from etl_cnpjs_spark.plans.text import GREEDY_PACK_BUDGET, GREEDY_SHARD_WIDTH
 
     import pandas as pd
 

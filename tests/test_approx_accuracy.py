@@ -145,7 +145,7 @@ def test_countmin_point_estimates(spark, sf_dir):
     import math
 
     from etl_cnpjs_spark.catalog import table
-    from etl_cnpjs_spark.plans.extended2 import _CMS_HASHES, _CMS_P, _CMS_W
+    from etl_cnpjs_spark.plans.agg import _CMS_HASHES, _CMS_P, _CMS_W
 
     cells = {
         (r.depth, r.bucket): r.cnt

@@ -12,12 +12,8 @@ import pandas as pd
 import pytest
 
 from etl_cnpjs_spark.plans import QUERIES
-from etl_cnpjs_spark.plans.corpus import _MIX_KNUTH, _MIX_MOD
-from etl_cnpjs_spark.plans.extended import _KEEP, _KNUTH, _MOD
-from etl_cnpjs_spark.plans.extended14 import (
-    GREEDY_PACK_BUDGET,
-    GREEDY_SHARD_WIDTH,
-)
+from etl_cnpjs_spark.plans.corpus import _KEEP, _KNUTH, _MIX_KNUTH, _MIX_MOD, _MOD
+from etl_cnpjs_spark.plans.text import GREEDY_PACK_BUDGET, GREEDY_SHARD_WIDTH
 
 
 def _is_eval(doc_id: int) -> bool:
@@ -211,7 +207,7 @@ def inc_fixture(tmp_path_factory):
     new band (newly), a train doc leaked by base eval AND paired with a
     delta doc (already, must NOT double-count as newly), a clean train
     doc, and the delta/base eval docs themselves."""
-    from etl_cnpjs_spark.plans.extended15 import _DELTA_BAND
+    from etl_cnpjs_spark.plans.corpus import _DELTA_BAND
 
     hi = _KEEP + _DELTA_BAND
     taken: set[int] = set()

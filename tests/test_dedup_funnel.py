@@ -140,7 +140,7 @@ def test_funnel_lsh_recall_on_cleaned_text(spark, fixture_dir, sf_dir):
         minhash_band_keys,
     )
     from etl_cnpjs_spark.plans.dedup import JACCARD_THRESHOLD
-    from etl_cnpjs_spark.plans.extended12 import corpus_substr_clean
+    from etl_cnpjs_spark.plans.corpus import corpus_substr_clean
 
     targets = [(fixture_dir, {(4, 5)})]
     targets += [(d, None) for d in _shipped_sf_dirs()]

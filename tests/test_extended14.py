@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 
 from etl_cnpjs_spark.plans import QUERIES
-from etl_cnpjs_spark.plans.extended import _KEEP, _KNUTH, _MOD
+from etl_cnpjs_spark.plans.corpus import _KEEP, _KNUTH, _MOD
 
 
 def _is_eval(doc_id: int) -> bool:
@@ -175,8 +175,7 @@ def _numpy_recall(emb: pd.DataFrame, nq: int, k: int, nprobe: int):
 
 
 def test_recall_report_matches_numpy(spark, sf_dir):
-    from etl_cnpjs_spark.plans.extended14 import RECALL_NQ
-    from etl_cnpjs_spark.plans.similarity import KMEANS_N_PROBE, TOP_K
+    from etl_cnpjs_spark.plans.similarity import KMEANS_N_PROBE, RECALL_NQ, TOP_K
 
     emb = pd.read_parquet(f"{sf_dir}/embeddings.parquet")
     expected = _numpy_recall(emb, RECALL_NQ, TOP_K, KMEANS_N_PROBE)
@@ -202,7 +201,7 @@ def test_recall_report_perfect_when_one_bucket(spark, tmp_path):
         }
     )
     emb.to_parquet(tmp_path / "embeddings.parquet", index=False)
-    from etl_cnpjs_spark.plans.extended14 import RECALL_NQ
+    from etl_cnpjs_spark.plans.similarity import RECALL_NQ
 
     rows = QUERIES["sim_recall_report"].fn(spark, str(tmp_path)).collect()
     assert len(rows) == RECALL_NQ
@@ -343,7 +342,7 @@ def test_pack_greedy_never_splits_and_respects_budget(spark, sf_dir):
 
     from etl_cnpjs_spark.catalog import table
     from etl_cnpjs_spark.functions.text import tokens
-    from etl_cnpjs_spark.plans.extended14 import GREEDY_PACK_BUDGET
+    from etl_cnpjs_spark.plans.text import GREEDY_PACK_BUDGET
 
     rows = QUERIES["doc_pack_greedy"].fn(spark, sf_dir).collect()
     for r in rows:
@@ -372,7 +371,7 @@ def test_pack_greedy_never_splits_and_respects_budget(spark, sf_dir):
 def test_pack_greedy_matches_sequential(spark, tmp_path_factory, sizes):
     """Greedy recurrence vs a plain-Python sequential fold on random
     doc sizes (including oversize > budget docs)."""
-    from etl_cnpjs_spark.plans.extended14 import GREEDY_PACK_BUDGET
+    from etl_cnpjs_spark.plans.text import GREEDY_PACK_BUDGET
 
     expected = {}
     b, fill = 0, 0
@@ -410,10 +409,7 @@ def test_pack_sharded_invariants_and_divergence_bound(spark, sf_dir):
     divergence is the forced close at shard boundaries: bins_sharded is
     between bins_global and bins_global + n_nonempty_shards, and no
     sharded bin spans a shard boundary."""
-    from etl_cnpjs_spark.plans.extended14 import (
-        GREEDY_PACK_BUDGET,
-        GREEDY_SHARD_WIDTH,
-    )
+    from etl_cnpjs_spark.plans.text import GREEDY_PACK_BUDGET, GREEDY_SHARD_WIDTH
 
     sharded = QUERIES["doc_pack_greedy_sharded"].fn(spark, sf_dir).collect()
     global_ = QUERIES["doc_pack_greedy"].fn(spark, sf_dir).collect()
@@ -495,10 +491,7 @@ def test_pack_sharded_matches_independent_fold(
     re-implements sharding, per-shard fold, and the offset stitch from
     scratch — any divergence in shard assignment, fold order, or the
     cumulative-offset arithmetic breaks the equality."""
-    from etl_cnpjs_spark.plans.extended14 import (
-        GREEDY_PACK_BUDGET,
-        GREEDY_SHARD_WIDTH,
-    )
+    from etl_cnpjs_spark.plans.text import GREEDY_PACK_BUDGET, GREEDY_SHARD_WIDTH
 
     doc_ids = []
     i = 0

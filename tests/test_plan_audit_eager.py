@@ -73,8 +73,8 @@ def test_fixed_keys_build_clean(spark):
     """The two r7-flagged keys (text_keywords eager count,
     events_chi2_independence double distinct-count) now build without
     any driver job."""
-    from etl_cnpjs_spark.plans.extended9 import events_chi2_independence
-    from etl_cnpjs_spark.plans.extended10 import text_keywords
+    from etl_cnpjs_spark.plans.events import events_chi2_independence
+    from etl_cnpjs_spark.plans.text import text_keywords
 
     for fn in (text_keywords, events_chi2_independence):
         with record_eager() as hits:

@@ -235,7 +235,7 @@ def test_bitmap_distinct_avoids_expand(spark, sf_dir):
 def test_orc_scan_pushes_filters(spark, sf_dir):
     """The ORC reader must accept predicate pushdown like parquet — the
     format swap may not cost the scan-side optimizations."""
-    from etl_cnpjs_spark.plans.extended3 import _stage_orc
+    from etl_cnpjs_spark.plans.io import _stage_orc
 
     path = _stage_orc(spark, sf_dir)
     df = spark.read.orc(path).filter("doc_id < 10").select("doc_id", "lang")
@@ -1158,10 +1158,7 @@ def test_centroid_assignment_argmax(spark, tmp_path):
 
     # shape: assignment is a map pass — no Window, no per-vector
     # k-row explosion feeding a sort
-    from etl_cnpjs_spark.plans.similarity import (
-        _label_centroid_assignment,
-        _vecs,
-    )
+    from etl_cnpjs_spark.plans.similarity import _label_centroid_assignment, _vecs
 
     _, assign = _label_centroid_assignment(_vecs(spark, str(tmp_path)))
     plan = assign._jdf.queryExecution().executedPlan().toString()

@@ -209,7 +209,7 @@ def _py_interleave(x: int, y: int, bits: int = 10) -> int:
     )
 )
 def test_zvalue_expr_matches_python_interleave(spark, pts):
-    from etl_cnpjs_spark.plans.layout import z_value_expr
+    from etl_cnpjs_spark.plans.io import z_value_expr
 
     df = spark.createDataFrame(
         [(i, x, y) for i, (x, y) in enumerate(pts)], "i long, x long, y long"
@@ -328,7 +328,7 @@ def _py_pack(docs: list[tuple[int, str, int]], budget: int = 512):
     )
 )
 def test_pack_report_matches_sequential(spark, docs):
-    from etl_cnpjs_spark.plans.corpus import _PACK_BUDGET, _pack_report
+    from etl_cnpjs_spark.plans.text import _PACK_BUDGET, _pack_report
 
     df = spark.createDataFrame(docs, "doc_id long, lang string, n_tokens long")
     got = {
@@ -680,7 +680,7 @@ def test_weighted_median_crossing_rule(spark, xs):
 def test_bloom_prefilter_is_lossless(spark, dim_keys, fact_keys):
     """The Bloom prefilter contract on arbitrary key sets: whatever the
     false-positive pattern, prefilter + exact join ≡ plain join."""
-    from etl_cnpjs_spark.plans.extended7 import _BLOOM_HASHES, _bloom_positions
+    from etl_cnpjs_spark.plans.relational import _BLOOM_HASHES, _bloom_positions
 
     dim = spark.createDataFrame([(k,) for k in set(dim_keys)], "k long")
     fact = spark.createDataFrame(list(enumerate(fact_keys)), "i long, k long")
@@ -705,20 +705,20 @@ def test_kcore_peel_converged_at_registered_rounds(spark, sf_dir):
     """graph_kcore registers 'k-core after R rounds'; this pins that the
     peel has actually CONVERGED by round R at test scale (round R−1
     already equals round R), so the registered output IS the k-core."""
-    import etl_cnpjs_spark.plans.extended10 as x10
+    import etl_cnpjs_spark.plans.graph as graph_plans
 
     def run(rounds: int):
-        orig = x10._KCORE_ROUNDS
-        x10._KCORE_ROUNDS = rounds
+        orig = graph_plans._KCORE_ROUNDS
+        graph_plans._KCORE_ROUNDS = rounds
         try:
             return {
                 tuple(r)
-                for r in x10.graph_kcore(spark, sf_dir).collect()
+                for r in graph_plans.graph_kcore(spark, sf_dir).collect()
             }
         finally:
-            x10._KCORE_ROUNDS = orig
+            graph_plans._KCORE_ROUNDS = orig
 
-    assert run(x10._KCORE_ROUNDS - 1) == run(x10._KCORE_ROUNDS)
+    assert run(graph_plans._KCORE_ROUNDS - 1) == run(graph_plans._KCORE_ROUNDS)
 
 
 def test_skyline_matches_bruteforce_dominance(spark):
@@ -881,11 +881,7 @@ def test_bootstrap_weights_mean_is_one(spark, sf_dir):
     """The Poisson(1) inverse-CDF thresholds must produce mean weight
     ≈ 1 over the real event_id domain (the property the bootstrap
     leans on: E[w] = 1 keeps replicate totals unbiased)."""
-    from etl_cnpjs_spark.plans.extended11 import (
-        _BOOT_KNUTH,
-        _BOOT_MOD,
-        _boot_w,
-    )
+    from etl_cnpjs_spark.plans.agg import _BOOT_KNUTH, _BOOT_MOD, _boot_w
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     h = f"((event_id * {_BOOT_KNUTH} + 7 * 97) % {_BOOT_MOD})"
@@ -979,7 +975,7 @@ def test_exact_substr_spans_match_bruteforce(spark, docs):
     """ExactSubstr spans (count window + gaps-and-islands) equal the
     sequential suffix-criterion implementation on arbitrary corpora,
     including all-duplicate, no-duplicate, and short-doc shapes."""
-    from etl_cnpjs_spark.plans.extended12 import exact_substr_spans
+    from etl_cnpjs_spark.plans.text import exact_substr_spans
 
     k = 2
     df = spark.createDataFrame(
@@ -1040,7 +1036,7 @@ def test_pagerank_matches_python_at_any_id_magnitude(spark, memb, tmp_path_facto
     import math
 
     from etl_cnpjs_spark.plans import QUERIES
-    from etl_cnpjs_spark.plans.extended3 import _PR_D, _PR_ITERS
+    from etl_cnpjs_spark.plans.graph import _PR_D, _PR_ITERS
 
     d = tmp_path_factory.mktemp("prprop")
     _write_lineitem(d, memb)
@@ -1077,7 +1073,7 @@ def test_label_propagation_matches_python_at_any_id_magnitude(
     ids up to 2^40 — the magnitude regime where both the old additive
     offset AND the old packed-bigint score were silently wrong."""
     from etl_cnpjs_spark.plans import QUERIES
-    from etl_cnpjs_spark.plans.extended3 import _LPA_ITERS
+    from etl_cnpjs_spark.plans.graph import _LPA_ITERS
 
     d = tmp_path_factory.mktemp("lpaprop")
     _write_lineitem(d, memb)
@@ -1131,7 +1127,7 @@ def test_bfs_bounded_matches_python_at_any_id_magnitude(
     every power-of-ten boundary the pre-r13 additive 1e6 offset could
     alias at."""
     from etl_cnpjs_spark.plans import QUERIES
-    from etl_cnpjs_spark.plans.extended7 import _BFS_HOPS
+    from etl_cnpjs_spark.plans.graph import _BFS_HOPS
 
     d = tmp_path_factory.mktemp("bfsprop")
     _write_lineitem(d, memb)
@@ -1168,13 +1164,13 @@ def test_kcore_matches_python_at_any_id_magnitude(
     """graph_kcore (k patched to 2 so sparse hypothesis graphs keep a
     non-empty core — the registered k=8 would peel everything and
     fence nothing) == the sequential peel replay at ids up to 2^40."""
-    import etl_cnpjs_spark.plans.extended10 as x10
+    import etl_cnpjs_spark.plans.graph as graph_plans
 
     d = tmp_path_factory.mktemp("kcoreprop")
     _write_lineitem(d, memb)
     e = set(_evenodd_edges(memb))
     k_test = 2
-    for _ in range(x10._KCORE_ROUNDS):
+    for _ in range(graph_plans._KCORE_ROUNDS):
         deg: dict[int, int] = {}
         for u, _v in e:
             deg[u] = deg.get(u, 0) + 1
@@ -1184,13 +1180,13 @@ def test_kcore_matches_python_at_any_id_magnitude(
     for u, _v in e:
         expected[u] = expected.get(u, 0) + 1
 
-    orig = x10._KCORE_K
-    x10._KCORE_K = k_test
+    orig = graph_plans._KCORE_K
+    graph_plans._KCORE_K = k_test
     try:
         got = {
             r.node: r.core_degree
-            for r in x10.graph_kcore(spark, str(d)).collect()
+            for r in graph_plans.graph_kcore(spark, str(d)).collect()
         }
     finally:
-        x10._KCORE_K = orig
+        graph_plans._KCORE_K = orig
     assert got == expected

@@ -146,7 +146,7 @@ def test_approx_quantile_regime_is_exact(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from etl_cnpjs_spark.catalog import table
-    from etl_cnpjs_spark.plans.relational import APPROX_QUANTILE_ACCURACY
+    from etl_cnpjs_spark.plans.agg import APPROX_QUANTILE_ACCURACY
 
     top = (
         table(spark, sf_dir, "lineitem")
@@ -416,7 +416,7 @@ def test_spatial_grid_equals_bruteforce(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from etl_cnpjs_spark.catalog import table
-    from etl_cnpjs_spark.plans.extended5 import _SPATIAL_R
+    from etl_cnpjs_spark.plans.relational import _SPATIAL_R
 
     grid = QUERIES["join_spatial_grid"].fn(spark, sf_dir)
     p = table(spark, sf_dir, "embeddings").select(
@@ -538,7 +538,7 @@ def test_spatial_knn_exact_and_complete(spark, sf_dir):
     import pandas as pd
 
     from tests.conftest import SF_DIR
-    from etl_cnpjs_spark.plans.extended5 import _KNN_K
+    from etl_cnpjs_spark.plans.relational import _KNN_K
 
     out = QUERIES["join_spatial_knn"].fn(spark, SF_DIR).toPandas()
     emb = pd.read_parquet(f"{SF_DIR}/embeddings.parquet")

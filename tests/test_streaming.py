@@ -390,7 +390,7 @@ def test_streaming_scd2_matches_batch_closed_intervals(spark, sf_dir, tmp_path):
     batch/stream boundary too."""
     import time as _time
 
-    from etl_cnpjs_spark.plans.extended3 import cdc_scd2, scd2_feed_waves
+    from etl_cnpjs_spark.plans.events import cdc_scd2, scd2_feed_waves
     from etl_cnpjs_spark.streaming.stateful import scd2_closed_intervals
 
     batch = cdc_scd2(spark, sf_dir)
@@ -441,7 +441,7 @@ def test_streaming_attribution_matches_batch(spark, sf_dir, tmp_path):
     arrival order, the batch twin in decimal)."""
     import time as _time
 
-    from etl_cnpjs_spark.plans.extended5 import events_attribution
+    from etl_cnpjs_spark.plans.events import events_attribution
     from etl_cnpjs_spark.streaming.stateful import last_touch_attribution
 
     batch = {
@@ -979,10 +979,7 @@ def test_python_stream_source_restart_from_checkpoint(spark, tmp_path):
     every row 0..1023 (no replays, no gaps), which exercises the
     SimpleDataSourceStreamReader offset/readBetweenOffsets contract the
     recovery path is built on."""
-    from etl_cnpjs_spark.plans.extended12 import (
-        _PYSTREAM_CHUNK,
-        make_chunk_stream_source,
-    )
+    from etl_cnpjs_spark.plans.io import _PYSTREAM_CHUNK, make_chunk_stream_source
 
     spark.dataSource.register(make_chunk_stream_source())
     out = tmp_path / "pystream_out"
@@ -1072,7 +1069,7 @@ def _ingest_static_side(spark, sf_dir, tmp_path):
     tables the ingest screen probes — the dedup_minhash_persist role."""
     from etl_cnpjs_spark.operators.dedup import minhash_band_keys
     from etl_cnpjs_spark.plans.dedup import _INCR_SPLIT, _doc_shingles
-    from etl_cnpjs_spark.plans.extended import _KEEP
+    from etl_cnpjs_spark.plans.corpus import _KEEP
     from etl_cnpjs_spark.plans.registry import knuth32
 
     corpus = (
@@ -1102,10 +1099,7 @@ def _ingest_report(spark, outcomes):
     """Pack-on-snapshot + per-lang report over staged outcome rows —
     the closing batch stage both streaming-face tests share."""
     from etl_cnpjs_spark.operators.packing import greedy_pack_bins
-    from etl_cnpjs_spark.plans.extended14 import (
-        GREEDY_PACK_BUDGET,
-        GREEDY_SHARD_WIDTH,
-    )
+    from etl_cnpjs_spark.plans.text import GREEDY_PACK_BUDGET, GREEDY_SHARD_WIDTH
 
     surv = outcomes.filter(F.col("outcome") == "ingested").select(
         "doc_id",

@@ -24,7 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_cnpjs_spark.catalog import table
-from etl_cnpjs_spark.plans.layout import _PROBE_HI, _PROBE_LO, zorder_write
+from etl_cnpjs_spark.plans.io import _PROBE_HI, _PROBE_LO, zorder_write
 
 
 def _file_hits(spark, path):

@@ -74,7 +74,7 @@ EAGER_OK_SITES = (
     # per session; the r1-verdict fix that moved it off the driver) —
     # the same materialize-by-design class as the sink keys' staged
     # writes, which go through .write and are not intercepted
-    ("plans/extended.py", "_stage_bin_files"),
+    ("plans/io.py", "_stage_bin_files"),
 )
 
 
