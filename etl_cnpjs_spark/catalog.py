@@ -10,6 +10,7 @@ an upgrade the reference's semantics never contradict (SURVEY.md §1.1).
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -104,14 +105,13 @@ def _scan_units(spark: SparkSession, path: str) -> tuple[int, int]:
 SCAN_PARALLELIZE_MIN_BYTES = 512 * 1024
 
 
-def maybe_parallelize_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """Round-robin repartition to session parallelism iff the parquet
-    layout cannot (row groups < parallelism) and the bytes floor passes."""
+def scan_parallelism(spark: SparkSession, path: str) -> int:
+    """Session parallelism iff the parquet layout cannot feed it (row
+    groups < parallelism) and the bytes floor passes, else 0. A SQL
+    statement applies it as a ``REPARTITION(n)`` hint on the scan."""
     n = spark.sparkContext.defaultParallelism
     groups, nbytes = _scan_units(spark, path)
-    if groups < n and nbytes >= SCAN_PARALLELIZE_MIN_BYTES:
-        return df.repartition(n)
-    return df
+    return n if groups < n and nbytes >= SCAN_PARALLELIZE_MIN_BYTES else 0
 
 
 # --- session-scoped schema memo (r14, guide §6 / VERDICT r13 #1) ------------
@@ -178,6 +178,39 @@ def table(
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
         else:
             df = df.withColumn(col, F.col(col).cast("timestamp"))
-    if parallel:
-        df = maybe_parallelize_scan(spark, df, path)
+    if parallel and (n := scan_parallelism(spark, path)):
+        df = df.repartition(n)
     return df
+
+
+# --- session views: one analysis per plan ------------------------------------
+#
+# A plan written as one ``spark.sql`` statement is analyzed once. The same
+# plan as a DataFrame chain is analyzed again at every step, and each
+# ``F.*`` call is a py4j round trip. Statements name their tables through
+# this stager: each catalog table of one sf_dir is registered once per
+# session as a temp view over ``table()``, so the timestamp normalization
+# is part of the view.
+#
+# - Names carry a digest of the absolute sf_dir, so two catalog
+#   directories can live in one session.
+# - A view keeps the file listing it was registered with. The stager's
+#   fingerprint covers each table file, and each part file of a table
+#   stored as a directory, so a table rewritten in place re-registers the
+#   views on the next plan built.
+# - Self-joins name the view twice under two SQL aliases. Two
+#   ``spark.table`` handles on one view share expression ids, so a
+#   DataFrame condition ``a["c"] == b["c"]`` between them fails as
+#   ambiguous (the tpch_q2 / tpch_q11 trap).
+
+
+@staged("views")
+def views(spark: SparkSession, sf_dir: str) -> dict[str, str]:
+    """{table: temp view name} for each catalog table present in sf_dir."""
+    tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
+    out = {}
+    for name in TESTDATA_TABLES:
+        if os.path.exists(table_path(sf_dir, name)):
+            out[name] = f"__cat_{tag}_{name}"
+            table(spark, sf_dir, name).createOrReplaceTempView(out[name])
+    return out

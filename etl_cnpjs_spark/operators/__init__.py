@@ -9,6 +9,5 @@ from etl_cnpjs_spark.operators.relational import (  # noqa: F401
     dedup_exact,
     dedup_keep_latest,
     filter_in_lists,
-    star_join,
     top_k,
 )

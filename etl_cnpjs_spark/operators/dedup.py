@@ -25,13 +25,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _seeded_hash(seed: int):
-    # NB: must return a ONE-parameter lambda — F.transform interprets a
-    # two-parameter lambda as (element, index), so binding the seed via a
-    # default argument would silently hash with the array index instead.
-    return lambda s: F.xxhash64(F.lit(seed), s)
-
-
 def jaccard_pairs(
     docs: DataFrame, id_col: str, set_col: str, threshold: float
 ) -> DataFrame:
@@ -81,26 +74,29 @@ def jaccard_pairs(
     )
 
 
-def minhash_band_keys(shingles_col: Column, bands: int, rows: int) -> Column:
-    """Band keys straight from the shingle array: key[b] = xxhash64(b,
-    sig[b·rows], …, sig[b·rows+rows-1]) with sig[j] the j-seeded min-hash.
-    Two docs collide in band b iff their signatures agree on that slice —
-    P(collide | jaccard=j) = 1-(1-j^rows)^bands.
+def minhash_band_keys(shingles_col: str, bands: int, rows: int) -> Column:
+    """Band keys straight from the shingle array column ``shingles_col``:
+    key[b] = xxhash64(b, sig[b·rows], …, sig[b·rows+rows-1]) with sig[j]
+    the j-seeded min-hash. Two docs collide in band b iff their signatures
+    agree on that slice — P(collide | jaccard=j) = 1-(1-j^rows)^bands.
 
     Built per-band rather than via an intermediate signature column on
     purpose: referencing a signature Column object B×R times would embed
     B×R *copies* of the full signature expression in the plan (Catalyst
     collapses adjacent Projects and higher-order exprs get no
     subexpression elimination), turning O(H) array passes per row into
-    O(H²). This form evaluates each seeded min-hash exactly once."""
+    O(H²). This form evaluates each seeded min-hash exactly once. It is
+    one SQL expression, so building it is one py4j call rather than one
+    per function and lambda."""
+    col = f"`{shingles_col}`"
     keys = []
     for b in range(bands):
         mins = [
-            F.array_min(F.transform(shingles_col, _seeded_hash(b * rows + r)))
+            f"array_min(transform({col}, s -> xxhash64({b * rows + r}, s)))"
             for r in range(rows)
         ]
-        keys.append(F.xxhash64(F.lit(b), *mins))
-    return F.array(*keys)
+        keys.append(f"xxhash64({b}, {', '.join(mins)})")
+    return F.expr(f"array({', '.join(keys)})")
 
 
 def candidate_pairs(

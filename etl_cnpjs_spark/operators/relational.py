@@ -1,17 +1,13 @@
 """Relational operator library.
 
-Covers the reference's relational core — the 5-table star join with
-IN-list filters and wide projection (QUERY_FINAL,
-ETLCNPJFinalEmpresaEstabelecimentos.py:191-234) — plus the standard
+Covers the IN-list filters of the reference's relational core (QUERY_FINAL,
+ETLCNPJFinalEmpresaEstabelecimentos.py:191-234; its 5-table star join is
+one SQL statement, plans/relational.py::flagship) plus the standard
 operator families the reference delegates to SQLite (joins, filters,
 projection) and the ones it lacks entirely (aggregation, windows, set ops;
 SURVEY.md §2.2).
 
 Scale posture (100 TB):
-- Star joins: bounded dims are wrapped in ``broadcast()`` — the Spark
-  replacement for the reference's secondary-index nested loops
-  (etl.py:176-182). Fact-to-fact joins stay shuffle joins; AQE promotes /
-  splits skew at runtime.
 - IN-list filters are plain ``isin`` so Catalyst pushes them into the
   parquet scan (PushedFilters) — the reference runs them as bytecode
   residuals after the index seek.
@@ -25,25 +21,6 @@ from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def star_join(
-    fact: DataFrame,
-    dims: Sequence[tuple[DataFrame, Column | str, bool]],
-    how: str = "inner",
-) -> DataFrame:
-    """Join a fact table against dimension tables.
-
-    ``dims`` is a sequence of (dim_df, join_condition_or_key, broadcast?).
-    Mirrors QUERY_FINAL's shape (etl.py:213-222): inner equi-joins only,
-    orphan fact rows silently dropped (the reference never enforces FKs —
-    PRAGMA foreign_keys=OFF, etl.py:169).
-    """
-    out = fact
-    for dim, on, bcast in dims:
-        right = F.broadcast(dim) if bcast else dim
-        out = out.join(right, on=on, how=how)
-    return out
 
 
 def filter_in_lists(df: DataFrame, in_lists: dict[str, Iterable]) -> DataFrame:
@@ -143,6 +120,44 @@ def top_k(df: DataFrame, order_by: Sequence[Column], k: int) -> DataFrame:
     return df.orderBy(*order_by).limit(k)
 
 
+def sessionize_sql(
+    source: str, user_col: str, ts_col: str, order_col: str, gap_us: int
+) -> str:
+    """Gap-based sessionization as one SQL statement over the relation
+    ``source``: a new session starts when the gap since the user's
+    previous event exceeds ``gap_us`` microseconds. lag → flag →
+    running-sum assigns session ids in one window pass over (user, ts,
+    order_col) — order_col breaks ts ties so the assignment is a total
+    order. One row per (user, session_seq) with count, bounds, and
+    duration. One exchange end-to-end: the final GROUP BY reuses the
+    window's hash(user) partitioning (plan-asserted in
+    tests/test_plans.py)."""
+    # the running sum MUST use the same total order as the lag window —
+    # on (ts) alone, tied timestamps at a session boundary could order the
+    # is_new=1 row after its tied partner and split the tie across sessions
+    return f"""
+        WITH flagged AS (
+          SELECT `{user_col}` AS user_id, `{ts_col}` AS ts, `{order_col}` AS __ord,
+                 CASE WHEN unix_micros(lag(`{ts_col}`) OVER w) IS NULL
+                        OR unix_micros(`{ts_col}`) - unix_micros(lag(`{ts_col}`) OVER w)
+                           > {gap_us}
+                      THEN 1 ELSE 0 END AS is_new
+          FROM {source}
+          WINDOW w AS (PARTITION BY `{user_col}` ORDER BY `{ts_col}`, `{order_col}`)),
+        sess AS (
+          SELECT user_id, ts, sum(is_new) OVER (
+                   PARTITION BY user_id ORDER BY ts, __ord
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
+          FROM flagged)
+        SELECT user_id, session_seq,
+               count(1) AS n_events,
+               min(ts) AS session_start,
+               max(ts) AS session_end,
+               unix_micros(max(ts)) - unix_micros(min(ts)) AS duration_us
+        FROM sess GROUP BY user_id, session_seq
+        """
+
+
 def sessionize(
     events: DataFrame,
     user_col: str,
@@ -150,39 +165,9 @@ def sessionize(
     order_col: str,
     gap_us: int,
 ) -> DataFrame:
-    """Gap-based sessionization: a new session starts when the gap since
-    the user's previous event exceeds ``gap_us`` microseconds. lag → flag
-    → running-sum assigns session ids in one window pass over
-    (user, ts, order_col) — order_col breaks ts ties so the assignment is
-    a total order. Returns one row per (user, session_seq) with count,
-    bounds, and duration. One exchange end-to-end: the final groupBy
-    reuses the window's hash(user) partitioning (plan-asserted in
-    tests/test_plans.py)."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, order_col)
-    prev_us = F.unix_micros(F.lag(ts_col).over(w))
-    gap = F.unix_micros(F.col(ts_col)) - prev_us
-    flagged = events.select(
-        F.col(user_col).alias("user_id"),
-        F.col(ts_col).alias("ts"),
-        F.col(order_col).alias("__ord"),
-        F.when(prev_us.isNull() | (gap > gap_us), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("is_new"),
-    )
-    # the running sum MUST use the same total order as the lag window —
-    # on (ts) alone, tied timestamps at a session boundary could order the
-    # is_new=1 row after its tied partner and split the tie across sessions
-    wsum = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "__ord")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sess = flagged.withColumn("session_seq", F.sum("is_new").over(wsum))
-    return sess.groupBy("user_id", "session_seq").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))).alias("duration_us"),
+    """``sessionize_sql`` over a DataFrame, analyzed as one statement."""
+    return events.sparkSession.sql(
+        sessionize_sql("{ev}", user_col, ts_col, order_col, gap_us), ev=events
     )
 
 

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from etl_cnpjs_spark.catalog import table
+from etl_cnpjs_spark.catalog import table, views
 from etl_cnpjs_spark.plans.registry import quantize, quantize_sql, register
 
 
@@ -366,14 +366,12 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-status, and grand total in one pass — Spark expands to a single
     Expand + hash aggregate (one shuffle, partial aggregation map-side).
     gid disambiguates the NULL produced by grouping from a NULL value."""
-    l = table(spark, sf_dir, "lineitem")
-    l.createOrReplaceTempView("__gs_lineitem")
     return spark.sql(
-        """
+        f"""
         SELECT l_returnflag, l_linestatus,
                count(*) AS n,
                CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT) AS gid
-        FROM __gs_lineitem
+        FROM {views(spark, sf_dir)['lineitem']}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         """
     )

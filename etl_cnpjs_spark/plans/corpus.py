@@ -1075,7 +1075,7 @@ def corpus_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "sh",
-            minhash_band_keys(F.col("sh"), bands=8, rows=2).alias("bk"),
+            minhash_band_keys("sh", bands=8, rows=2).alias("bk"),
         )
         # two self-join branches (candidates, verify) — barrier or the
         # 16 min-hash array passes run once per branch

@@ -208,7 +208,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     signed = docs.select(
         "doc_id",
         "sh",
-        minhash_band_keys(F.col("sh"), bands=8, rows=2).alias("bk"),
+        minhash_band_keys("sh", bands=8, rows=2).alias("bk"),
     ).localCheckpoint()
     cands = candidate_pairs(signed, "doc_id", "bk")
     verified = exact_jaccard(cands, signed, "doc_id", "sh")
@@ -563,7 +563,7 @@ def _banded8x2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "sh",
-            minhash_band_keys(F.col("sh"), bands=8, rows=2).alias("bk"),
+            minhash_band_keys("sh", bands=8, rows=2).alias("bk"),
         )
         .localCheckpoint()
     )
@@ -893,7 +893,7 @@ def dedup_minhash_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     signed = docs.select(
         "doc_id",
         "sh",
-        minhash_band_keys(F.col("sh"), bands=8, rows=2).alias("bk"),
+        minhash_band_keys("sh", bands=8, rows=2).alias("bk"),
     ).localCheckpoint()
 
     corpus_postings = (

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from etl_cnpjs_spark.catalog import table
+from etl_cnpjs_spark.catalog import table, views
 from etl_cnpjs_spark.plans.registry import register
 
 
@@ -111,57 +111,44 @@ def dq_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_plans.py pins the rule) screens the fact side. A
     violation count of zero on every rule is the EXPECTED testdata
     state — the rules still execute their full plans."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-
-    dup = (
-        o.groupBy("o_orderkey")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") > 1)
-        .agg(F.count(F.lit(1)).cast("bigint").alias("v"))
+    v = views(spark, sf_dir)
+    return spark.sql(
+        f"""
+        WITH dup AS (
+          SELECT CAST(count(1) AS BIGINT) AS v FROM (
+            SELECT o_orderkey, count(1) AS c FROM {v['orders']} GROUP BY o_orderkey)
+          WHERE c > 1),
+        n_orders AS (
+          SELECT CAST(count(1) AS BIGINT) AS n,
+                 CAST(sum(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+                   AS null_dates
+          FROM {v['orders']}),
+        orphans AS (
+          SELECT CAST(count(1) AS BIGINT) AS v
+          FROM {v['lineitem']} li
+          LEFT ANTI JOIN (SELECT o_orderkey FROM {v['orders']}) o
+            ON li.l_orderkey = o.o_orderkey),
+        li_stats AS (
+          SELECT CAST(count(1) AS BIGINT) AS n,
+                 CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END)
+                   AS BIGINT) AS qty_bad,
+                 CAST(sum(CASE WHEN l_extendedprice < 0 THEN 1 ELSE 0 END) AS BIGINT)
+                   AS neg_price
+          FROM {v['lineitem']})
+        SELECT /*+ BROADCAST(n1) */ 'orders_key_unique' AS rule,
+               dup.v AS n_violations, n1.n AS n_checked
+        FROM dup CROSS JOIN (SELECT n FROM n_orders) n1
+        UNION ALL
+        SELECT /*+ BROADCAST(n2) */ 'lineitem_fk_orders', orphans.v, n2.n
+        FROM orphans CROSS JOIN (SELECT n FROM li_stats) n2
+        UNION ALL
+        SELECT 'quantity_in_1_50', qty_bad, n FROM li_stats
+        UNION ALL
+        SELECT 'orderdate_not_null', null_dates, n FROM n_orders
+        UNION ALL
+        SELECT 'price_non_negative', neg_price, n FROM li_stats
+        """
     )
-    n_orders = o.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("o_orderdate").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("null_dates"),
-    )
-    orphans = (
-        li.join(o.select("o_orderkey"), li.l_orderkey == o.o_orderkey, "left_anti")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("v"))
-    )
-    li_stats = li.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(
-            F.when((F.col("l_quantity") < 1) | (F.col("l_quantity") > 50), 1)
-            .otherwise(0)
-        ).cast("bigint").alias("qty_bad"),
-        F.sum(F.when(F.col("l_extendedprice") < 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("neg_price"),
-    )
-
-    def row(rule, v_col, n_col, frame):
-        return frame.select(
-            F.lit(rule).alias("rule"),
-            F.col(v_col).alias("n_violations"),
-            F.col(n_col).alias("n_checked"),
-        )
-
-    uniq = dup.crossJoin(F.broadcast(n_orders.select("n"))).select(
-        F.lit("orders_key_unique").alias("rule"),
-        F.col("v").alias("n_violations"),
-        F.col("n").alias("n_checked"),
-    )
-    fk = orphans.crossJoin(F.broadcast(li_stats.select("n"))).select(
-        F.lit("lineitem_fk_orders").alias("rule"),
-        F.col("v").alias("n_violations"),
-        F.col("n").alias("n_checked"),
-    )
-    qty = row("quantity_in_1_50", "qty_bad", "n", li_stats)
-    nd = row("orderdate_not_null", "null_dates", "n", n_orders)
-    neg = row("price_non_negative", "neg_price", "n", li_stats)
-    return uniq.unionAll(fk).unionAll(qty).unionAll(nd).unionAll(neg)
 
 
 # --- dq_drift ---------------------------------------------------------------

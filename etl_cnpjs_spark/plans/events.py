@@ -23,8 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from etl_cnpjs_spark.catalog import table
-from etl_cnpjs_spark.operators.relational import sessionize
+from etl_cnpjs_spark.catalog import table, views
+from etl_cnpjs_spark.operators.relational import sessionize_sql
 from etl_cnpjs_spark.plans.registry import quantize, quantize_sql, register
 from etl_cnpjs_spark.streaming.stateful import ATTR_LOOKBACK_H as _ATTR_LOOKBACK_H
 
@@ -118,8 +118,8 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_seq), so EnsureRequirements inserts no second exchange
     (asserted in tests/test_plans.py). At 100 TB this is the scalable
     alternative to collecting per-user event lists."""
-    ev = table(spark, sf_dir, "events")
-    return sessionize(ev, "user_id", "ts", "event_id", _SESSION_GAP_US)
+    src = views(spark, sf_dir)["events"]
+    return spark.sql(sessionize_sql(src, "user_id", "ts", "event_id", _SESSION_GAP_US))
 
 
 # --- events_retention ------------------------------------------------------

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 from pyspark.sql.types import StringType
 
-from etl_cnpjs_spark.catalog import table
+from etl_cnpjs_spark.catalog import table, views
 from etl_cnpjs_spark.plans.registry import quantize, quantize_sql, register
 from etl_cnpjs_spark.serde import pickle_by_value
 
@@ -1568,11 +1568,10 @@ def udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-token docs yield no rows (inner lateral semantics) on both
     engines."""
     spark.udtf.register("__udtf_bigrams", _BigramUDTF)
-    table(spark, sf_dir, "documents").createOrReplaceTempView("__udtf_docs")
     return spark.sql(
-        """
+        f"""
         SELECT d.doc_id, b.pos, b.gram
-        FROM __udtf_docs d, LATERAL __udtf_bigrams(d.text) AS b
+        FROM {views(spark, sf_dir)['documents']} d, LATERAL __udtf_bigrams(d.text) AS b
         """
     )
 

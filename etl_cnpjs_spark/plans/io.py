@@ -32,7 +32,7 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_cnpjs_spark.catalog import table
+from etl_cnpjs_spark.catalog import table, views
 from etl_cnpjs_spark.plans.registry import register
 from etl_cnpjs_spark.sources.sinks import sink_csv, sink_parquet
 from etl_cnpjs_spark.staging import session_tmpdir, staged
@@ -1585,28 +1585,27 @@ def layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     Physical shape: one tiny stats agg broadcast back over the scan, then
     one hash aggregate on zbucket; the Z-arithmetic is pure codegen
     (shift/mask), no UDF."""
-    li = table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("x"), F.col("l_partkey").alias("y")
-    )
-    st = li.agg(
-        F.min("x").alias("minx"),
-        F.max("x").alias("maxx"),
-        F.min("y").alias("miny"),
-        F.max("y").alias("maxy"),
-    )
-    norm = li.crossJoin(F.broadcast(st)).selectExpr(
-        f"((x - minx) * {2**_ZB}) div (maxx - minx + 1) AS xs",
-        f"((y - miny) * {2**_ZB}) div (maxy - miny + 1) AS ys",
-    )
-    zed = norm.selectExpr("xs", "ys", f"{z_value_expr('xs', 'ys')} AS z")
-    return zed.selectExpr(f"z >> {_ZTILE_SHIFT} AS zbucket", "xs", "ys").groupBy("zbucket").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("xs").alias("min_xs"),
-        F.max("xs").alias("max_xs"),
-        F.min("ys").alias("min_ys"),
-        F.max("ys").alias("max_ys"),
-        ((F.min("xs") <= _PROBE_HI) & (F.max("xs") >= _PROBE_LO)).alias("hit_x"),
-        ((F.min("ys") <= _PROBE_HI) & (F.max("ys") >= _PROBE_LO)).alias("hit_y"),
+    v = views(spark, sf_dir)
+    return spark.sql(
+        f"""
+        WITH li AS (SELECT l_orderkey AS x, l_partkey AS y FROM {v['lineitem']}),
+        st AS (SELECT min(x) AS minx, max(x) AS maxx, min(y) AS miny, max(y) AS maxy
+               FROM li),
+        norm AS (
+          SELECT /*+ BROADCAST(st) */
+                 ((x - minx) * {2**_ZB}) div (maxx - minx + 1) AS xs,
+                 ((y - miny) * {2**_ZB}) div (maxy - miny + 1) AS ys
+          FROM li CROSS JOIN st),
+        zed AS (SELECT xs, ys, {z_value_expr('xs', 'ys')} AS z FROM norm)
+        SELECT zbucket,
+               count(1) AS n,
+               min(xs) AS min_xs, max(xs) AS max_xs,
+               min(ys) AS min_ys, max(ys) AS max_ys,
+               (min(xs) <= {_PROBE_HI} AND max(xs) >= {_PROBE_LO}) AS hit_x,
+               (min(ys) <= {_PROBE_HI} AND max(ys) >= {_PROBE_LO}) AS hit_y
+        FROM (SELECT z >> {_ZTILE_SHIFT} AS zbucket, xs, ys FROM zed)
+        GROUP BY zbucket
+        """
     )
 
 

@@ -29,14 +29,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from etl_cnpjs_spark.catalog import table
+from etl_cnpjs_spark.catalog import table, views
 from etl_cnpjs_spark.operators.relational import (
     dedup_keep_latest,
     filter_in_lists,
     interval_overlap_join,
     join_asof,
     point_in_interval_join,
-    star_join,
     top_k,
 )
 from etl_cnpjs_spark.plans.dedup import _SQL_PAIRS, _exact_pairs
@@ -103,33 +102,30 @@ _FLAGSHIP_COLS = [
     tags=("reference", "join", "filter", "projection"),
 )
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """20-col star-join prospecting query — QUERY_FINAL's exact shape.
+    """20-col star-join prospecting query — QUERY_FINAL's exact shape,
+    and like QUERY_FINAL one SQL statement over the session views.
 
     Physical plan at scale: lineitem⋈orders is the one big-big join
     (shuffle, AQE-managed — the empresas⋈estabelecimentos analog);
     customer is mid-sized (AQE promotes to broadcast when small);
-    nation/region are bounded dims → always broadcast, replacing the
-    reference's secondary-index nested loops (etl.py:176-182). The three
-    IN-lists push down to the parquet scans.
+    nation/region are bounded dims → always broadcast by hint, replacing
+    the reference's secondary-index nested loops (etl.py:176-182). The
+    three IN-lists push down to the parquet scans.
     """
-    lineitem = table(spark, sf_dir, "lineitem")
-    orders = table(spark, sf_dir, "orders")
-    customer = table(spark, sf_dir, "customer")
-    nation = table(spark, sf_dir, "nation")
-    region = table(spark, sf_dir, "region")
-
-    joined = star_join(
-        filter_in_lists(lineitem, {"l_partkey": PART_KEYS_LITERALS}),
-        [
-            (filter_in_lists(orders, {"o_orderstatus": ORDER_STATUSES}),
-             F.col("l_orderkey") == F.col("o_orderkey"), False),
-            (customer, F.col("o_custkey") == F.col("c_custkey"), False),
-            (filter_in_lists(nation, {"n_nationkey": NATION_KEYS}),
-             F.col("c_nationkey") == F.col("n_nationkey"), True),
-            (region, F.col("n_regionkey") == F.col("r_regionkey"), True),
-        ],
+    v = views(spark, sf_dir)
+    return spark.sql(
+        f"""
+        SELECT /*+ BROADCAST(n, r) */ {', '.join(_FLAGSHIP_COLS)}
+        FROM {v['lineitem']} l
+        JOIN {v['orders']} o   ON l_orderkey = o_orderkey
+        JOIN {v['customer']} c ON o_custkey = c_custkey
+        JOIN {v['nation']} n   ON c_nationkey = n_nationkey
+        JOIN {v['region']} r   ON n_regionkey = r_regionkey
+        WHERE l_partkey IN ({','.join(map(str, PART_KEYS_LITERALS))})
+          AND o_orderstatus IN ({','.join(f"'{s}'" for s in ORDER_STATUSES)})
+          AND n_nationkey IN ({','.join(map(str, NATION_KEYS))})
+        """
     )
-    return joined.select(*_FLAGSHIP_COLS)
 
 
 # --- projection (O13) ------------------------------------------------------
@@ -867,15 +863,14 @@ def sql_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins (tests/test_plans.py asserts both appear in the physical plan,
     no nested-loop re-execution per row). The rewrite IS the scale
     property: a naive correlated execution is O(rows × subquery)."""
-    table(spark, sf_dir, "customer").createOrReplaceTempView("__sq_customer")
-    table(spark, sf_dir, "orders").createOrReplaceTempView("__sq_orders")
+    v = views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT c_custkey, c_name
-        FROM __sq_customer c
-        WHERE EXISTS (SELECT 1 FROM __sq_orders o
+        FROM {v['customer']} c
+        WHERE EXISTS (SELECT 1 FROM {v['orders']} o
                       WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-          AND NOT EXISTS (SELECT 1 FROM __sq_orders o2
+          AND NOT EXISTS (SELECT 1 FROM {v['orders']} o2
                           WHERE o2.o_custkey = c.c_custkey AND o2.o_orderstatus = 'F')
         """
     )
@@ -897,14 +892,13 @@ def sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst decorrelates to one aggregate over orders + a left outer
     join — the subquery runs ONCE, not per outer row. NULL for
     order-less customers survives the rewrite (outer join, not inner)."""
-    table(spark, sf_dir, "customer").createOrReplaceTempView("__sq_customer")
-    table(spark, sf_dir, "orders").createOrReplaceTempView("__sq_orders")
+    v = views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT c_custkey,
-               (SELECT max(o.o_totalprice) FROM __sq_orders o
+               (SELECT max(o.o_totalprice) FROM {v['orders']} o
                 WHERE o.o_custkey = c.c_custkey) AS max_order
-        FROM __sq_customer c
+        FROM {v['customer']} c
         WHERE c_nationkey = 3
         """
     )
@@ -1048,13 +1042,12 @@ def sql_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a relational plan (no nested-loop re-execution per customer) —
     same result as the window_topk_group formulation, different surface.
     Deterministic via the (o_totalprice, o_orderkey) total order."""
-    table(spark, sf_dir, "customer").createOrReplaceTempView("__lat_customer")
-    table(spark, sf_dir, "orders").createOrReplaceTempView("__lat_orders")
+    v = views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-        FROM __lat_customer c, LATERAL (
-          SELECT o_orderkey, o_totalprice FROM __lat_orders o
+        FROM {v['customer']} c, LATERAL (
+          SELECT o_orderkey, o_totalprice FROM {v['orders']} o
           WHERE o.o_custkey = c.c_custkey
           ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
         """
@@ -1162,74 +1155,48 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted. No per-row probe join, no range join, state is one value
     per direction — this is the shape that survives a billion-event
     partition. Both engines run the identical window program."""
-    ev = table(spark, sf_dir, "events")
-    from pyspark.sql import Window as W
-
-    pr = ev.filter(F.col("event_type") == "purchase")
-    rn = F.row_number().over(
-        W.partitionBy("user_id", "ts").orderBy(F.desc("event_id"))
-    )
-    p = (
-        pr.select("user_id", "ts", "event_id", rn.alias("rn"))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        "ts",
-        F.lit(0).alias("kind"),
-        "event_id",
-        F.lit(None).cast("long").alias("p_id"),
-    )
-    purch = p.select(
-        "user_id",
-        "ts",
-        F.lit(1).alias("kind"),
-        "event_id",
-        F.col("event_id").alias("p_id"),
-    )
-    u = clicks.unionAll(purch)
-    order = [F.col("ts"), F.col("kind").desc(), F.col("event_id")]
-    wb = (
-        W.partitionBy("user_id")
-        .orderBy(*order)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    # forward candidate as a RUNNING frame over the exactly-reversed
-    # order, ending one row before current ((1, +inf) frames are the
-    # quadratic shrinking-frame class — see events_interpolate_linear)
-    order_desc = [F.col("ts").desc(), F.col("kind"), F.col("event_id").desc()]
-    wfd = (
-        W.partitionBy("user_id")
-        .orderBy(*order_desc)
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    p_ts = F.when(F.col("kind") == 1, F.col("ts"))
-    w = u.select(
-        "user_id",
-        "ts",
-        "kind",
-        "event_id",
-        F.last(p_ts, ignorenulls=True).over(wb).alias("back_ts"),
-        F.last(F.col("p_id"), ignorenulls=True).over(wb).alias("back_id"),
-        F.last(p_ts, ignorenulls=True).over(wfd).alias("fwd_ts"),
-        F.last(F.col("p_id"), ignorenulls=True).over(wfd).alias("fwd_id"),
-    )
-    back_d = F.unix_micros(F.col("ts")) - F.unix_micros(F.col("back_ts"))
-    fwd_d = F.unix_micros(F.col("fwd_ts")) - F.unix_micros(F.col("ts"))
-    return w.filter(F.col("kind") == 0).select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.when(F.col("fwd_ts").isNull(), F.col("back_id"))
-        .when(F.col("back_ts").isNull(), F.col("fwd_id"))
-        .when(back_d <= fwd_d, F.col("back_id"))
-        .otherwise(F.col("fwd_id"))
-        .alias("near_p_id"),
-        F.when(F.col("fwd_ts").isNull(), back_d)
-        .when(F.col("back_ts").isNull(), fwd_d)
-        .otherwise(F.least(back_d, fwd_d))
-        .alias("near_diff_us"),
+    # back_* is the running frame (to the current row); fwd_* is the
+    # running frame over the exactly-reversed order, ending one row before
+    # current ((1, +inf) frames are the quadratic shrinking-frame class —
+    # see events_interpolate_linear)
+    ev = views(spark, sf_dir)["events"]
+    back_d = "unix_micros(ts) - unix_micros(back_ts)"
+    fwd_d = "unix_micros(fwd_ts) - unix_micros(ts)"
+    return spark.sql(
+        f"""
+        WITH p AS (
+          SELECT user_id, ts, event_id FROM (
+            SELECT user_id, ts, event_id,
+                   row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
+            FROM {ev} WHERE event_type = 'purchase')
+          WHERE rn = 1),
+        u AS (
+          SELECT user_id, ts, 0 AS kind, event_id, CAST(NULL AS BIGINT) AS p_id
+          FROM {ev} WHERE event_type = 'click'
+          UNION ALL
+          SELECT user_id, ts, 1 AS kind, event_id, event_id AS p_id FROM p),
+        w AS (
+          SELECT user_id, ts, kind, event_id,
+                 last(CASE WHEN kind = 1 THEN ts END, true) OVER wb AS back_ts,
+                 last(p_id, true) OVER wb AS back_id,
+                 last(CASE WHEN kind = 1 THEN ts END, true) OVER wfd AS fwd_ts,
+                 last(p_id, true) OVER wfd AS fwd_id
+          FROM u
+          WINDOW
+            wb AS (PARTITION BY user_id ORDER BY ts, kind DESC, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+            wfd AS (PARTITION BY user_id ORDER BY ts DESC, kind, event_id DESC
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
+        SELECT event_id, user_id, ts,
+               CASE WHEN fwd_ts IS NULL THEN back_id
+                    WHEN back_ts IS NULL THEN fwd_id
+                    WHEN {back_d} <= {fwd_d} THEN back_id
+                    ELSE fwd_id END AS near_p_id,
+               CASE WHEN fwd_ts IS NULL THEN {back_d}
+                    WHEN back_ts IS NULL THEN {fwd_d}
+                    ELSE least({back_d}, {fwd_d}) END AS near_diff_us
+        FROM w WHERE kind = 0
+        """
     )
 
 
@@ -2084,15 +2051,12 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan, AQE free to broadcast the dimension side) — pipe syntax
     is sugar over the identical logical operators, so every plan-shape
     guarantee elsewhere in the registry carries over unchanged."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("__pipe_orders")
-    table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "__pipe_customer"
-    )
+    v = views(spark, sf_dir)
     return spark.sql(
-        """
-        FROM __pipe_orders
+        f"""
+        FROM {v['orders']}
         |> WHERE o_totalprice > 100000
-        |> JOIN __pipe_customer ON o_custkey = c_custkey
+        |> JOIN {v['customer']} ON o_custkey = c_custkey
         |> AGGREGATE CAST(count(*) AS BIGINT) AS n_orders,
                      CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
                                    AS BIGINT)) AS BIGINT) AS sum_cents
@@ -2205,19 +2169,18 @@ def sql_not_in_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     that's a broadcast of the whole set and per-row null logic, one
     more reason production filters should be written NOT EXISTS (plain
     anti join, hash-partitionable). The contract here IS the lesson."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("__nn_orders")
-    table(spark, sf_dir, "customer").createOrReplaceTempView("__nn_customer")
+    v = views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         WITH s AS (
           SELECT CASE WHEN c_acctbal < 0 THEN c_custkey END AS k
-          FROM __nn_customer
+          FROM {v['customer']}
         )
         SELECT
-          CAST((SELECT count(*) FROM __nn_orders
+          CAST((SELECT count(*) FROM {v['orders']}
                 WHERE o_custkey NOT IN (SELECT k FROM s)) AS BIGINT)
             AS n_not_in,
-          CAST((SELECT count(*) FROM __nn_orders o
+          CAST((SELECT count(*) FROM {v['orders']} o
                 WHERE NOT EXISTS (SELECT 1 FROM s WHERE s.k = o.o_custkey))
                AS BIGINT) AS n_not_exists,
           CAST((SELECT count(*) FROM s WHERE k IS NULL) > 0 AS BOOLEAN)

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_cnpjs_spark.catalog import table
+from etl_cnpjs_spark.catalog import scan_parallelism, table, table_path, views
 from etl_cnpjs_spark.plans.registry import register
 
 
@@ -75,22 +75,23 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10. Physical: customer (filtered) broadcasts under AQE; the
     orders⋈lineitem join shuffles on the shared orderkey so the groupBy
     on l_orderkey reuses that partitioning."""
-    c = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-06-01")
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1998-06-01")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(_rev_dec().alias("rev_dec"))
-        .orderBy(F.desc("rev_dec"), "l_orderkey")
-        .limit(10)
-        .select(
-            "l_orderkey",
-            F.col("rev_dec").cast("double").alias("revenue"),
-            "o_orderdate",
-            "o_orderpriority",
-        )
+    v = views(spark, sf_dir)
+    return spark.sql(
+        f"""
+        SELECT l_orderkey, CAST(rev_dec AS DOUBLE) AS revenue,
+               o_orderdate, o_orderpriority
+        FROM (
+          SELECT l_orderkey, o_orderdate, o_orderpriority, {_REV_SQL} AS rev_dec
+          FROM {v['customer']}
+            JOIN {v['orders']}   ON c_custkey = o_custkey
+            JOIN {v['lineitem']} ON o_orderkey = l_orderkey
+          WHERE c_mktsegment = 'BUILDING'
+            AND o_orderdate < '1998-06-01'
+            AND l_shipdate > '1998-06-01'
+          GROUP BY l_orderkey, o_orderdate, o_orderpriority
+          ORDER BY rev_dec DESC, l_orderkey
+          LIMIT 10)
+        """
     )
 
 
@@ -446,27 +447,30 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum (cast to double) by the group count so both engines perform the
     same single IEEE division; sum_charge keeps the oracle's left-assoc
     product order so the double multiplies are bit-identical."""
-    li = table(spark, sf_dir, "lineitem", parallel=True).filter(F.col("l_shipdate") <= "2001-09-02")
+    v = views(spark, sf_dir)
+    n = scan_parallelism(spark, table_path(sf_dir, "lineitem"))
+    hint = f"/*+ REPARTITION({n}) */ " if n else ""
 
-    def _sdec(c: F.Column) -> F.Column:
-        return F.sum(c.cast(_DEC))
+    def sdec(c: str) -> str:
+        return f"SUM(CAST({c} AS {_DEC}))"
 
-    n = F.count(F.lit(1))
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            _sdec(F.col("l_quantity")).cast("double").alias("sum_qty"),
-            _sdec(F.col("l_extendedprice")).cast("double").alias("sum_base_price"),
-            _rev_dec().cast("double").alias("sum_disc_price"),
-            _sdec(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))
-            ).cast("double").alias("sum_charge"),
-            (_sdec(F.col("l_quantity")).cast("double") / n).alias("avg_qty"),
-            (_sdec(F.col("l_extendedprice")).cast("double") / n).alias("avg_price"),
-            (_sdec(F.col("l_discount")).cast("double") / n).alias("avg_disc"),
-            n.alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
+    return spark.sql(
+        f"""
+        SELECT l_returnflag, l_linestatus,
+               CAST({sdec('l_quantity')} AS DOUBLE) AS sum_qty,
+               CAST({sdec('l_extendedprice')} AS DOUBLE) AS sum_base_price,
+               CAST({_REV_SQL} AS DOUBLE) AS sum_disc_price,
+               CAST({sdec('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS DOUBLE)
+                 AS sum_charge,
+               CAST({sdec('l_quantity')} AS DOUBLE) / count(1) AS avg_qty,
+               CAST({sdec('l_extendedprice')} AS DOUBLE) / count(1) AS avg_price,
+               CAST({sdec('l_discount')} AS DOUBLE) / count(1) AS avg_disc,
+               count(1) AS count_order
+        FROM (SELECT {hint}* FROM {v['lineitem']})
+        WHERE l_shipdate <= '2001-09-02'
+        GROUP BY l_returnflag, l_linestatus
+        ORDER BY l_returnflag, l_linestatus
+        """
     )
 
 
@@ -733,7 +737,7 @@ def _lineitem_dated(
 
     ``parallel`` (r13): q21 opts in — its order-grain count_distinct
     aggregate does heavy map-side work before the first exchange, and
-    the scan is single-row-group-serial (catalog.maybe_parallelize_scan);
+    the scan is single-row-group-serial (catalog.scan_parallelism);
     q12's first op is a join exchange with a trivial map side, where the
     extra repartition measured +0.1 s, so it stays off by default."""
     return table(spark, sf_dir, "lineitem", parallel=parallel).select(

@@ -8,9 +8,9 @@ application through one memo, ``@staged(name)``:
 - The key is ``(applicationId, args)``: checkpoint blocks and temp views
   die with their application, so a new session never sees a dead entry.
 - Each entry carries a fingerprint, ``(name, size, mtime_ns)`` of every
-  argument that is a path on disk (a file, or each entry of a
-  directory). A call whose fingerprint differs rebuilds and replaces the
-  entry, so a rewritten fixture invalidates itself.
+  argument that is a path on disk (a file, or each entry of a directory
+  and of its subdirectories). A call whose fingerprint differs rebuilds
+  and replaces the entry, so a rewritten fixture invalidates itself.
 - ``per_session=True`` is for a build whose product is session state
   (temp views): one entry per application, rebuilt and replaced when
   called with other arguments.
@@ -37,6 +37,20 @@ from collections.abc import Callable
 REGISTRY: dict[str, Stager] = {}
 
 
+def _dir_entries(path: str) -> list:
+    """(name, stat) of each entry of a directory and of each entry of its
+    subdirectories: a catalog directory's tables may be files or
+    directories of part files, and a rewrite of either must show."""
+    out = []
+    with os.scandir(path) as it:
+        for e in it:
+            out.append((e.name, e.stat()))
+            if e.is_dir():
+                with os.scandir(e.path) as sub:
+                    out += [(f"{e.name}/{s.name}", s.stat()) for s in sub]
+    return out
+
+
 def _fingerprint(args: tuple) -> tuple:
     """(name, size, mtime_ns) of each argument that is a path on disk."""
     out = []
@@ -46,8 +60,7 @@ def _fingerprint(args: tuple) -> tuple:
         try:
             st = os.stat(a)
             if stat.S_ISDIR(st.st_mode):
-                with os.scandir(a) as it:
-                    entries = [(e.name, e.stat()) for e in it]
+                entries = _dir_entries(a)
             else:
                 entries = [(os.path.basename(a), st)]
         except OSError:  # not a path, or gone: nothing to fingerprint

@@ -158,7 +158,7 @@ def test_funnel_lsh_recall_on_cleaned_text(spark, fixture_dir, sf_dir):
             for r in jaccard_pairs(sh, "doc_id", "sh", JACCARD_THRESHOLD).collect()
         }
         signed = sh.select(
-            "doc_id", "sh", minhash_band_keys(F.col("sh"), 8, 2).alias("bk")
+            "doc_id", "sh", minhash_band_keys("sh", 8, 2).alias("bk")
         ).localCheckpoint()
         lsh = {
             (int(r.i), int(r.j))
@@ -171,3 +171,28 @@ def test_funnel_lsh_recall_on_cleaned_text(spark, fixture_dir, sf_dir):
         assert lsh == exact, f"{d}: LSH missed {exact - lsh} / invented {lsh - exact}"
         if expect_pair is not None:
             assert exact == expect_pair
+
+
+# sha256 over sorted (doc_id, band keys) of the sf0.001 documents, computed
+# with the per-function lambda form of minhash_band_keys that the one-SQL-
+# expression form replaced: the band keys must not move by a bit.
+_BAND_KEYS_SF0001_SHA256 = "526e0a4e92dbc28014d4671e1b3d11c110a2d29544c58e8de057514b25cbf1a1"
+
+
+def test_band_keys_pinned(spark):
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from etl_cnpjs_spark.catalog import table
+    from etl_cnpjs_spark.functions.text import shingles, tokens
+    from etl_cnpjs_spark.operators.dedup import minhash_band_keys
+    from tests.conftest import SMOKE_SF_DIR
+
+    sh = table(spark, SMOKE_SF_DIR, "documents").select(
+        "doc_id", shingles(tokens(F.col("text"))).alias("sh")
+    )
+    rows = sh.select("doc_id", minhash_band_keys("sh", 8, 2).alias("bk")).collect()
+    got = sorted((r.doc_id, list(r.bk)) for r in rows)
+    assert len(got) == 500
+    assert hashlib.sha256(repr(got).encode()).hexdigest() == _BAND_KEYS_SF0001_SHA256

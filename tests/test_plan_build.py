@@ -1,0 +1,57 @@
+"""Plan construction cost: the plans written as one SQL statement over the
+session views build with a handful of py4j round trips and launch no job.
+
+The round-trip count is deterministic, unlike wall time: every DataFrame
+step or ``F.*`` call is one or more round trips, so a body that slides
+back into a DataFrame chain fails here. Counted by wrapping py4j's
+``ClientServerConnection.send_command`` around one build on a warm
+session. Only commands sent from the building thread count: py4j's
+finalizer thread releases garbage-collected objects of earlier work
+through the same method at times of its own choosing.
+"""
+
+from __future__ import annotations
+
+import threading
+
+import pytest
+from py4j.clientserver import ClientServerConnection
+
+from etl_cnpjs_spark.plans import QUERIES
+
+ONE_STATEMENT_KEYS = [
+    "flagship",
+    "tpch_q3",
+    "dq_check",
+    "events_sessionize",
+    "layout_zorder",
+    "join_asof_nearest",
+    "tpch_q1",
+]
+
+PY4J_BUDGET = 20
+
+
+@pytest.mark.parametrize("key", ONE_STATEMENT_KEYS)
+def test_one_statement_build_budget(spark, sf_dir, key, monkeypatch):
+    fn = QUERIES[key].fn
+    fn(spark, sf_dir).schema  # noqa: B018 - warm: stagers, views, footers
+    sc = spark.sparkContext
+    group = f"build-budget-{key}"
+    sc.setJobGroup(group, group)
+    calls = []
+    send = ClientServerConnection.send_command
+    building_thread = threading.get_ident()
+
+    def counting(self, command):
+        if threading.get_ident() == building_thread:
+            calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    fn(spark, sf_dir)
+    monkeypatch.undo()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(calls) <= PY4J_BUDGET, f"{key}: {len(calls)} py4j round trips"
+    assert list(jobs) == [], f"{key}: build launched jobs {list(jobs)}"

@@ -1,6 +1,7 @@
 """Plan layout guards: every registered key lives in the family module its
-name prefix selects, plans/ holds exactly those family modules, and the
-rest of the package never imports the registry.
+name prefix selects, plans/ holds exactly those family modules, the rest
+of the package never imports the registry, and round-named test files
+already split into family test files stay gone.
 
 The prefix → family table lives only here. Adding a key with a new prefix
 means adding the prefix to one family below (or a new family module).
@@ -122,3 +123,13 @@ def test_streaming_library_import_leaves_registry_unloaded():
         timeout=120,
     )
     assert out.stdout.strip() == "[]", out.stdout
+
+
+# Round-named test files whose tests now live in family test files
+# (tests/test_<family>.py). ROADMAP item 3 moves the rest batch by batch.
+MOVED_ROUND_TEST_FILES = ("test_adversarial_r8.py",)
+
+
+def test_moved_round_test_files_stay_gone():
+    present = [f for f in MOVED_ROUND_TEST_FILES if os.path.exists(os.path.join(ROOT, "tests", f))]
+    assert not present, present

@@ -126,7 +126,7 @@ def test_minhash_lsh_precision_exact(spark, docs):
         .filter(F.size("sh") > 0)
     )
     signed = sdf.select(
-        "doc_id", "sh", minhash_band_keys(F.col("sh"), bands=8, rows=2).alias("bk")
+        "doc_id", "sh", minhash_band_keys("sh", bands=8, rows=2).alias("bk")
     )
     cands = candidate_pairs(signed, "doc_id", "bk")
     got = exact_jaccard(cands, signed, "doc_id", "sh").filter(F.col("jaccard") >= 0.8)

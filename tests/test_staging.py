@@ -5,15 +5,18 @@ cross-process disk stage's manifest check."""
 from __future__ import annotations
 
 import ast
+import inspect
 import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from etl_cnpjs_spark import staging
-from etl_cnpjs_spark.catalog import table
+from etl_cnpjs_spark.catalog import table, views
 from etl_cnpjs_spark.plans import QUERIES, cnpj_parity
 from tests.compare import assert_frames_match
+from tests.conftest import SMOKE_SF_DIR
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "etl_cnpjs_spark")
 
@@ -107,6 +110,71 @@ def test_deleted_shard_is_restaged(spark, oracle_con, sf_dir):
     got = spec.fn(spark, sf_dir).toPandas()
     assert len(got) > 0
     assert_frames_match(got, oracle_con.execute(spec.oracle).df(), "cnpj_flagship")
+
+
+def _write_orders(path: str, totals: list[float], as_dir: bool) -> None:
+    """An orders table (o_custkey, o_totalprice) as one file, or as a
+    directory holding one part file, rewritten in place."""
+    t = pa.table({
+        "o_custkey": pa.array(range(len(totals)), pa.int64()),
+        "o_totalprice": pa.array(totals, pa.float64()),
+    })
+    if as_dir:
+        os.makedirs(path, exist_ok=True)
+        path = os.path.join(path, "part-0.parquet")
+    pq.write_table(t, path)
+
+
+@pytest.mark.parametrize("as_dir", [False, True], ids=["file", "dir"])
+def test_views_follow_in_place_rewrite(spark, tmp_path, as_dir):
+    """A table rewritten in place, as a file or as a part file of a table
+    directory, is what the next plan built over the views reads."""
+    sf = str(tmp_path)
+    path = os.path.join(sf, "orders.parquet")
+
+    def max_total() -> float:
+        v = views(spark, sf)
+        return spark.sql(f"SELECT max(o_totalprice) AS m FROM {v['orders']}").first().m
+
+    _write_orders(path, [1.0, 2.0], as_dir)
+    assert max_total() == 2.0
+    builds = staging.REGISTRY["views"].builds
+    _write_orders(path, [1.0, 2.0, 30.0], as_dir)
+    assert max_total() == 30.0
+    assert staging.REGISTRY["views"].builds == builds + 1
+
+
+def test_views_keep_each_sf_dir_apart(spark, sf_dir):
+    """sf A → B → A in one session: every plan reads its own catalog,
+    and plans built before the switch still read theirs."""
+    a, b = SMOKE_SF_DIR, sf_dir
+    plan = QUERIES["tpch_q3"].fn
+
+    first_a = plan(spark, a)
+    rows_a = sorted(first_a.collect())
+    rows_b = sorted(plan(spark, b).collect())
+    assert rows_a != rows_b
+    assert sorted(plan(spark, a).collect()) == rows_a
+    assert sorted(first_a.collect()) == rows_a
+    assert views(spark, a)["orders"] != views(spark, b)["orders"]
+
+
+def test_views_is_a_per_sf_stager():
+    """bench.py's prewarm loop stages every per-sf stager as
+    stage_<name>; the views stager is one of them."""
+    assert staging.REGISTRY["views"] is views
+    assert views.per_sf
+    assert list(inspect.signature(views.fn).parameters) == ["spark", "sf_dir"]
+
+
+def test_sql_self_join_over_one_view(spark, sf_dir):
+    """Two SQL aliases of one view resolve as a self-join."""
+    v = views(spark, sf_dir)["orders"]
+    n = spark.table(v).count()
+    got = spark.sql(
+        f"SELECT count(*) AS n FROM {v} a JOIN {v} b ON a.o_orderkey = b.o_orderkey"
+    ).first().n
+    assert got == n
 
 
 def test_stage_root_is_private():

@@ -930,7 +930,7 @@ def test_stream_static_lsh_probe_matches_batch_incremental(spark, sf_dir, tmp_pa
     # static side: corpus postings + shingle arrays (what a production
     # pipeline maintains as a bucketed table — dedup_minhash_persist)
     signed = _doc_shingles(spark, sf_dir).select(
-        "doc_id", "sh", minhash_band_keys(F.col("sh"), bands=8, rows=2).alias("bk")
+        "doc_id", "sh", minhash_band_keys("sh", bands=8, rows=2).alias("bk")
     )
     corpus = signed.filter(F.col("doc_id") < _INCR_SPLIT).localCheckpoint()
     corpus_posts = corpus.select(
@@ -951,7 +951,7 @@ def test_stream_static_lsh_probe_matches_batch_incremental(spark, sf_dir, tmp_pa
         F.col("doc_id").alias("new_id"), shingles(toks).alias("shb")
     ).filter(F.size("shb") > 0)
     stream_posts = stream_signed.select(
-        "new_id", "shb", F.posexplode(minhash_band_keys(F.col("shb"), bands=8, rows=2)).alias("band", "key")
+        "new_id", "shb", F.posexplode(minhash_band_keys("shb", bands=8, rows=2)).alias("band", "key")
     )
     cands = (
         stream_posts.join(corpus_posts, ["band", "key"])
@@ -1029,7 +1029,7 @@ def _ingest_screen_fn(static_posts, static_sh, write_outcomes):
         posts = meta.filter(F.size("shb") > 0).select(
             "doc_id",
             F.posexplode(
-                minhash_band_keys(F.col("shb"), bands=8, rows=2)
+                minhash_band_keys("shb", bands=8, rows=2)
             ).alias("band", "key"),
         )
         cands = (
@@ -1078,7 +1078,7 @@ def _ingest_static_side(spark, sf_dir, tmp_path):
         .select(
             "doc_id",
             "sh",
-            minhash_band_keys(F.col("sh"), bands=8, rows=2).alias("bk"),
+            minhash_band_keys("sh", bands=8, rows=2).alias("bk"),
         )
     )
     posts_dir = str(tmp_path / "corpus_posts")

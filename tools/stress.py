@@ -91,7 +91,7 @@ def main() -> None:
             .localCheckpoint()
         )
         signed = sh.select(
-            "doc_id", "sh", minhash_band_keys(F.col("sh"), 8, 2).alias("bk")
+            "doc_id", "sh", minhash_band_keys("sh", 8, 2).alias("bk")
         ).localCheckpoint()
         cands = candidate_pairs(signed, "doc_id", "bk")
         return exact_jaccard(cands, signed, "doc_id", "sh").filter(
