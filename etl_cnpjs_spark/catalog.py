@@ -114,103 +114,88 @@ def scan_parallelism(spark: SparkSession, path: str) -> int:
     return n if groups < n and nbytes >= SCAN_PARALLELIZE_MIN_BYTES else 0
 
 
-# --- session-scoped schema memo (r14, guide §6 / VERDICT r13 #1) ------------
+# --- session views: one read per catalog table per session ------------------
 #
-# Re-running parquet footer SCHEMA INFERENCE (plus the dtypes round trip
-# that decides the timestamp normalization) on every table() call cost
-# ~0.09 s per call, about a third of a tail key's wall time at sf0.1. A
-# production engine declares its table schemas ONCE per session in a
-# catalog, so this stager keeps the inferred schema and normalization
-# plan per (application, path). Every call still runs a fresh
-# spark.read.schema(cached).parquet(path) — ~0.02 s — so each call gets a
-# fresh relation with fresh expression ids: a memoized DataFrame handle
-# was tried first and broke Spark's ambiguous-self-join check on
-# tpch_q2/q11, where two branches join the same base table. Nothing is
-# materialized; every execution re-lists and re-scans the input. The
-# stager's path fingerprint makes a fixture rewritten in place — with
-# another schema or timestamp encoding — re-infer on its next read.
+# The reference loads each table once into its catalog and then queries it
+# by name. Here each catalog table is read once per (session, table path)
+# by the ``view`` stager: it infers the schema from the parquet footer,
+# normalizes the timestamps, and registers the result as a temp view
+# ``__cat_<sha1(abs dir)[:10]>_<table>``. ``table()`` and ``views()`` both
+# return that view, so plans written as DataFrame chains and plans written
+# as one ``spark.sql`` statement read the same relation, and nothing
+# re-reads a footer or re-applies a fix per call.
+#
+# - Names carry a digest of the absolute catalog directory, so two
+#   catalog directories can live in one session.
+# - A view keeps the file listing it was registered with. The stager's
+#   fingerprint covers the table file, and each part file of a table
+#   stored as a directory, so a table rewritten in place (even with
+#   another schema or timestamp encoding) re-registers its view on the
+#   next plan built. Nothing is materialized: every execution re-scans.
+# - Every handle on one view carries the same expression ids. A self-join
+#   must alias both sides and reference columns through the aliases:
+#   ``a.alias("a").join(b.alias("b"), F.col("a.c") == F.col("b.c"))``, or
+#   two SQL aliases of the view. A condition ``a["c"] == b["c"]`` between
+#   two handles fails as ambiguous (the tpch_q2 / tpch_q11 trap).
+#   ``toDF(*cols)`` gives fresh ids too, but costs a re-analysis per call.
+#
+# Timestamp normalization (the test data is regenerated between rounds and
+# has shipped two physical encodings so far):
+#
+# - INT64 TIMESTAMP(NANOS) (round-1 ``events.ts``): Spark's reader rejects
+#   it ([PARQUET_TYPE_ILLEGAL]); read nanos as long (runtime conf) and
+#   floor-divide to microseconds — the same truncation DuckDB applies when
+#   it narrows ns → µs.
+# - naive µs (``isAdjustedToUTC=false``, round-2 ``events.ts`` /
+#   ``l_shipdate`` / ``o_orderdate``): Spark reads TIMESTAMP_NTZ, which
+#   fails analysis against TIMESTAMP literals/functions used throughout
+#   the plans. Cast to session-tz TIMESTAMP; sessions run with tz=UTC, so
+#   the wall-clock values are preserved bit-exactly and match DuckDB's
+#   naive reading.
 
 
-@staged("table_meta")
-def _table_meta(spark: SparkSession, path: str) -> tuple[object, tuple[tuple[str, str], ...]]:
-    """(inferred schema, timestamp fixes) of one parquet table."""
+@staged("view")
+def _view(spark: SparkSession, path: str) -> str:
+    """Register the parquet table at ``path`` as a session temp view with
+    its timestamps normalized; returns the view name."""
+    sf_dir, fname = os.path.split(path)
+    name = fname.removesuffix(".parquet")
+    tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
-    fixes = []
     dtypes = df.dtypes
-    if os.path.basename(path) == "events.parquet" and dict(dtypes).get("ts") == "bigint":
-        fixes.append(("ts", "nanos_as_long"))
-    for col, dtype in dtypes:
-        if dtype == "timestamp_ntz":
-            fixes.append((col, "ntz_cast"))
-    return df.schema, tuple(fixes)
+    fixes = {c: F.col(c).cast("timestamp") for c, t in dtypes if t == "timestamp_ntz"}
+    if name == "events" and dict(dtypes).get("ts") == "bigint":
+        fixes["ts"] = F.timestamp_micros(F.expr("ts div 1000"))
+    if fixes:
+        df = df.withColumns(fixes)
+    view = f"__cat_{tag}_{name}"
+    df.createOrReplaceTempView(view)
+    return view
 
 
 def table(
     spark: SparkSession, sf_dir: str, name: str, parallel: bool = False
 ) -> DataFrame:
-    """Read one catalog table. Schema comes from the parquet footer —
-    declared at write time, never re-inferred (SURVEY.md §1.2).
-
-    Timestamp normalization (the driver regenerates the testdata between
-    rounds and has shipped two physical encodings so far):
-
-    - INT64 TIMESTAMP(NANOS) (round-1 ``events.ts``): Spark's reader
-      rejects it ([PARQUET_TYPE_ILLEGAL]); read nanos as long (runtime
-      conf) and floor-divide to microseconds — the same truncation DuckDB
-      applies when it narrows ns → µs.
-    - naive µs (``isAdjustedToUTC=false``, round-2 ``events.ts`` /
-      ``l_shipdate`` / ``o_orderdate``): Spark reads TIMESTAMP_NTZ, which
-      fails analysis against TIMESTAMP literals/functions used throughout
-      the plans. Cast to session-tz TIMESTAMP; this environment (and the
-      driver) run with tz=UTC so the wall-clock values are preserved
-      bit-exactly and match DuckDB's naive reading.
-
-    Every plan goes through this loader, so the normalization happens in
+    """One catalog table: the session view over its parquet file, schema
+    from the footer (SURVEY.md §1.2), timestamps normalized. Every plan
+    reads through here or ``views``, so the normalization happens in
     exactly one place and the rest of the engine sees one timestamp type.
-    """
+    ``parallel`` opts in to the scan repartition (``scan_parallelism``)."""
     path = table_path(sf_dir, name)
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema, fixes = _table_meta(spark, path)
-    df = spark.read.schema(schema).parquet(path)
-    for col, kind in fixes:
-        if kind == "nanos_as_long":
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-        else:
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
+    df = spark.table(_view(spark, path))
     if parallel and (n := scan_parallelism(spark, path)):
         df = df.repartition(n)
     return df
 
 
-# --- session views: one analysis per plan ------------------------------------
-#
-# A plan written as one ``spark.sql`` statement is analyzed once. The same
-# plan as a DataFrame chain is analyzed again at every step, and each
-# ``F.*`` call is a py4j round trip. Statements name their tables through
-# this stager: each catalog table of one sf_dir is registered once per
-# session as a temp view over ``table()``, so the timestamp normalization
-# is part of the view.
-#
-# - Names carry a digest of the absolute sf_dir, so two catalog
-#   directories can live in one session.
-# - A view keeps the file listing it was registered with. The stager's
-#   fingerprint covers each table file, and each part file of a table
-#   stored as a directory, so a table rewritten in place re-registers the
-#   views on the next plan built.
-# - Self-joins name the view twice under two SQL aliases. Two
-#   ``spark.table`` handles on one view share expression ids, so a
-#   DataFrame condition ``a["c"] == b["c"]`` between them fails as
-#   ambiguous (the tpch_q2 / tpch_q11 trap).
-
-
 @staged("views")
 def views(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """{table: temp view name} for each catalog table present in sf_dir."""
-    tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    out = {}
-    for name in TESTDATA_TABLES:
-        if os.path.exists(table_path(sf_dir, name)):
-            out[name] = f"__cat_{tag}_{name}"
-            table(spark, sf_dir, name).createOrReplaceTempView(out[name])
-    return out
+    """{table: temp view name} for each catalog table present in sf_dir;
+    plans written as one ``spark.sql`` statement name their tables here."""
+    return {
+        name: _view(spark, table_path(sf_dir, name))
+        for name in TESTDATA_TABLES
+        if os.path.exists(table_path(sf_dir, name))
+    }

@@ -21,7 +21,6 @@ elements; every top-k ordering is total.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import Window as W
@@ -29,6 +28,7 @@ from pyspark.sql import functions as F
 
 from etl_cnpjs_spark.catalog import table, views
 from etl_cnpjs_spark.plans.registry import quantize, quantize_sql, register
+from etl_cnpjs_spark.staging import session_tmpdir
 
 
 @register(
@@ -303,7 +303,7 @@ def agg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("o_totalprice").cast(_DEC)).alias("s"),
         )
 
-    state_dir = os.path.join(tempfile.mkdtemp(prefix="agg_incr_"), "state")
+    state_dir = os.path.join(session_tmpdir("agg_incr_"), "state")
     partial(o.filter(F.col("o_orderdate") < "1999-01-01")).write.parquet(state_dir)
     state = spark.read.parquet(state_dir)
     delta = partial(o.filter(F.col("o_orderdate") >= "1999-01-01"))

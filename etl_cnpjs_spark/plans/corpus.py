@@ -1052,7 +1052,6 @@ def corpus_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_cnpjs_spark.operators.graph import connected_components
     from etl_cnpjs_spark.operators.similarity import bucket_cosine_pairs, vec_double
     from etl_cnpjs_spark.plans.dedup import JACCARD_THRESHOLD
-    from etl_cnpjs_spark.plans.corpus import corpus_substr_clean
     from etl_cnpjs_spark.plans.similarity import (
         SEMANTIC_TAU,
         _label_centroid_assignment,
@@ -1142,7 +1141,6 @@ def corpus_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _decon_oracle() -> str:
     from etl_cnpjs_spark.plans.dedup import _SQL_PAIRS
-    from etl_cnpjs_spark.plans.corpus import _KEEP, _KNUTH, _MOD
 
     return (
         _SQL_PAIRS
@@ -1205,7 +1203,6 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_decontaminate_incremental use it per the r8 ADVICE), and
     sample_hash_xx is the registered xxhash64 swap for >2^33 keys."""
     from etl_cnpjs_spark.plans.dedup import _exact_pairs
-    from etl_cnpjs_spark.plans.corpus import _KEEP, _KNUTH, _MOD
 
     def is_eval(col):
         return (col * F.lit(_KNUTH)) % F.lit(_MOD) < F.lit(_KEEP)
@@ -1293,7 +1290,6 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _build_oracle() -> str:
     from etl_cnpjs_spark.plans.dedup import _SQL_PAIRS
-    from etl_cnpjs_spark.plans.corpus import _KEEP
     from etl_cnpjs_spark.plans.text import (
         GREEDY_PACK_BUDGET,
         GREEDY_SHARD_WIDTH,
@@ -1430,7 +1426,6 @@ def corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_cnpjs_spark.operators.graph import connected_components
     from etl_cnpjs_spark.operators.packing import greedy_pack_bins
     from etl_cnpjs_spark.plans.dedup import _exact_pairs
-    from etl_cnpjs_spark.plans.corpus import _KEEP
     from etl_cnpjs_spark.plans.text import (
         GREEDY_PACK_BUDGET,
         GREEDY_SHARD_WIDTH,
@@ -1492,8 +1487,6 @@ def corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # temperature mixture (alpha = 0.5) on the deduped survivors —
     # sample_temperature_mix's rate formula, one shared definition
-    from etl_cnpjs_spark.plans.corpus import temperature_rate_table
-
     nl = kept.groupBy("lang").agg(F.count(F.lit(1)).cast("bigint").alias("nl"))
     rr = temperature_rate_table(nl)
     samp = (
@@ -1578,7 +1571,6 @@ _DELTA_BAND = 214_748_365  # ≈ 5% of 2^32: the new benchmark's band
 
 def _decon_inc_oracle() -> str:
     from etl_cnpjs_spark.plans.dedup import _SQL_PAIRS
-    from etl_cnpjs_spark.plans.corpus import _KEEP
     from etl_cnpjs_spark.plans.registry import knuth32_sql
 
     hi = _KEEP + _DELTA_BAND
@@ -1646,7 +1638,6 @@ def corpus_decontaminate_incremental(
     docs against the posting table (dedup_incremental's batch-probe
     shape), not a corpus re-sweep."""
     from etl_cnpjs_spark.plans.dedup import _exact_pairs
-    from etl_cnpjs_spark.plans.corpus import _KEEP
     from etl_cnpjs_spark.plans.registry import knuth32
 
     hi = _KEEP + _DELTA_BAND
@@ -1747,7 +1738,6 @@ def _ingest_oracle() -> str:
         _SQL_SHINGLES,
         JACCARD_THRESHOLD,
     )
-    from etl_cnpjs_spark.plans.corpus import _KEEP
     from etl_cnpjs_spark.plans.text import (
         GREEDY_PACK_BUDGET,
         GREEDY_SHARD_WIDTH,
@@ -1858,7 +1848,6 @@ def corpus_ingest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         _banded8x2,
         JACCARD_THRESHOLD,
     )
-    from etl_cnpjs_spark.plans.corpus import _KEEP
     from etl_cnpjs_spark.plans.text import (
         GREEDY_PACK_BUDGET,
         GREEDY_SHARD_WIDTH,

@@ -1267,8 +1267,6 @@ _MH_PERMS = 16
 
 
 def _mh_est_oracle() -> str:
-    from etl_cnpjs_spark.plans.dedup import _SQL_SHINGLES, JACCARD_THRESHOLD
-
     mins = ",\n             ".join(
         f"min(('0x' || substr(md5('{p}|' || s), 1, 15))::BIGINT) AS mh{p}"
         for p in range(_MH_PERMS)
@@ -1318,12 +1316,6 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically, so E[agreement] = J is not just a theorem here — the
     estimator's exact output is hash-pinned. At corpus scale the same
     signature table is what dedup_minhash_persist buckets and stores."""
-    from etl_cnpjs_spark.plans.dedup import (
-        JACCARD_THRESHOLD,
-        _doc_shingles,
-        _exact_pairs,
-    )
-
     sh = _doc_shingles(spark, sf_dir)
     ex = sh.filter(F.size("sh") > 0).select(
         "doc_id", F.explode("sh").alias("s")

@@ -23,10 +23,7 @@ double formatting guarantees this).
 from __future__ import annotations
 
 import os
-import os as _os
 import shutil
-import tempfile
-import tempfile as _tempfile
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,12 +65,10 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-trips `nation` through CSV in a temp dir to prove the scan path,
     then returns the re-read rows (oracle = the parquet truth).
     """
-    import tempfile
-
     from etl_cnpjs_spark.sources.csv import read_csv, write_roundtrip_csv
 
     src = table(spark, sf_dir, "nation")
-    out = tempfile.mkdtemp(prefix="etl_cnpjs_scan_csv_")
+    out = session_tmpdir("etl_cnpjs_scan_csv_")
     write_roundtrip_csv(src, out)
     return read_csv(
         spark,
@@ -102,7 +97,7 @@ def _slice(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("sink_parquet", oracle=_SLICE_SQL)
 def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O9-analog: parquet out, parquet back; schema travels in the footer."""
-    out = os.path.join(tempfile.mkdtemp(prefix="sink_parquet_"), "slice.parquet")
+    out = os.path.join(session_tmpdir("sink_parquet_"), "slice.parquet")
     sink_parquet(_slice(spark, sf_dir), out)
     return spark.read.parquet(out)
 
@@ -110,7 +105,7 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("sink_csv_bom", oracle=_SLICE_SQL)
 def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O6/O18-analog: ';' CSV with header out, declared-schema read back."""
-    out = os.path.join(tempfile.mkdtemp(prefix="sink_csv_"), "slice_csv")
+    out = os.path.join(session_tmpdir("sink_csv_"), "slice_csv")
     sink_csv(_slice(spark, sf_dir), out)
     return (
         spark.read.schema(
@@ -137,7 +132,7 @@ def sink_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches ONLY the two matching directories (PartitionFilters in the
     plan, asserted by tests/test_plans.py). At 100 TB this is the
     difference between scanning 25 partitions and 2."""
-    out = os.path.join(tempfile.mkdtemp(prefix="sink_part_"), "customer_by_nation")
+    out = os.path.join(session_tmpdir("sink_part_"), "customer_by_nation")
     (
         table(spark, sf_dir, "customer")
         .select("c_custkey", "c_name", "c_acctbal", "c_nationkey")
@@ -160,7 +155,7 @@ def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra pass at 100 TB and can flip types between runs). Doubles
     survive via shortest-round-trip formatting, same guarantee as the
     CSV sink."""
-    out = os.path.join(tempfile.mkdtemp(prefix="sink_json_"), "slice_json")
+    out = os.path.join(session_tmpdir("sink_json_"), "slice_json")
     _slice(spark, sf_dir).write.json(out)
     return spark.read.schema(
         "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, c_mktsegment string"
@@ -187,7 +182,7 @@ def sink_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle) — re-run safety proved by construction. This is the
     recovery semantics a 1000-executor ingest needs: re-submit a failed
     day's job without wiping the table."""
-    out = os.path.join(tempfile.mkdtemp(prefix="sink_idem_"), "by_nation")
+    out = os.path.join(session_tmpdir("sink_idem_"), "by_nation")
     src = (
         table(spark, sf_dir, "customer")
         .filter(F.col("c_nationkey").isin(3, 7))
@@ -228,7 +223,7 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     side: row/values survive (count + key checksum) and the layout is 4
     files (distinct input_file_name — metadata the oracle pins as a
     literal)."""
-    out = os.path.join(tempfile.mkdtemp(prefix="sink_compact_"), "compacted")
+    out = os.path.join(session_tmpdir("sink_compact_"), "compacted")
     _slice(spark, sf_dir).repartition(4).write.parquet(out)
     back = spark.read.parquet(out).withColumn("__f", F.input_file_name())
     return back.agg(
@@ -243,7 +238,7 @@ def sink_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O10-analog: saveAsTable into the session catalog (external table —
     data lands in a temp dir, not the warehouse), read via spark.table.
     Unique name per run so concurrent or repeated runs never collide."""
-    tmp = tempfile.mkdtemp(prefix="sink_table_")
+    tmp = session_tmpdir("sink_table_")
     name = "sink_rt_" + os.path.basename(tmp).removeprefix("sink_table_")
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     (
@@ -272,7 +267,7 @@ def scan_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     trimming, or line-splitting defect in the text round-trip breaks the
     match. (Docs are single-line by construction; a real log pipeline
     would keep it that way by writing JSONL.)"""
-    out = os.path.join(tempfile.mkdtemp(prefix="scan_text_"), "lines")
+    out = os.path.join(session_tmpdir("scan_text_"), "lines")
     d = table(spark, sf_dir, "documents").select(F.col("text").alias("value"))
     d.write.text(out)
     back = spark.read.text(out)
@@ -289,8 +284,6 @@ def _stage_bin_files(spark: SparkSession, sf_dir: str) -> str:
     driver never holds the bytes. On local mode the staging dir is local
     tmp; on a cluster the same shape writes to shared storage. Staged
     per (session, sf) — staging is input setup, not query work."""
-    import os
-
     out = session_tmpdir("binfiles_")
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
 
@@ -367,10 +360,7 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     a corrupt-record column, so a quality gate can count/quarantine them
     (mode=DROPMALFORMED/FAILFAST are the other two postures). The oracle
     states the expected parse outcome row by row."""
-    import os
-    import tempfile
-
-    path = os.path.join(tempfile.mkdtemp(prefix="dirty_csv_"), "dirty.csv")
+    path = os.path.join(session_tmpdir("dirty_csv_"), "dirty.csv")
     with open(path, "w", encoding="utf-8") as f:
         f.write("\n".join(_DIRTY_ROWS) + "\n")
     df = spark.read.csv(
@@ -554,12 +544,7 @@ def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, so at 100 TB it's an INGEST format you convert to parquet
     once — the docstring IS that guidance). Doubles survive via
     shortest-round-trip formatting, as with the JSON/CSV sinks."""
-    import os
-    import tempfile
-
-    from etl_cnpjs_spark.plans.io import _slice
-
-    out = os.path.join(tempfile.mkdtemp(prefix="scan_xml_"), "slice_xml")
+    out = os.path.join(session_tmpdir("scan_xml_"), "slice_xml")
     (
         _slice(spark, sf_dir)
         .write.format("xml")
@@ -617,7 +602,7 @@ def scan_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lines")
         )
     )
-    out = _os.path.join(_tempfile.mkdtemp(prefix="scan_json_nested_"), "orders_json")
+    out = os.path.join(session_tmpdir("scan_json_nested_"), "orders_json")
     nested.write.json(out)
     schema = (
         "o_orderkey bigint, o_orderstatus string,"
@@ -680,7 +665,7 @@ def sink_json(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.to_date("o_orderdate").alias("o_date"),
         )
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="sink_json_"), "slice.json")
+    out = os.path.join(session_tmpdir("sink_json_"), "slice.json")
     sl.write.mode("overwrite").json(out)
     schema = T.StructType(
         [
@@ -727,7 +712,7 @@ def scan_csv_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") % 89 == 0)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="scan_csv_gz_"), "slice.csv")
+    out = os.path.join(session_tmpdir("scan_csv_gz_"), "slice.csv")
     sl.write.mode("overwrite").option("header", True).option(
         "compression", "gzip"
     ).csv(out)
@@ -768,11 +753,8 @@ def scan_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     set is deletes-sized and broadcasts; the anti join is scan-side.
     At 100 TB this is the read path until compaction folds the
     vectors in (sink_compact's job)."""
-    import os
-    import tempfile
-
     o = table(spark, sf_dir, "orders")
-    dv_dir = os.path.join(tempfile.mkdtemp(prefix="delvec_"), "deletes.parquet")
+    dv_dir = os.path.join(session_tmpdir("delvec_"), "deletes.parquet")
     o.filter(F.col("o_orderkey") % 7 == 0).select(
         F.col("o_orderkey").alias("del_key")
     ).write.mode("overwrite").parquet(dv_dir)
@@ -811,10 +793,8 @@ def sink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit cost is one rename regardless of data volume."""
     import glob
     import json
-    import os
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="manifest_sink_")
+    base = session_tmpdir("manifest_sink_")
     data_dir = os.path.join(base, "data")
     sl = (
         table(spark, sf_dir, "orders")
@@ -880,7 +860,7 @@ def scan_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_replace("text", "\\s+", "\n").alias("text_ml"),
         )
     )
-    out = _os.path.join(_tempfile.mkdtemp(prefix="scan_csv_ml_"), "docs.csv")
+    out = os.path.join(session_tmpdir("scan_csv_ml_"), "docs.csv")
     sl.write.mode("overwrite").option("header", True).option(
         "quoteAll", True
     ).csv(out)
@@ -941,7 +921,7 @@ def sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("cents"),
         "o_orderstatus",
     )
-    out = _os.path.join(_tempfile.mkdtemp(prefix="spo_"), "orders_part")
+    out = os.path.join(session_tmpdir("spo_"), "orders_part")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     patched = o.filter(F.col("o_orderstatus") == "F").withColumn(
         "cents", F.col("cents") * 2
@@ -1010,7 +990,7 @@ def sink_csv_br_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderstatus",
         )
     )
-    out = _os.path.join(_tempfile.mkdtemp(prefix="br_csv_"), "slice.csv")
+    out = os.path.join(session_tmpdir("br_csv_"), "slice.csv")
     sl.write.mode("overwrite").option("header", True).option("sep", ";").csv(out)
     schema = T.StructType(
         [
@@ -1071,29 +1051,29 @@ def sink_versioned_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import json
 
-    base = _tempfile.mkdtemp(prefix="vmanifest_")
+    base = session_tmpdir("vmanifest_")
     cents = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint")
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", cents.alias("cents")
     )
-    d1 = _os.path.join(base, "d1")
+    d1 = os.path.join(base, "d1")
     o.filter(F.col("o_orderkey") % 89 == 0).write.parquet(d1)
-    v1_files = sorted(glob.glob(_os.path.join(d1, "*.parquet")))
-    tmp = _os.path.join(base, "_m.tmp")
+    v1_files = sorted(glob.glob(os.path.join(d1, "*.parquet")))
+    tmp = os.path.join(base, "_m.tmp")
     with open(tmp, "w") as f:
         json.dump({"files": v1_files}, f)
-    _os.replace(tmp, _os.path.join(base, "MANIFEST_v1.json"))
+    os.replace(tmp, os.path.join(base, "MANIFEST_v1.json"))
 
-    d2 = _os.path.join(base, "d2")
+    d2 = os.path.join(base, "d2")
     o.filter(F.col("o_orderkey") % 89 == 1).write.parquet(d2)
-    v2_files = v1_files + sorted(glob.glob(_os.path.join(d2, "*.parquet")))
+    v2_files = v1_files + sorted(glob.glob(os.path.join(d2, "*.parquet")))
     with open(tmp, "w") as f:
         json.dump({"files": v2_files}, f)
-    _os.replace(tmp, _os.path.join(base, "MANIFEST_v2.json"))
+    os.replace(tmp, os.path.join(base, "MANIFEST_v2.json"))
 
     outs = []
     for ver in (1, 2):
-        with open(_os.path.join(base, f"MANIFEST_v{ver}.json")) as f:
+        with open(os.path.join(base, f"MANIFEST_v{ver}.json")) as f:
             committed = json.load(f)["files"]
         rd = spark.read.parquet(*committed)
         outs.append(
@@ -1147,7 +1127,7 @@ def sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
         WriterCommitMessage,
     )
 
-    out_dir = _tempfile.mkdtemp(prefix="pyds_sink_")
+    out_dir = session_tmpdir("pyds_sink_")
 
     class _PartMsg(WriterCommitMessage):
         def __init__(self, path):
@@ -1158,7 +1138,7 @@ def sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
             self.base = base
 
         def write(self, iterator):
-            path = _os.path.join(self.base, f"part-{uuid.uuid4().hex}.jsonl")
+            path = os.path.join(self.base, f"part-{uuid.uuid4().hex}.jsonl")
             n = 0
             with open(path, "w") as f:
                 for row in iterator:
@@ -1173,10 +1153,10 @@ def sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def commit(self, messages):
             manifest = {"files": sorted(m.path for m in messages)}
-            tmp = _os.path.join(self.base, "_m.tmp")
+            tmp = os.path.join(self.base, "_m.tmp")
             with open(tmp, "w") as f:
                 _json.dump(manifest, f)
-            _os.replace(tmp, _os.path.join(self.base, "MANIFEST.json"))
+            os.replace(tmp, os.path.join(self.base, "MANIFEST.json"))
 
         def abort(self, messages):
             pass  # uncommitted parts are invisible to the manifest read
@@ -1203,7 +1183,7 @@ def sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     sl.write.format("jsonl_manifest_sink").option("path", out_dir).mode(
         "append"
     ).save()
-    with open(_os.path.join(out_dir, "MANIFEST.json")) as f:
+    with open(os.path.join(out_dir, "MANIFEST.json")) as f:
         files = _json.load(f)["files"]
     schema = T.StructType(
         [
@@ -1331,8 +1311,6 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @staged("nested")
 def _stage_nested_parquet(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     out = os.path.join(session_tmpdir("nested_stage_"), "orders_nested.parquet")
     o = table(spark, sf_dir, "orders")
     o.select(
@@ -1389,8 +1367,6 @@ def scan_parquet_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @staged("zstd")
 def _stage_zstd_parquet(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     path = os.path.join(session_tmpdir("zstd_stage_"), "docs.parquet")
     table(spark, sf_dir, "documents").write.mode("overwrite").option(
         "compression", "zstd"
@@ -1435,8 +1411,6 @@ def sink_parquet_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @staged("jsonl")
 def _stage_corrupt_jsonl(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     out = os.path.join(session_tmpdir("jsonl_stage_"), "feed.jsonl")
     d = table(spark, sf_dir, "documents").select(
         F.when(

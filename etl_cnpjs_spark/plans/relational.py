@@ -23,7 +23,7 @@ through decimal accumulation per the registry convention.
 
 from __future__ import annotations
 
-import os as _os
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import Window as W
@@ -1838,7 +1838,7 @@ _DPP_SQL = """
 @staged("dpp")
 def _dpp_fact(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the status-partitioned fact once per (session, sf)."""
-    path = _os.path.join(session_tmpdir("dpp_"), "orders_part")
+    path = os.path.join(session_tmpdir("dpp_"), "orders_part")
     (
         table(spark, sf_dir, "orders")
         .select(

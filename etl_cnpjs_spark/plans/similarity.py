@@ -13,7 +13,7 @@ including the IVF approximate path (the approximation is in the
 
 from __future__ import annotations
 
-import random as _random
+import random
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import Window as W
@@ -826,7 +826,7 @@ def sim_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RP_DIMS = 8
 _RP_IN = 64
-_rp_rng = _random.Random(20260815)
+_rp_rng = random.Random(20260815)
 _RP_SIGNS = [
     [float(_rp_rng.choice((-1, 1))) for _ in range(_RP_IN)] for _ in range(_RP_DIMS)
 ]
@@ -994,12 +994,6 @@ RECALL_NQ = 20  # probe-set size: the NQ lowest vec_ids query the index
 
 def _recall_oracle() -> str:
     from etl_cnpjs_spark.operators.similarity import sql_cosine
-    from etl_cnpjs_spark.plans.similarity import (
-        _SQL_ASSIGN_CTES,
-        _SQL_VECS,
-        KMEANS_N_PROBE,
-        TOP_K,
-    )
 
     return f"""
     WITH n AS ({_SQL_VECS}),
@@ -1066,12 +1060,6 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-derivable index's quality a hash-checked, distributed
     query."""
     from etl_cnpjs_spark.operators.similarity import cosine
-    from etl_cnpjs_spark.plans.similarity import (
-        KMEANS_N_PROBE,
-        TOP_K,
-        _label_centroid_assignment,
-        _vecs,
-    )
 
     n = _vecs(spark, sf_dir)
     q = (

@@ -791,14 +791,14 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     is generated scan-side (part × 4 via explode, supplier count
     broadcast); the nation slice prunes before the one groupBy shuffle;
     the global total is a broadcast 1-row frame, not a driver action."""
-    ps = _partsupp(spark, sf_dir)
-    s = table(spark, sf_dir, "supplier")
+    ps = _partsupp(spark, sf_dir).alias("ps")
+    s = table(spark, sf_dir, "supplier").alias("s")
     n = table(spark, sf_dir, "nation").filter(
         F.col("n_name").isin("NATION_2", "NATION_7")
-    )
+    ).alias("n")
     sl = (
-        ps.join(s, ps.ps_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        ps.join(s, F.col("ps.ps_suppkey") == F.col("s.s_suppkey"))
+        .join(F.broadcast(n), F.col("s.s_nationkey") == F.col("n.n_nationkey"))
         .select("ps_partkey", "ps_supplycost", "ps_availqty")
     )
     val = F.sum((F.col("ps_supplycost") * F.col("ps_availqty")).cast(_DEC))
@@ -950,24 +950,24 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (acctbal DESC, nation, supplier, part, suppkey). Physical: the
     region slice prunes suppliers before partsupp joins them; the
     per-part min frame is part-sized and broadcasts back."""
-    ps = _partsupp(spark, sf_dir)
-    s = table(spark, sf_dir, "supplier")
-    n = table(spark, sf_dir, "nation")
-    r = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    ps = _partsupp(spark, sf_dir).alias("ps")
+    s = table(spark, sf_dir, "supplier").alias("s")
+    n = table(spark, sf_dir, "nation").alias("n")
+    r = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA").alias("r")
     p = table(spark, sf_dir, "part").filter(
         (F.col("p_type") == "ECONOMY") & (F.col("p_size") <= 10)
-    )
+    ).alias("p")
     ecost = (
-        ps.join(s, ps.ps_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        ps.join(s, F.col("ps.ps_suppkey") == F.col("s.s_suppkey"))
+        .join(F.broadcast(n), F.col("s.s_nationkey") == F.col("n.n_nationkey"))
+        .join(F.broadcast(r), F.col("n.n_regionkey") == F.col("r.r_regionkey"))
         .select("ps_partkey", "ps_suppkey", "ps_supplycost", "s_acctbal", "s_name", "n_name")
     )
     m = ecost.groupBy(F.col("ps_partkey").alias("mk")).agg(
         F.min("ps_supplycost").alias("mc")
     )
     return (
-        ecost.join(F.broadcast(p), ecost.ps_partkey == p.p_partkey)
+        ecost.join(F.broadcast(p), F.col("ps_partkey") == F.col("p.p_partkey"))
         .join(
             F.broadcast(m),
             (F.col("mk") == F.col("p_partkey"))

@@ -2,8 +2,8 @@
 
 The reference bulk-loads its inputs once, then queries. The engine's
 equivalents — a checkpointed shingle frame, a fitted quantizer, a copy of
-a table in another format, a footer schema — are built once per Spark
-application through one memo, ``@staged(name)``:
+a table in another format, a catalog table's session view — are built once
+per Spark application through one memo, ``@staged(name)``:
 
 - The key is ``(applicationId, args)``: checkpoint blocks and temp views
   die with their application, so a new session never sees a dead entry.

@@ -7,13 +7,20 @@ asserted against BOTH the Spark plan and the DuckDB oracle."""
 from __future__ import annotations
 
 import math
+import os
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from etl_cnpjs_spark.plans import QUERIES
 from etl_cnpjs_spark.plans.corpus import _KEEP, _KNUTH, _MIX_KNUTH, _MIX_MOD, _MOD
+from etl_cnpjs_spark.plans.dedup import _INCR_SPLIT, JACCARD_THRESHOLD
+from etl_cnpjs_spark.plans.registry import MOD32, knuth32
 from etl_cnpjs_spark.plans.text import GREEDY_PACK_BUDGET, GREEDY_SHARD_WIDTH
+from tests.conftest import SF_DIR, SMOKE_SF_DIR
+from tests.test_properties import _ref_knuth, _xxh64_u64
 
 
 def _is_eval(doc_id: int) -> bool:
@@ -285,8 +292,6 @@ def ingest_fixture(tmp_path_factory):
     first), two clean 300-token docs in the SAME shard (packing makes
     2 bins at budget 512), and a shingle-empty 2-token doc in a second
     lang (too short to pair — must still be ingested and packed)."""
-    from etl_cnpjs_spark.plans.dedup import _INCR_SPLIT
-
     taken: set[int] = set()
 
     def grab(pred, lo=0, hi=_INCR_SPLIT):
@@ -373,3 +378,158 @@ def test_corpus_ingest_incremental_fixture(spark, ingest_fixture):
         ).fetchall()
     }
     assert got_o == expected
+
+
+# --- eval-split and hash-sample membership on the shipped fixtures ---------
+#
+# Expectations re-derived from the raw parquet keys with Python big-ints
+# (the references in tests/test_properties.py), neither engine's formula.
+
+
+def test_corpus_build_is_eval_matches_pure_python(spark):
+    """corpus_build's 10% eval split membership, derived from the raw
+    parquet doc_ids with Python big-ints only (no Spark expression, no
+    DuckDB SQL) — pins the r9 knuth32 rewrite against an
+    identical-on-both-engines regression."""
+    ids = pq.read_table(
+        os.path.join(SF_DIR, "documents.parquet"), columns=["doc_id"]
+    ).column("doc_id").to_pylist()
+    expected = {i for i in ids if _ref_knuth(i) < _KEEP}
+
+    d = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    got = {
+        r.doc_id
+        for r in d.select("doc_id")
+        .filter(knuth32(F.col("doc_id")) < F.lit(_KEEP))
+        .collect()
+    }
+    assert got == expected
+    assert 0 < len(expected) < len(ids)  # a real split, not degenerate
+
+
+def test_sample_hash_xx_membership_matches_pure_python(spark):
+    """The registered rows-only key's exact selection, re-derived from
+    raw parquet keys through the from-spec XXH64 — the independent
+    value evidence a rows-only check can't provide."""
+    t = pq.read_table(
+        os.path.join(SF_DIR, "lineitem.parquet"),
+        columns=["l_orderkey", "l_linenumber", "l_quantity"],
+    )
+    expected = set()
+    for ok, ln in zip(
+        t.column("l_orderkey").to_pylist(), t.column("l_linenumber").to_pylist()
+    ):
+        if _xxh64_u64(ok % (1 << 64)) % MOD32 < _KEEP:
+            expected.add((ok, ln))
+
+    got = {
+        (r.l_orderkey, r.l_linenumber)
+        for r in QUERIES["sample_hash_xx"].fn(spark, SF_DIR).collect()
+    }
+    assert got == expected
+    assert len(expected) > 0
+
+
+def test_sample_hash_xx_rate_agrees_with_sample_hash(spark):
+    """Both 10%-keep forms select ~the same fraction of orders (they
+    hash the same key to the same [0, 2^32) ring with the same
+    threshold) — the swap contract SCALE.md's honest-list #4 promises:
+    changing the hash past 2^33 keys changes WHICH rows, not HOW MANY."""
+    n_total = (
+        QUERIES["sample_hash"].fn(spark, SF_DIR).sparkSession.read.parquet(
+            os.path.join(SF_DIR, "lineitem.parquet")
+        )
+    ).count()
+    n_knuth = QUERIES["sample_hash"].fn(spark, SF_DIR).count()
+    n_xx = QUERIES["sample_hash_xx"].fn(spark, SF_DIR).count()
+    assert abs(n_xx - n_knuth) / n_total < 0.02  # both ≈ 10% ± sampling noise
+
+
+def test_corpus_ingest_incremental_matches_pure_python(spark):
+    """Independent full replay of corpus_ingest_incremental on REAL
+    sf0.001 documents: shingling, exact Jaccard screening against both
+    corpus splits, outcome attribution, and the sharded greedy pack are
+    re-derived in pure Python (sets + dicts, no engine), then compared
+    to the Spark plan's report — the same independent-derivation
+    discipline the other capstone keys carry."""
+    sf_dir = SMOKE_SF_DIR
+    docs = pd.read_parquet(f"{sf_dir}/documents.parquet")[
+        ["doc_id", "lang", "text"]
+    ]
+
+    def sh3(text: str) -> frozenset:
+        toks = text.strip().split()
+        return frozenset(
+            " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
+        )
+
+    shingle = {}
+    for r in docs.itertuples(index=False):
+        s = sh3(r.text)
+        if s:
+            shingle[r.doc_id] = s
+
+    def is_eval(i: int) -> bool:
+        return (i * _KNUTH) % _MOD < _KEEP
+
+    corpus_ids = [i for i in shingle if i < _INCR_SPLIT]
+    # outcome per non-empty delta doc
+    outcome: dict[int, str] = {}
+    meta = {}
+    for r in docs.itertuples(index=False):
+        if r.doc_id < _INCR_SPLIT or not r.text.strip():
+            continue
+        meta[r.doc_id] = (r.lang, len(r.text.strip().split()))
+        hit, leaked = False, False
+        sd = shingle.get(r.doc_id)
+        if sd:
+            for c in corpus_ids:
+                sc = shingle[c]
+                inter = len(sd & sc)
+                if inter and inter / (len(sd) + len(sc) - inter) >= JACCARD_THRESHOLD:
+                    hit = True
+                    leaked = leaked or is_eval(c)
+        outcome[r.doc_id] = "leaked" if leaked else ("dup" if hit else "ingested")
+
+    # sharded greedy pack of survivors + per-lang report
+    langs = sorted({v[0] for v in meta.values()})
+    expected = {}
+    for lg in langs:
+        ids = sorted(i for i in meta if meta[i][0] == lg)
+        surv = [i for i in ids if outcome[i] == "ingested"]
+        n_seqs = packed = 0
+        for shard in sorted({i // GREEDY_SHARD_WIDTH for i in surv}):
+            members = [i for i in surv if i // GREEDY_SHARD_WIDTH == shard]
+            fill, bins = 0, 1
+            for i in members:
+                n = meta[i][1]
+                if fill + n > GREEDY_PACK_BUDGET and fill > 0:
+                    bins, fill = bins + 1, n
+                else:
+                    fill += n
+                packed += n
+            n_seqs += bins
+        expected[lg] = (
+            len(ids),
+            sum(1 for i in ids if outcome[i] == "leaked"),
+            sum(1 for i in ids if outcome[i] == "dup"),
+            len(surv),
+            n_seqs,
+            packed,
+        )
+
+    got = {
+        r.lang: (
+            r.n_delta,
+            r.n_leaked,
+            r.n_dup,
+            r.n_ingested,
+            r.n_seqs,
+            r.packed_tokens,
+        )
+        for r in QUERIES["corpus_ingest_incremental"].fn(spark, sf_dir).collect()
+    }
+    assert got == expected
+    # the fixture corpus must actually exercise the screen
+    assert sum(v[1] + v[2] for v in expected.values()) > 0
+

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import itertools
 
+import duckdb
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -21,6 +22,7 @@ from pyspark.sql import functions as F
 from etl_cnpjs_spark.functions.text import shingles, tokens
 from etl_cnpjs_spark.operators.dedup import jaccard_pairs
 from etl_cnpjs_spark.operators.graph import connected_components
+from etl_cnpjs_spark.plans.registry import KNUTH32, MOD32, knuth32, knuth32_sql
 
 _WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
 _doc = st.lists(st.sampled_from(_WORDS), min_size=0, max_size=10).map(" ".join)
@@ -1190,3 +1192,141 @@ def test_kcore_matches_python_at_any_id_magnitude(
     finally:
         graph_plans._KCORE_K = orig
     assert got == expected
+
+
+# --- hash and integer-division arithmetic over the full int64 domain -------
+#
+# registry.knuth32 / knuth32_sql (the split-multiply form of
+# `key * 2654435761 mod 2^32`) and Spark's xxhash64 against pure-Python
+# big-int references, on keys past the naive form's ~3.47e9 overflow
+# boundary, the 2^32 ring boundary and the int64 extremes; and Spark `DIV`
+# against DuckDB `//` on integer operands. The sample and eval-split pins
+# in tests/test_corpus_build.py reuse these references.
+
+# the naive form overflows int64 past ~2^63/K ≈ 3.47e9 — these ids
+# cross that boundary, the 2^32 ring boundary, and the int64 extremes
+EDGE_IDS = [
+    0,
+    1,
+    63,
+    64,
+    12345,
+    2_000_000_000,
+    3_470_000_000,  # just past the naive overflow boundary
+    4_294_967_295,
+    4_294_967_296,
+    10_000_000_000,  # the 100 TB design point (~1e10 docs)
+    2**53,
+    2**62,
+    2**63 - 1,
+    -1,
+    -65,
+    -(2**63),
+    -(2**63) + 7,
+]
+
+
+def _ref_knuth(x: int) -> int:
+    """Unbounded-integer reference: ((x mod 2^32) * K) mod 2^32."""
+    return ((x % MOD32) * KNUTH32) % MOD32
+
+
+def test_knuth32_full_domain_both_engines(spark):
+    df = spark.createDataFrame([(i,) for i in EDGE_IDS], "doc_id long")
+    got = {
+        r.doc_id: r.h
+        for r in df.select("doc_id", knuth32(F.col("doc_id")).alias("h")).collect()
+    }
+    assert got == {i: _ref_knuth(i) for i in EDGE_IDS}
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(doc_id BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?)", [(i,) for i in EDGE_IDS])
+    rows = con.execute(
+        f"SELECT doc_id, {knuth32_sql('doc_id')} AS h FROM t"
+    ).fetchall()
+    assert {i: h for i, h in rows} == {i: _ref_knuth(i) for i in EDGE_IDS}
+
+
+def test_knuth32_equals_naive_form_on_safe_domain(spark):
+    """On keys below the overflow boundary the widened form is
+    bit-identical to the naive multiply — the guarantee that let the
+    r9 rewrite swap corpus_build / corpus_decontaminate_incremental
+    onto knuth32 without touching any shipped-fixture hash."""
+    safe = [0, 1, 999, 60_000, 4_999_999, 3_400_000_000]
+    df = spark.createDataFrame([(i,) for i in safe], "doc_id long")
+    bad = df.select(
+        "doc_id",
+        knuth32(F.col("doc_id")).alias("wide"),
+        ((F.col("doc_id") * F.lit(KNUTH32)) % F.lit(MOD32)).alias("naive"),
+    ).filter(F.col("wide") != F.col("naive"))
+    assert bad.count() == 0
+
+
+def test_spark_div_matches_duckdb_intdiv(spark):
+    """The r8 ADVICE flagged Spark `DIV` (truncating) vs DuckDB `//`
+    as floor-division divergence on negatives. Measured: DuckDB `//`
+    on BIGINT operands ALSO truncates toward zero (-1 // 64 = 0), so
+    the doc_pack_greedy_sharded plan/oracle pair agrees over the full
+    int64 domain, not just the non-negative fixture domain."""
+    df = spark.createDataFrame([(i,) for i in EDGE_IDS], "doc_id long")
+    got = {
+        r.doc_id: r.s
+        for r in df.select(
+            "doc_id", F.expr("doc_id DIV 64").alias("s")
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(doc_id BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?)", [(i,) for i in EDGE_IDS])
+    duck = dict(con.execute("SELECT doc_id, doc_id // 64 FROM t").fetchall())
+    assert got == duck
+    # and both are trunc-toward-zero, NOT floor
+    assert got[-1] == 0 and got[-65] == -1
+
+
+_XX_PRIME1 = 11400714785074694791  # 0x9E3779B185EBCA87
+_XX_PRIME2 = 14029467366897019727
+_XX_PRIME3 = 1609587929392839161
+_XX_PRIME4 = 9650029242287828579
+_XX_PRIME5 = 2870177450012600261
+_U64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _U64
+
+
+def _xxh64_u64(value: int, seed: int = 42) -> int:
+    """XXH64 of one 8-byte little-endian word — the published algorithm
+    (Collet's xxHash spec, single-lane tail path for len = 8), written
+    from the spec with Python big-ints. Matches Spark's
+    XxHash64.hashLong contract: hash of a bigint column hashes the
+    64-bit value with the session seed (Spark uses 42)."""
+    h = (seed + _XX_PRIME5 + 8) & _U64
+    k = value & _U64
+    k = (k * _XX_PRIME2) & _U64
+    k = _rotl(k, 31)
+    k = (k * _XX_PRIME1) & _U64
+    h ^= k
+    h = (_rotl(h, 27) * _XX_PRIME1 + _XX_PRIME4) & _U64
+    h ^= h >> 33
+    h = (h * _XX_PRIME2) & _U64
+    h ^= h >> 29
+    h = (h * _XX_PRIME3) & _U64
+    h ^= h >> 32
+    return h
+
+
+def _to_signed(u: int) -> int:
+    return u - (1 << 64) if u >= (1 << 63) else u
+
+
+def test_xxhash64_matches_pure_python_spec(spark):
+    """Spark's xxhash64(bigint) vs the from-spec Python XXH64 — pins
+    the exact hash values sample_hash_xx's membership derives from."""
+    ids = EDGE_IDS
+    df = spark.createDataFrame([(i,) for i in ids], "k long")
+    got = {r.k: r.h for r in df.select("k", F.xxhash64("k").alias("h")).collect()}
+    assert got == {i: _to_signed(_xxh64_u64(i % (1 << 64))) for i in ids}
+

@@ -7,10 +7,13 @@ from __future__ import annotations
 import ast
 import inspect
 import os
+import subprocess
+import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from etl_cnpjs_spark import staging
 from etl_cnpjs_spark.catalog import table, views
@@ -177,6 +180,23 @@ def test_sql_self_join_over_one_view(spark, sf_dir):
     assert got == n
 
 
+def test_table_and_views_name_one_view(spark, sf_dir):
+    """``table()`` returns the session view that ``views()`` names."""
+    v = views(spark, sf_dir)["orders"]
+    assert v.startswith("__cat_") and spark.catalog.tableExists(v)
+    assert table(spark, sf_dir, "orders").sameSemantics(spark.table(v))
+    assert not table(spark, sf_dir, "customer").sameSemantics(spark.table(v))
+
+
+def test_aliased_self_join_over_table_handles(spark, sf_dir):
+    """Two ``table()`` handles on one view share expression ids; aliased,
+    with ``F.col("alias.c")`` references, they self-join."""
+    a = table(spark, sf_dir, "orders").alias("a")
+    b = table(spark, sf_dir, "orders").alias("b")
+    got = a.join(b, F.col("a.o_orderkey") == F.col("b.o_orderkey")).count()
+    assert got == table(spark, sf_dir, "orders").count()
+
+
 def test_stage_root_is_private():
     staging._private_root()
     st = os.stat(staging.STAGE_ROOT)
@@ -212,3 +232,44 @@ def test_no_hand_rolled_memos():
                     ):
                         offenders.append(f"{rel}:{node.lineno}: {t.id}")
     assert offenders == []
+
+
+def test_plans_take_scratch_dirs_from_session_tmpdir():
+    """A plan build's scratch directory goes through
+    ``staging.session_tmpdir``, which removes it at interpreter exit; a
+    raw ``tempfile.mkdtemp`` leaks one directory per build."""
+    offenders = []
+    plans = os.path.join(PKG, "plans")
+    for f in sorted(os.listdir(plans)):
+        if not f.endswith(".py"):
+            continue
+        with open(os.path.join(plans, f)) as fh:
+            tree = ast.parse(fh.read())
+        offenders += [
+            f"plans/{f}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute) and node.attr == "mkdtemp"
+        ]
+    assert offenders == []
+
+
+def test_plan_scratch_dirs_gone_at_exit(tmp_path):
+    """sink_parquet and scan_csv write scratch files while they build; a
+    process that built both and exited leaves none of them in TMPDIR."""
+    prefixes = ("sink_parquet_", "etl_cnpjs_scan_csv_")
+    code = f"""
+import glob, os, tempfile
+from pyspark.sql import SparkSession
+from etl_cnpjs_spark.plans import QUERIES
+spark = SparkSession.builder.master("local[1]").getOrCreate()
+for key in ("sink_parquet", "scan_csv"):
+    QUERIES[key].fn(spark, {SMOKE_SF_DIR!r}).count()
+for prefix in {prefixes!r}:
+    assert glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*")), prefix
+"""
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    subprocess.run(
+        [sys.executable, "-c", code], cwd=os.path.dirname(PKG), env=env, check=True, timeout=600
+    )
+    left = sorted(p.name for p in tmp_path.iterdir() if p.name.startswith(prefixes))
+    assert left == []
