@@ -22,9 +22,12 @@ def tokens(text: Column) -> Column:
     return F.split(F.trim(text), _WS)
 
 
-def shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles, built by zipping n shifted slices
-    of the token array (shingle_i = toks[i] .. toks[i+n-1]).
+SHINGLE_N = 3  # word n-gram width of every shingle set (the oracles' too)
+
+
+def shingles(toks: Column) -> Column:
+    """Distinct word n-gram shingles, n = SHINGLE_N, built by zipping n
+    shifted slices of the token array (shingle_i = toks[i] .. toks[i+n-1]).
 
     WHY slices + zip_with and not transform(sequence(...), i ->
     slice(toks, i, n)): Catalyst gets no common-subexpression
@@ -37,6 +40,7 @@ def shingles(toks: Column, n: int = 3) -> Column:
     bit-identical output. Guarded for short docs: the k<1 case returns
     an empty array explicitly (DuckDB's generate_series just returns
     [])."""
+    n = SHINGLE_N
     k = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     parts = [F.slice(toks, i + 1, k) for i in range(n)]
     z = parts[0]

@@ -25,6 +25,25 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def posting_intersections(postings: DataFrame, id_col: str, elem_col: str) -> DataFrame:
+    """(i, j, inter) for i < j: the number of elements documents i and j
+    share, from (id, element) postings. One self-join on the element,
+    then a count per pair, so the one shuffle is keyed by element and its
+    work grows with the square of each element's document frequency.
+    Every exact pair operator (jaccard_pairs, containment_pairs and the
+    df-capped candidate block in plans/dedup.py) intersects through here."""
+    a, b = postings.alias("a"), postings.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col(f"a.{elem_col}") == F.col(f"b.{elem_col}"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .groupBy(F.col(f"a.{id_col}").alias("i"), F.col(f"b.{id_col}").alias("j"))
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+
+
 def jaccard_pairs(
     docs: DataFrame, id_col: str, set_col: str, threshold: float
 ) -> DataFrame:
@@ -56,12 +75,7 @@ def jaccard_pairs(
     e = d.select(
         "__id", F.explode(F.transform("__sh", lambda s: F.xxhash64(s))).alias("s")
     )
-    a, b = e.alias("a"), e.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.__id") < F.col("b.__id")))
-        .groupBy(F.col("a.__id").alias("i"), F.col("b.__id").alias("j"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    pairs = posting_intersections(e, "__id", "s")
     sz = d.select("__id", F.size("__sh").alias("n"))
     s1 = sz.select(F.col("__id").alias("i"), F.col("n").alias("n1"))
     s2 = sz.select(F.col("__id").alias("j"), F.col("n").alias("n2"))
@@ -99,10 +113,8 @@ def minhash_band_keys(shingles_col: str, bands: int, rows: int) -> Column:
     return F.expr(f"array({', '.join(keys)})")
 
 
-def candidate_pairs(
-    df: DataFrame, id_col: str, band_keys_col: str, left: str = "i", right: str = "j"
-) -> DataFrame:
-    """Distinct id pairs (left < right) sharing ≥1 band bucket. One
+def candidate_pairs(df: DataFrame, id_col: str, band_keys_col: str) -> DataFrame:
+    """Distinct id pairs (i < j) sharing ≥1 band bucket. One
     explode (B rows/doc) + one self-equi-join on the bucket key — the only
     shuffle in the LSH path, keyed by band hash (uniform, unskewed)."""
     buckets = df.select(
@@ -118,25 +130,25 @@ def candidate_pairs(
             & (F.col("a.__key") == F.col("b.__key"))
             & (F.col("a.__id") < F.col("b.__id")),
         )
-        .select(F.col("a.__id").alias(left), F.col("b.__id").alias(right))
+        .select(F.col("a.__id").alias("i"), F.col("b.__id").alias("j"))
         .distinct()
     )
 
 
 def exact_jaccard(
-    pairs: DataFrame, docs: DataFrame, id_col: str, set_col: str, left: str = "i", right: str = "j"
+    pairs: DataFrame, docs: DataFrame, id_col: str, set_col: str
 ) -> DataFrame:
-    """Exact Jaccard for candidate pairs: join the two element arrays back
-    and compute |∩|/|∪| per row (array_intersect inside codegen). Cost is
-    O(candidates), not O(n²)."""
-    la = docs.select(F.col(id_col).alias(left), F.col(set_col).alias("__sa"))
-    lb = docs.select(F.col(id_col).alias(right), F.col(set_col).alias("__sb"))
+    """Exact Jaccard for (i, j) candidate pairs: join the two element
+    arrays back and compute |∩|/|∪| per row (array_intersect inside
+    codegen). Cost is O(candidates), not O(n²)."""
+    la = docs.select(F.col(id_col).alias("i"), F.col(set_col).alias("__sa"))
+    lb = docs.select(F.col(id_col).alias("j"), F.col(set_col).alias("__sb"))
     inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
     union = F.size(F.col("__sa")) + F.size(F.col("__sb")) - inter
     return (
-        pairs.join(la, left)
-        .join(lb, right)
-        .select(left, right, (inter / union).alias("jaccard"))
+        pairs.join(la, "i")
+        .join(lb, "j")
+        .select("i", "j", (inter / union).alias("jaccard"))
     )
 
 
@@ -339,12 +351,7 @@ def containment_pairs(
     e = d.select(
         "__id", F.explode(F.transform("__sh", lambda s: F.xxhash64(s))).alias("s")
     )
-    a, b = e.alias("a"), e.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.__id") < F.col("b.__id")))
-        .groupBy(F.col("a.__id").alias("i"), F.col("b.__id").alias("j"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    pairs = posting_intersections(e, "__id", "s")
     directed = pairs.select(
         F.explode(
             F.array(

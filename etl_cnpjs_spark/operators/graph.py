@@ -23,11 +23,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+MAX_ITER = 20  # fused (2-hop) rounds before the loop stops unconverged
+
+
 def connected_components(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 20, probe_stride: int = 3
+    nodes: DataFrame, edges: DataFrame, probe_stride: int = 3
 ) -> DataFrame:
     """(node) × (src, dst) → (node, component) with component = min node id
-    reachable. Singletons map to themselves. Deterministic.
+    reachable within 2·MAX_ITER hops. Singletons map to themselves.
+    Deterministic.
 
     ``probe_stride`` controls how often the one-row convergence probe
     runs, in fused (2-hop) rounds: the first probe fires after
@@ -62,7 +66,7 @@ def connected_components(
             .agg(F.min("component").alias("component"))
         )
 
-    for r in range(1, max_iter + 1):
+    for r in range(1, MAX_ITER + 1):
         # two propagation steps fused per materialization: labels travel
         # 2 hops per checkpoint+convergence barrier — at cluster scale
         # the per-round barrier, not the shuffle volume, dominates
@@ -79,7 +83,7 @@ def connected_components(
         # barriers, the right direction once a barrier costs more than a
         # round (see SCALE.md).
         new_labels = propagate(propagate(labels)).localCheckpoint()
-        if r % probe_stride == probe_stride - 1 or r == max_iter:
+        if r % probe_stride == probe_stride - 1 or r == MAX_ITER:
             changed = (
                 new_labels.alias("n")
                 .join(labels.alias("o"), "node")

@@ -21,8 +21,12 @@ Scale regimes:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from etl_cnpjs_spark.serde import pickle_by_value
 
 
 def vec_double(vec: Column) -> Column:
@@ -43,6 +47,77 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 ALL_PAIRS_MAX_ROWS = 50_000  # above this, brute force is the wrong shape
+
+
+def _block_tasks(vecs, id_col, vec_col, block_target, max_rows, op, refusal):
+    """The blocked layout shared by all_pairs_cosine_blocked and
+    knn_join_blocked (``op``): refuse corpora above ``max_rows``
+    (ValueError ending in ``refusal``, which names the scale twin), assign each
+    vector to one of NB ≈ n/block_target blocks (id mod NB), collect
+    each block to one row (__blk, __vs), and cross-join block pairs
+    ba ≤ bb into (ba, va, bb, vb) tasks."""
+    n_rows = vecs.count()
+    if max_rows is not None and n_rows > max_rows:
+        raise ValueError(
+            f"{op}: {n_rows} vectors exceeds the {max_rows}-row guard. {refusal}"
+        )
+    nb = max(1, -(-n_rows // block_target))
+    blocks = (
+        vecs.select(
+            F.col(id_col).alias("__id"),
+            F.col(vec_col).alias("__v"),
+            (F.col(id_col) % nb).alias("__blk"),
+        )
+        .groupBy("__blk")
+        .agg(F.collect_list(F.struct("__id", "__v")).alias("__vs"))
+    )
+    a = blocks.select(F.col("__blk").alias("ba"), F.col("__vs").alias("va"))
+    b = blocks.select(F.col("__blk").alias("bb"), F.col("__vs").alias("vb"))
+    return a.join(b, F.col("ba") <= F.col("bb"))
+
+
+def _block_arrays(row):
+    """(ids_a, ids_b, A, B) of one block-pair task row."""
+    ia = np.array([r["__id"] for r in row.va], dtype=np.int64)
+    ib = np.array([r["__id"] for r in row.vb], dtype=np.int64)
+    A = np.array([r["__v"] for r in row.va], dtype=np.float64)
+    B = np.array([r["__v"] for r in row.vb], dtype=np.float64)
+    return ia, ib, A, B
+
+
+def _seq_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """A·Bᵀ as a sequential fold over dimensions, vectorized over pairs."""
+    acc = np.zeros((A.shape[0], B.shape[0]))
+    for d in range(A.shape[1]):
+        acc += np.multiply.outer(A[:, d], B[:, d])
+    return acc
+
+
+def _seq_norm(A: np.ndarray) -> np.ndarray:
+    """Row norms, each a sequential fold over dimensions."""
+    acc = np.zeros(A.shape[0])
+    for d in range(A.shape[1]):
+        acc += A[:, d] * A[:, d]
+    return np.sqrt(acc)
+
+
+def _block_cosine(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """The cosine matrix of two blocks, in the SQL fold's op order."""
+    return _seq_dot(A, B) / np.multiply.outer(_seq_norm(A), _seq_norm(B))
+
+
+PAIR_SCHEMA = "i bigint, j bigint, cos_sim double"
+
+
+def _pair_frame(out_i: list, out_j: list, out_c: list) -> pd.DataFrame:
+    """One PAIR_SCHEMA batch from per-task array lists (empty-safe)."""
+    return pd.DataFrame(
+        {
+            "i": np.concatenate(out_i) if out_i else np.array([], dtype=np.int64),
+            "j": np.concatenate(out_j) if out_j else np.array([], dtype=np.int64),
+            "cos_sim": np.concatenate(out_c) if out_c else np.array([]),
+        }
+    )
 
 
 def all_pairs_cosine_blocked(
@@ -70,58 +145,23 @@ def all_pairs_cosine_blocked(
     cos = dot / (sqrt(na)·sqrt(nb)) applies the same op order — so the
     exact-oracle contract survives the numpy fast path.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F811 (local for clarity)
-
-    n_rows = vecs.count()
-    if max_rows is not None and n_rows > max_rows:
-        raise ValueError(
-            f"all_pairs_cosine_blocked: {n_rows} vectors exceeds the "
-            f"{max_rows}-row guard. Brute-force all-pairs is the exact "
-            "ORACLE baseline, not a scale path — its work grows O(n²) no "
-            "matter how it is blocked. Use embedding_lsh_pairs "
-            "(dedup_embedding_lsh: banded candidates + bucket-local "
-            "verify) or the IVF ANN path (sim_topk_ivf) instead; to run "
-            "brute force anyway (e.g. conformance on a sampled slice), "
-            "pass max_rows=None explicitly."
-        )
-    nb = max(1, -(-n_rows // block_target))
-    blocks = (
-        vecs.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__v"),
-            (F.col(id_col) % nb).alias("__blk"),
-        )
-        .groupBy("__blk")
-        .agg(F.collect_list(F.struct("__id", "__v")).alias("__vs"))
+    tasks = _block_tasks(
+        vecs, id_col, vec_col, block_target, max_rows, "all_pairs_cosine_blocked",
+        "Brute-force all-pairs is the exact "
+        "ORACLE baseline, not a scale path — its work grows O(n²) no "
+        "matter how it is blocked. Use embedding_lsh_pairs "
+        "(dedup_embedding_lsh: banded candidates + bucket-local "
+        "verify) or the IVF ANN path (sim_topk_ivf) instead; to run "
+        "brute force anyway (e.g. conformance on a sampled slice), "
+        "pass max_rows=None explicitly.",
     )
-    a = blocks.select(F.col("__blk").alias("ba"), F.col("__vs").alias("va"))
-    b = blocks.select(F.col("__blk").alias("bb"), F.col("__vs").alias("vb"))
-    tasks = a.join(b, F.col("ba") <= F.col("bb"))
-
-    def _seq_dot(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
-        # sequential fold over dimensions, vectorized over pairs
-        acc = np.zeros((A.shape[0], B.shape[0]))
-        for d in range(A.shape[1]):
-            acc += np.multiply.outer(A[:, d], B[:, d])
-        return acc
-
-    def _seq_norm(A: "np.ndarray") -> "np.ndarray":
-        acc = np.zeros(A.shape[0])
-        for d in range(A.shape[1]):
-            acc += A[:, d] * A[:, d]
-        return np.sqrt(acc)
 
     def score(batches):
         for pdf in batches:
             out_i, out_j, out_c = [], [], []
             for row in pdf.itertuples(index=False):
-                ia = np.array([r["__id"] for r in row.va], dtype=np.int64)
-                ib = np.array([r["__id"] for r in row.vb], dtype=np.int64)
-                A = np.array([r["__v"] for r in row.va], dtype=np.float64)
-                B = np.array([r["__v"] for r in row.vb], dtype=np.float64)
-                cos = _seq_dot(A, B) / np.multiply.outer(_seq_norm(A), _seq_norm(B))
+                ia, ib, A, B = _block_arrays(row)
+                cos = _block_cosine(A, B)
                 mask = cos >= tau
                 if row.ba == row.bb:
                     mask &= ia[:, None] < ib[None, :]
@@ -131,15 +171,9 @@ def all_pairs_cosine_blocked(
                 out_i.append(lo)
                 out_j.append(hi)
                 out_c.append(cos[mask])
-            yield pd.DataFrame(
-                {
-                    "i": np.concatenate(out_i) if out_i else np.array([], dtype=np.int64),
-                    "j": np.concatenate(out_j) if out_j else np.array([], dtype=np.int64),
-                    "cos_sim": np.concatenate(out_c) if out_c else np.array([]),
-                }
-            )
+            yield _pair_frame(out_i, out_j, out_c)
 
-    return tasks.mapInPandas(score, "i bigint, j bigint, cos_sim double")
+    return tasks.mapInPandas(score, PAIR_SCHEMA)
 
 
 def knn_join_blocked(
@@ -159,45 +193,15 @@ def knn_join_blocked(
     building the kNN graph for embedding dedup/clustering without ever
     materializing the full pair matrix. Arithmetic is the same
     bit-deterministic sequential fold as the oracle."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
-    n_rows = vecs.count()
-    if max_rows is not None and n_rows > max_rows:
-        raise ValueError(
-            f"knn_join_blocked: {n_rows} vectors exceeds the {max_rows}-row "
-            "guard. The blocked brute-force k-NN self-join scores O(n²) "
-            "pairs — the exact baseline, not a scale path. Use sim_topk_ivf "
-            "(centroid-pruned probes) for ANN at scale, or pass "
-            "max_rows=None explicitly to run brute force anyway."
-        )
-    nb = max(1, -(-n_rows // block_target))
-    blocks = (
-        vecs.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__v"),
-            (F.col(id_col) % nb).alias("__blk"),
-        )
-        .groupBy("__blk")
-        .agg(F.collect_list(F.struct("__id", "__v")).alias("__vs"))
+    tasks = _block_tasks(
+        vecs, id_col, vec_col, block_target, max_rows, "knn_join_blocked",
+        "The blocked brute-force k-NN self-join scores O(n²) "
+        "pairs — the exact baseline, not a scale path. Use sim_topk_ivf "
+        "(centroid-pruned probes) for ANN at scale, or pass "
+        "max_rows=None explicitly to run brute force anyway.",
     )
-    a = blocks.select(F.col("__blk").alias("ba"), F.col("__vs").alias("va"))
-    b = blocks.select(F.col("__blk").alias("bb"), F.col("__vs").alias("vb"))
-    tasks = a.join(b, F.col("ba") <= F.col("bb"))
-
-    def _seq_dot(A, B):
-        acc = np.zeros((A.shape[0], B.shape[0]))
-        for d in range(A.shape[1]):
-            acc += np.multiply.outer(A[:, d], B[:, d])
-        return acc
-
-    def _seq_norm(A):
-        acc = np.zeros(A.shape[0])
-        for d in range(A.shape[1]):
-            acc += A[:, d] * A[:, d]
-        return np.sqrt(acc)
 
     def _local_topk(ids_q, ids_c, cos):
         # per query row, local top-k column indices (score desc, id asc)
@@ -216,11 +220,8 @@ def knn_join_blocked(
         for pdf in batches:
             acc_i, acc_j, acc_c = [], [], []
             for row in pdf.itertuples(index=False):
-                ia = np.array([r["__id"] for r in row.va], dtype=np.int64)
-                ib = np.array([r["__id"] for r in row.vb], dtype=np.int64)
-                A = np.array([r["__v"] for r in row.va], dtype=np.float64)
-                B = np.array([r["__v"] for r in row.vb], dtype=np.float64)
-                cos = _seq_dot(A, B) / np.multiply.outer(_seq_norm(A), _seq_norm(B))
+                ia, ib, A, B = _block_arrays(row)
+                cos = _block_cosine(A, B)
                 if row.ba == row.bb:
                     np.fill_diagonal(cos, -np.inf)  # never own neighbor
                     i1, j1, c1 = _local_topk(ia, ib, cos)
@@ -229,15 +230,9 @@ def knn_join_blocked(
                     i1, j1, c1 = _local_topk(ia, ib, cos)
                     i2, j2, c2 = _local_topk(ib, ia, cos.T)
                     acc_i += i1 + i2; acc_j += j1 + j2; acc_c += c1 + c2
-            yield pd.DataFrame(
-                {
-                    "i": np.concatenate(acc_i) if acc_i else np.array([], dtype=np.int64),
-                    "j": np.concatenate(acc_j) if acc_j else np.array([], dtype=np.int64),
-                    "cos_sim": np.concatenate(acc_c) if acc_c else np.array([]),
-                }
-            )
+            yield _pair_frame(acc_i, acc_j, acc_c)
 
-    cands = tasks.mapInPandas(score, "i bigint, j bigint, cos_sim double")
+    cands = tasks.mapInPandas(score, PAIR_SCHEMA)
     w = Window.partitionBy("i").orderBy(F.desc("cos_sim"), F.asc("j"))
     return (
         cands.withColumn("rn", F.row_number().over(w))
@@ -246,23 +241,22 @@ def knn_join_blocked(
     )
 
 
-def hyperplane_signatures(
-    vecs, id_col: str, vec_col: str, bands: int, rows: int, seed: int = 42
-):
+HYPERPLANE_SEED = 42
+
+
+def hyperplane_signatures(vecs, id_col: str, vec_col: str, bands: int, rows: int):
     """(id, v, bk) with bk = array of ``bands`` LSH band keys from
     random-hyperplane (SimHash-for-cosine) sign bits.
 
-    Signature: H = bands·rows hyperplanes drawn N(0,1) from a fixed seed
-    — every executor regenerates the identical matrix locally
-    (RandomState(seed) is deterministic given (seed, dim, H)), so
+    Signature: H = bands·rows hyperplanes drawn N(0,1) from
+    HYPERPLANE_SEED — every executor regenerates the identical matrix
+    locally (RandomState(seed) is deterministic given (seed, dim, H)), so
     nothing is shipped and the signature is reproducible run-to-run.
     Bits are computed as one Arrow-batched numpy matmul per batch
     ((batch×dim)·(dim×H) — the vectorized fast path, no per-row Python),
     then packed r-bit slices become the band keys. Two vectors collide
     in band b iff all r sign bits agree there:
     P(bit agree) = 1 − θ/π for angle θ — the Charikar bound."""
-    import numpy as np
-    import pandas as pd
 
     def sign_batches(batches):
         planes = {}
@@ -272,7 +266,7 @@ def hyperplane_signatures(
                 continue
             dim = len(pdf["__v"].iloc[0])
             if dim not in planes:
-                planes[dim] = np.random.RandomState(seed).standard_normal(
+                planes[dim] = np.random.RandomState(HYPERPLANE_SEED).standard_normal(
                     (dim, bands * rows)
                 )
             V = np.array(list(pdf["__v"]), dtype=np.float64)
@@ -382,7 +376,6 @@ def embedding_lsh_pairs(
     tau: float,
     bands: int,
     rows: int,
-    seed: int = 42,
     bucket_cap: int = 1024,
 ):
     """Embedding near-dup pairs via hyperplane-LSH banding with
@@ -405,11 +398,8 @@ def embedding_lsh_pairs(
     A pair colliding in several bands is scored ONCE, in its first
     colliding band (score_salted_buckets) — scoring cost is the
     distinct-candidate count, not Σ bucket² across bands."""
-    import numpy as np
-    import pandas as pd
-
     signed = hyperplane_signatures(
-        vecs, id_col, vec_col, bands=bands, rows=rows, seed=seed
+        vecs, id_col, vec_col, bands=bands, rows=rows
     ).localCheckpoint()  # two consumers (size pre-agg + data path): one signature job
     buckets = salted_buckets(signed, bucket_cap)
     return score_salted_buckets(buckets, tau)
@@ -450,14 +440,6 @@ def _score_salted_buckets_raw(buckets, tau: float):
     count even on a corpus that collides in every band; losing the
     first-colliding-band mask would silently multiply verify work by
     the band-collision multiplicity while staying correct)."""
-    import numpy as np
-    import pandas as pd
-
-    def _seq_norm(A):
-        acc = np.zeros(A.shape[0])
-        for d in range(A.shape[1]):
-            acc += A[:, d] * A[:, d]
-        return np.sqrt(acc)
 
     def score_bucket(batches):
         for pdf in batches:
@@ -495,17 +477,9 @@ def _score_salted_buckets_raw(buckets, tau: float):
                 out_i.append(ids[ii][keep])
                 out_j.append(ids[jj][keep])
                 out_c.append(cos[keep])
-            yield pd.DataFrame(
-                {
-                    "i": np.concatenate(out_i) if out_i else np.array([], dtype=np.int64),
-                    "j": np.concatenate(out_j) if out_j else np.array([], dtype=np.int64),
-                    "cos_sim": np.concatenate(out_c) if out_c else np.array([]),
-                }
-            )
+            yield _pair_frame(out_i, out_j, out_c)
 
-    return buckets.mapInPandas(
-        score_bucket, "i bigint, j bigint, cos_sim double"
-    )
+    return buckets.mapInPandas(score_bucket, PAIR_SCHEMA)
 
 
 def bucket_cosine_pairs(
@@ -556,8 +530,6 @@ def gram_upper_map_in_pandas(df: DataFrame, vec_col: str = "v") -> DataFrame:
     budget holds to ~10⁹ vectors per (i,j) cell — beyond that,
     hierarchical re-aggregation or decimal partials."""
 
-    import pandas as pd  # noqa: F401 — shipped by value into the task
-
     def run(batches):
         import numpy as np
         import pandas as pd
@@ -585,3 +557,8 @@ def gram_upper_map_in_pandas(df: DataFrame, vec_col: str = "v") -> DataFrame:
         .groupBy("i", "j")
         .agg(_F.sum("s").alias("gram_q"))
     )
+
+
+# ship this module's functions by value inside serialized tasks — executors
+# don't have the package installed (see serde.py)
+pickle_by_value(__name__)

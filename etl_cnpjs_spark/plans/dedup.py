@@ -42,6 +42,7 @@ from etl_cnpjs_spark.operators.dedup import (
     exact_jaccard,
     jaccard_pairs,
     minhash_band_keys,
+    posting_intersections,
     simhash_signatures,
 )
 from etl_cnpjs_spark.operators.graph import connected_components
@@ -612,6 +613,39 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 STOP_SHINGLE_DF = 64  # postings with document frequency above this are dropped
 
 
+def _capped_candidates(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The df-capped candidate block of dedup_stopshingle and
+    dedup_containment_capped, over (doc_id, sh) shingle sets. Returns
+    ``cand`` (i, j, inter): the kept-shingle intersection of each pair
+    sharing a shingle of document frequency ≤ STOP_SHINGLE_DF; and
+    ``stats`` (doc_id, __n, __st): each doc's full set size and its
+    stop-shingle count, the bound the callers' exact verify needs. The
+    df count is a window over the same partitioning the self-join needs,
+    so the posting list shuffles by shingle once.
+
+    stats is doc-count-scale (one row per document): callers join it
+    with NO broadcast hint — at test SF AQE broadcasts it anyway (it is
+    tiny), and at the 100 TB regime a corpus-wide per-doc broadcast
+    would OOM the executors, so the hint must not force it; the
+    shuffle-join fallback is the correct plan there (r11 ADVICE low #2)."""
+    e = sh.select("doc_id", F.explode("sh").alias("s"))
+    ek = e.withColumn(
+        "__df", F.count(F.lit(1)).over(Window.partitionBy("s"))
+    ).filter(F.col("__df") <= STOP_SHINGLE_DF).drop("__df")
+    cand = posting_intersections(ek, "doc_id", "s")
+    kept_n = ek.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__kn"))
+    stats = (
+        sh.select("doc_id", F.size("sh").alias("__n"))
+        .join(kept_n, "doc_id", "left")
+        .select(
+            "doc_id",
+            "__n",
+            (F.col("__n") - F.coalesce(F.col("__kn"), F.lit(0))).alias("__st"),
+        )
+    )
+    return cand, stats
+
+
 @register(
     "dedup_stopshingle",
     oracle=_SQL_SHINGLES
@@ -671,32 +705,7 @@ def dedup_stopshingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     τ). Equivalence is pinned against a stop-shingle-heavy synthetic in
     tests/test_dedup_recall.py::test_stopshingle_bound_verify."""
     sh = _doc_shingles(spark, sf_dir)
-    e = sh.select("doc_id", F.explode("sh").alias("s"))
-    ek = e.withColumn(
-        "__df", F.count(F.lit(1)).over(Window.partitionBy("s"))
-    ).filter(F.col("__df") <= STOP_SHINGLE_DF).drop("__df")
-    a, b = ek.alias("a"), ek.alias("b")
-    cand = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("i"), F.col("b.doc_id").alias("j"))
-        .agg(F.count(F.lit(1)).alias("__ic"))
-    )
-    # node-scale stats: full size and stop-shingle count per doc
-    kept_n = ek.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__kn"))
-    stats = (
-        sh.select("doc_id", F.size("sh").alias("__n"))
-        .join(kept_n, "doc_id", "left")
-        .select(
-            "doc_id",
-            "__n",
-            (F.col("__n") - F.coalesce(F.col("__kn"), F.lit(0))).alias("__st"),
-        )
-    )
-    # stats is doc-count-scale (one row per document): NO broadcast
-    # hint — at test SF AQE broadcasts it anyway (it is tiny), and at
-    # the 100 TB regime a corpus-wide per-doc broadcast would OOM the
-    # executors, so the hint must not force it; the shuffle-join
-    # fallback is the correct plan there (r11 ADVICE low #2).
+    cand, stats = _capped_candidates(sh)
     c = (
         cand.join(
             stats.select(
@@ -721,7 +730,7 @@ def dedup_stopshingle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "i",
             "j",
-            (F.col("__ic") / (F.col("__ni") + F.col("__nj") - F.col("__ic"))).alias(
+            (F.col("inter") / (F.col("__ni") + F.col("__nj") - F.col("inter"))).alias(
                 "jaccard"
             ),
         )
@@ -730,8 +739,8 @@ def dedup_stopshingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ambiguous = c.filter(
         (F.col("__m") > 0)
         & (
-            (F.col("__ic") + F.col("__m"))
-            / (F.col("__ni") + F.col("__nj") - F.col("__ic") - F.col("__m"))
+            (F.col("inter") + F.col("__m"))
+            / (F.col("__ni") + F.col("__nj") - F.col("inter") - F.col("__m"))
             >= JACCARD_THRESHOLD
         )
     ).select("i", "j")
@@ -1031,29 +1040,7 @@ def dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full-array intersect. Pinned on a stop-shingle-heavy synthetic
     in tests/test_dedup_recall.py::test_containment_capped_bound_verify."""
     sh = _doc_shingles(spark, sf_dir)
-    e = sh.select("doc_id", F.explode("sh").alias("s"))
-    ek = e.withColumn(
-        "__df", F.count(F.lit(1)).over(Window.partitionBy("s"))
-    ).filter(F.col("__df") <= STOP_SHINGLE_DF).drop("__df")
-    a, b = ek.alias("a"), ek.alias("b")
-    cand = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("i"), F.col("b.doc_id").alias("j"))
-        .agg(F.count(F.lit(1)).alias("__ic"))
-    )
-    kept_n = ek.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__kn"))
-    stats = (
-        sh.select("doc_id", F.size("sh").alias("__n"))
-        .join(kept_n, "doc_id", "left")
-        .select(
-            "doc_id",
-            "__n",
-            (F.col("__n") - F.coalesce(F.col("__kn"), F.lit(0))).alias("__st"),
-        )
-    )
-    # doc-count-scale stats: unhinted, same reasoning as
-    # dedup_stopshingle above (AQE broadcasts when small; forcing it
-    # would OOM at corpus scale).
+    cand, stats = _capped_candidates(sh)
     c = (
         cand.join(
             stats.select(
@@ -1074,12 +1061,12 @@ def dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__m", F.least("__sti", "__stj"))
     )
     exact = c.filter(F.col("__m") == 0).select(
-        "i", "j", F.col("__ic").alias("x"), "na", "nb"
+        "i", "j", F.col("inter").alias("x"), "na", "nb"
     )
     ambiguous = c.filter(
         (F.col("__m") > 0)
         & (
-            (F.col("__ic") + F.col("__m"))
+            (F.col("inter") + F.col("__m"))
             / F.least(F.col("na"), F.col("nb"))
             >= CONTAINMENT_THRESHOLD
         )

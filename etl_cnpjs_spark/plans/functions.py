@@ -1004,13 +1004,8 @@ def udaf_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen)."""
     import math
 
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # explicit GROUPED_AGG functionType: the type-hint route only accepts
-    # float-returning Series->scalar signatures in pyspark 4.1
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def log_micro_sum(v: pd.Series):
+    @pandas_udf("long")
+    def log_micro_sum(v: pd.Series) -> int:
         return int(sum(math.floor(math.log(x) * 1000000 + 0.5) for x in v))
 
     o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)

@@ -36,6 +36,7 @@ NEAR_DUP_TAU = 0.4  # this corpus's embeddings are near-orthogonal (max
 # pairwise cos ≈ 0.51 at sf0.01); 0.4 keeps the plan's output non-trivial.
 CENTROID_MOD = 97  # deterministic coarse quantizer: vec_id % 97 == 0
 N_PROBE = 2
+KMEANS_N_PROBE = 4
 
 
 def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,6 +49,52 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_VECS = "SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings"
+
+
+def _query(n: DataFrame) -> DataFrame:
+    """The one query row (qv, qid): the vector with the lowest vec_id."""
+    return (
+        n.orderBy("vec_id")
+        .limit(1)
+        .select(F.col("v").alias("qv"), F.col("vec_id").alias("qid"))
+    )
+
+
+def _score_vs_query(df: DataFrame, q: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` columns plus cos_sim of v against the broadcast query
+    row, every row but the query itself."""
+    return (
+        df.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select(*keep, cosine(F.col("v"), F.col("qv")).alias("cos_sim"))
+    )
+
+
+def _probe_topk(
+    assign: DataFrame, centroids: DataFrame, q: DataFrame, n_probe: int
+) -> DataFrame:
+    """The IVF probe-and-rank tail: rank the centroids (cid, cv) by cosine
+    to the query (ties to the smallest cid), keep the n_probe nearest,
+    and take the TOP_K of their assigned vectors (vec_id, label, v, cid)
+    by exact cosine."""
+    probes = (
+        centroids.crossJoin(F.broadcast(q))
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                Window.orderBy(F.desc(cosine(F.col("qv"), F.col("cv"))), F.asc("cid"))
+            ),
+        )
+        .filter(F.col("rn") <= n_probe)
+        .select("cid")
+    )
+    return (
+        _score_vs_query(
+            assign.join(F.broadcast(probes), "cid"), q, "vec_id", "label", "cid"
+        )
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+        .limit(TOP_K)
+    )
 
 
 @register(
@@ -68,16 +115,7 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast the single query row, scan once, TakeOrderedAndProject heap.
     The exact-ANN baseline; linear in corpus size at any scale."""
     n = _vecs(spark, sf_dir)
-    q = (
-        n.orderBy("vec_id")
-        .limit(1)
-        .select(F.col("v").alias("qv"), F.col("vec_id").alias("qid"))
-    )
-    scored = (
-        n.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("vec_id", "label", cosine(F.col("v"), F.col("qv")).alias("cos_sim"))
-    )
+    scored = _score_vs_query(n, _query(n), "vec_id", "label")
     return scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(TOP_K)
 
 
@@ -134,11 +172,11 @@ def _kmeans_model(spark: SparkSession, sf_dir: str) -> object:
 def sim_topk_kmeans_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production form of sim_topk_kmeans: IVF with a TRAINED coarse
     quantizer. pyspark.ml KMeans(16, seed fixed) fits centroids, vectors
-    are assigned by the model, the query probes its 4 nearest centroid
-    buckets, exact cosine ranks within probes. MLlib's KMeans is itself
-    a distributed Lloyd's iteration, so the trainer scales with the
-    corpus; the model is trained once per (session, sf) and reused
-    (_kmeans_model), mirroring offline quantizer training. Because
+    are assigned by the model, the query probes its KMEANS_N_PROBE
+    nearest centroid buckets, exact cosine ranks within probes. MLlib's
+    KMeans is itself a distributed Lloyd's iteration, so the trainer
+    scales with the corpus; the model is trained once per (session, sf)
+    and reused (_kmeans_model), mirroring offline quantizer training. Because
     trained-model assignment depends on MLlib internals it cannot carry
     a SQL oracle — this key is DELIBERATELY rows-only (the one such key
     in the registry, r6 ADVICE item 1: benchmark output must not claim
@@ -151,37 +189,12 @@ def sim_topk_kmeans_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _vecs(spark, sf_dir).withColumn("features", array_to_vector(F.col("v")))
     model = _kmeans_model(spark, sf_dir)
     assign = model.transform(n).select("vec_id", "label", "v", "cid")
-    q = (
-        assign.orderBy("vec_id")
-        .limit(1)
-        .select(F.col("v").alias("qv"), F.col("vec_id").alias("qid"))
-    )
     centroids = spark.createDataFrame(
         [(i, list(map(float, c))) for i, c in enumerate(model.clusterCenters())],
         "cid int, cv array<double>",
     )
-    probes = (
-        centroids.crossJoin(F.broadcast(q))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.orderBy(F.desc(cosine(F.col("qv"), F.col("cv"))), F.asc("cid"))
-            ),
-        )
-        .filter(F.col("rn") <= 4)
-        .select("cid")
-    )
-    return (
-        assign.join(F.broadcast(probes), "cid")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("vec_id", "label", "cid", cosine(F.col("v"), F.col("qv")).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
+    return _probe_topk(assign, centroids, _query(assign), KMEANS_N_PROBE)
 
-
-KMEANS_N_PROBE = 4
 
 # Shared CTE block: deterministic label-mean centroids (one exact
 # Lloyd's assign step, decimal-quantized — embedding_centroids'
@@ -329,30 +342,7 @@ def sim_topk_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus."""
     n = _vecs(spark, sf_dir)
     c, assign = _label_centroid_assignment(n)
-    q = (
-        n.orderBy("vec_id")
-        .limit(1)
-        .select(F.col("v").alias("qv"), F.col("vec_id").alias("qid"))
-    )
-    probes = (
-        c.crossJoin(F.broadcast(q))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.orderBy(F.desc(cosine(F.col("qv"), F.col("cv"))), F.asc("cid"))
-            ),
-        )
-        .filter(F.col("rn") <= KMEANS_N_PROBE)
-        .select("cid")
-    )
-    return (
-        assign.join(F.broadcast(probes), "cid")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("vec_id", "label", "cid", cosine(F.col("v"), F.col("qv")).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
+    return _probe_topk(assign, c, _query(n), KMEANS_N_PROBE)
 
 
 @register(
@@ -453,30 +443,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.cid").alias("cid"),
         )
     )
-    q = (
-        n.orderBy("vec_id")
-        .limit(1)
-        .select(F.col("v").alias("qv"), F.col("vec_id").alias("qid"))
-    )
-    probes = (
-        c.crossJoin(F.broadcast(q))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.orderBy(F.desc(cosine(F.col("qv"), F.col("cv"))), F.asc("cid"))
-            ),
-        )
-        .filter(F.col("rn") <= N_PROBE)
-        .select("cid")
-    )
-    return (
-        assign.join(F.broadcast(probes), "cid")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("vec_id", "label", "cid", cosine(F.col("v"), F.col("qv")).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
+    return _probe_topk(assign, c, _query(n), N_PROBE)
 
 
 @register(
@@ -789,16 +756,7 @@ def sim_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", vec_double(F.col("embedding")).alias("v")
     )
-    q = (
-        e.orderBy("vec_id")
-        .limit(1)
-        .select(F.col("v").alias("qv"), F.col("vec_id").alias("qid"))
-    )
-    s = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("vec_id", "label", cosine(F.col("v"), F.col("qv")).alias("cos_sim"))
-    )
+    s = _score_vs_query(e, _query(e), "vec_id", "label")
     from pyspark.sql.window import Window as W
 
     r = s.withColumn(

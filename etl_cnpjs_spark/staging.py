@@ -3,19 +3,21 @@
 The reference bulk-loads its inputs once, then queries. The engine's
 equivalents — a checkpointed shingle frame, a fitted quantizer, a copy of
 a table in another format, a catalog table's session view — are built once
-per Spark application through one memo, ``@staged(name)``:
+per Spark session through one memo, ``@staged(name)``:
 
-- The key is ``(applicationId, args)``: checkpoint blocks and temp views
-  die with their application, so a new session never sees a dead entry.
+- The key is ``(spark, args)``, the SparkSession object the caller passes:
+  temp views belong to one session and checkpoint blocks die with their
+  application, so another session (``spark.newSession()``, or one after a
+  restart) never sees an entry it cannot use. The key costs no JVM call.
 - Each entry carries a fingerprint, ``(name, size, mtime_ns)`` of every
   argument that is a path on disk (a file, or each entry of a directory
   and of its subdirectories). A call whose fingerprint differs rebuilds
   and replaces the entry, so a rewritten fixture invalidates itself.
 - ``per_session=True`` is for a build whose product is session state
-  (temp views): one entry per application, rebuilt and replaced when
-  called with other arguments.
+  (temp views): one entry per session, rebuilt and replaced when called
+  with other arguments.
 - ``REGISTRY`` lists every stager by name with its build and hit counts
-  and last build time; ``clear`` evicts one application's entries, or all.
+  and last build time; ``clear`` evicts one session's entries, or all.
 
 ``disk_stage`` is the cross-process counterpart for deterministic input
 files.
@@ -83,8 +85,7 @@ class Stager:
         self.last_build_s: float | None = None
 
     def __call__(self, spark, *args):
-        app = spark.sparkContext.applicationId
-        key = (app,) if self.per_session else (app, args)
+        key = (spark,) if self.per_session else (spark, args)
         stamp = (args, _fingerprint(args)) if self.per_session else _fingerprint(args)
         hit = self.memo.get(key)
         if hit is not None and hit[0] == stamp:
@@ -115,13 +116,13 @@ def staged(name: str, per_session: bool = False) -> Callable[[Callable], Stager]
     return wrap
 
 
-def clear(app_id: str | None = None) -> int:
-    """Evict every stager's entries for one applicationId, or all of them;
+def clear(spark=None) -> int:
+    """Evict every stager's entries for one SparkSession, or all of them;
     returns how many were dropped. Dropping the last reference to a
     checkpointed frame lets Spark's ContextCleaner reclaim its blocks."""
     n = 0
     for s in REGISTRY.values():
-        for key in [k for k in s.memo if app_id is None or k[0] == app_id]:
+        for key in [k for k in s.memo if spark is None or k[0] is spark]:
             del s.memo[key]
             n += 1
     return n

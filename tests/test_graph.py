@@ -1,10 +1,11 @@
-"""Independent-derivation pins for three intricate keys that previously
-had only the generic oracle sweep: graph_cc_incremental (repair ==
-full recompute, vs Python union-find), events_funnel_24h (deadline
-semantics incl. the exact-24h boundary, vs a sequential Python funnel),
-and text_collocations_pmi (vs Python PMI arithmetic). Each fixture is
-hand-planted; neither the plan nor its DuckDB oracle is used to derive
-the expected values."""
+"""Graph-family plans (plans/graph.py) checked against values derived in
+pure Python from hand-planted fixtures: union-find for
+graph_cc_incremental, power iteration for graph_hits and graph_pagerank,
+dict arithmetic for graph_bipartite_project, graph_bfs_bounded,
+graph_label_propagation and graph_kcore. Neither the Spark plan nor its
+DuckDB oracle derives the expected values, so a regression both engines
+share is still caught. test_graph_keys_exact_under_offset_aliasing pins
+plan ≡ oracle on the node-id aliasing fixture."""
 
 from __future__ import annotations
 
@@ -83,121 +84,6 @@ def test_cc_incremental_equals_unionfind(spark, cc_dir):
     got = {
         r.node: r.component
         for r in QUERIES["graph_cc_incremental"].fn(spark, cc_dir).collect()
-    }
-    assert got == expected
-
-
-# --- events_funnel_24h vs sequential Python ----------------------------------
-
-_H = 3_600_000_000  # µs per hour
-_WEEK = 7 * 86_400_000_000
-
-
-@pytest.fixture()
-def funnel_dir(tmp_path):
-    """One user per deadline rule, split across two signup weeks:
-
-    week 0: u1 converts (+1h) | u2 purchase at exactly +24h -> NOT
-            converted (strict <) | u3 purchase 1h BEFORE signup -> not
-    week 1: u4 two signups, purchase 23h after the FIRST -> converted
-            (25h after would miss) | u6 signup only -> not
-    u5 purchase with no signup -> excluded entirely.
-    """
-    rows = [
-        (1, 10 * _H, "signup"),
-        (1, 11 * _H, "purchase"),
-        (2, 10 * _H, "signup"),
-        (2, 10 * _H + 24 * _H, "purchase"),
-        (3, 10 * _H, "signup"),
-        (3, 9 * _H, "purchase"),
-        (4, _WEEK + 1 * _H, "signup"),
-        (4, _WEEK + 3 * _H, "signup"),
-        (4, _WEEK + 24 * _H, "purchase"),  # 23h after FIRST signup
-        (5, 5 * _H, "purchase"),
-        (6, _WEEK + 2 * _H, "signup"),
-    ]
-    pd.DataFrame(
-        {
-            "event_id": range(len(rows)),
-            "ts": pd.to_datetime([r[1] for r in rows], unit="us"),
-            "user_id": [r[0] for r in rows],
-            "event_type": [r[2] for r in rows],
-            "value": [1.0] * len(rows),
-            "props": ["{}"] * len(rows),
-        }
-    ).to_parquet(tmp_path / "events.parquet", index=False)
-    return str(tmp_path)
-
-
-FUNNEL_EXPECTED = {
-    # week: (n_signups, n_converted, ppm)
-    0: (3, 1, 1_000_000 // 3),
-    1: (2, 1, 500_000),
-}
-
-
-def test_funnel24_matches_sequential(spark, funnel_dir):
-    rows = QUERIES["events_funnel_24h"].fn(spark, funnel_dir).collect()
-    got = {
-        r.signup_week: (r.n_signups, r.n_converted_24h, r.conversion_ppm)
-        for r in rows
-    }
-    assert got == FUNNEL_EXPECTED
-
-
-# --- text_collocations_pmi vs Python arithmetic -------------------------------
-
-
-@pytest.fixture()
-def pmi_dir(tmp_path):
-    """Counts chosen by hand: bigram 'alpha beta' x6 and 'gamma delta'
-    x5 survive the min-count 5 prune; 'beta gamma' x2 is pruned. Filler
-    unigrams skew the marginals so the two surviving PMIs differ."""
-    docs = (
-        ["alpha beta"] * 4
-        + ["alpha beta gamma delta"] * 2  # adds 'beta gamma' x2 (pruned)
-        + ["gamma delta"] * 3
-        + ["alpha", "beta", "gamma gamma"]  # marginal skew, no new bigrams >= 5
-    )
-    pd.DataFrame(
-        {
-            "doc_id": range(len(docs)),
-            "text": docs,
-            "lang": ["en"] * len(docs),
-            "source": ["fix"] * len(docs),
-            "n_chars": [len(t) for t in docs],
-        }
-    ).to_parquet(tmp_path / "documents.parquet", index=False)
-    return str(tmp_path)
-
-
-def test_pmi_matches_python(spark, pmi_dir):
-    docs = pd.read_parquet(f"{pmi_dir}/documents.parquet")["text"]
-    uni: dict[str, int] = {}
-    big: dict[tuple, int] = {}
-    total = 0
-    for t in docs:
-        toks = t.split()
-        total += len(toks)
-        for w in toks:
-            uni[w] = uni.get(w, 0) + 1
-        for x, y in zip(toks, toks[1:]):
-            big[(x, y)] = big.get((x, y), 0) + 1
-    surv = {p: c for p, c in big.items() if c >= 5}
-    exp_rows = []
-    for (w1, w2), cxy in surv.items():
-        arg = (float(cxy) * float(total)) / (float(uni[w1]) * float(uni[w2]))
-        pmi = math.floor(math.log(arg) * 1_000_000 + 0.5)
-        exp_rows.append((w1, w2, cxy, pmi))
-    exp_rows.sort(key=lambda r: (-r[3], r[0], r[1]))
-    expected = {
-        (rk + 1, w1, w2): (cxy, pmi)
-        for rk, (w1, w2, cxy, pmi) in enumerate(exp_rows)
-    }
-
-    got = {
-        (r.rk, r.w1, r.w2): (r.cxy, r.pmi_micro)
-        for r in QUERIES["text_collocations_pmi"].fn(spark, pmi_dir).collect()
     }
     assert got == expected
 

@@ -16,26 +16,24 @@ def _memo(name: str) -> dict:
 
 
 def test_clear_evicts_and_rebuilds(spark, sf_dir):
-    app = spark.sparkContext.applicationId
-
     before = {tuple(r) for r in dedup._banded8x2(spark, sf_dir).select("doc_id").collect()}
-    assert (app, (sf_dir,)) in _memo("banded")
-    assert (app, (sf_dir,)) in _memo("shingles")
+    assert (spark, (sf_dir,)) in _memo("banded")
+    assert (spark, (sf_dir,)) in _memo("shingles")
 
-    n = staging.clear(app)
+    n = staging.clear(spark)
     assert n >= 2
-    assert all(key[0] != app for name in DEDUP_STAGERS for key in _memo(name))
+    assert all(key[0] is not spark for name in DEDUP_STAGERS for key in _memo(name))
 
     # the memo rebuilds transparently and reproduces the same frame
     after = {tuple(r) for r in dedup._banded8x2(spark, sf_dir).select("doc_id").collect()}
     assert after == before
-    assert (app, (sf_dir,)) in _memo("banded")
+    assert (spark, (sf_dir,)) in _memo("banded")
 
 
 def test_clear_all_and_scoped_noop(spark, sf_dir):
     dedup._doc_shingles(spark, sf_dir)
-    # a scoped clear for an unknown app touches nothing
-    assert staging.clear("application_nonexistent_0") == 0
+    # a scoped clear for a session that staged nothing touches nothing
+    assert staging.clear(spark.newSession()) == 0
     assert _memo("shingles")
     # an unscoped clear drops everything
     assert staging.clear() >= 1

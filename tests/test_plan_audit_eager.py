@@ -38,12 +38,10 @@ def test_seeded_violation_flags(spark):
     assert [h[0] for h in hits] == ["count"]
 
 
-def test_every_intercepted_action_fires(spark):
+def test_every_intercepted_action_fires(spark, tmp_path):
     """Each method in EAGER_ACTIONS is actually intercepted (a rename in
     a future pyspark would silently blind the audit otherwise)."""
-    import tempfile
-
-    spark.sparkContext.setCheckpointDir(tempfile.mkdtemp(prefix="eager_ckpt_"))
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
     df = spark.range(5)
     calls = {
         "count": lambda: df.count(),

@@ -127,7 +127,11 @@ def test_streaming_library_import_leaves_registry_unloaded():
 
 # Round-named test files whose tests now live in family test files
 # (tests/test_<family>.py). ROADMAP item 3 moves the rest batch by batch.
-MOVED_ROUND_TEST_FILES = ("test_adversarial_r8.py", "test_adversarial_r9.py")
+MOVED_ROUND_TEST_FILES = (
+    "test_adversarial_r7.py",
+    "test_adversarial_r8.py",
+    "test_adversarial_r9.py",
+)
 
 
 def test_moved_round_test_files_stay_gone():

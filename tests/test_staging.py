@@ -188,6 +188,21 @@ def test_table_and_views_name_one_view(spark, sf_dir):
     assert not table(spark, sf_dir, "customer").sameSemantics(spark.table(v))
 
 
+def test_stagers_serve_a_new_session(spark):
+    """Temp views belong to one SparkSession: after the first session
+    has read a table, a ``newSession()`` reads it through ``table()``,
+    a SQL statement over ``views()`` and a plan, each from views of its
+    own."""
+    sf = SMOKE_SF_DIR
+    n = table(spark, sf, "nation").count()
+    s2 = spark.newSession()
+    assert table(s2, sf, "nation").count() == n
+    v = views(s2, sf)["nation"]
+    assert s2.sql(f"SELECT count(*) AS n FROM {v}").first().n == n
+    flagship = QUERIES["flagship"].fn
+    assert sorted(flagship(s2, sf).collect()) == sorted(flagship(spark, sf).collect())
+
+
 def test_aliased_self_join_over_table_handles(spark, sf_dir):
     """Two ``table()`` handles on one view share expression ids; aliased,
     with ``F.col("alias.c")`` references, they self-join."""
@@ -204,8 +219,9 @@ def test_stage_root_is_private():
 
 
 def test_no_hand_rolled_memos():
-    """Only staging.py keys state by applicationId, and no module defines
-    a module-level _*_cache / _*_CACHE dict: session memos go through
+    """No module keys state by applicationId (temp views belong to one
+    session, not to the application), and no module defines a
+    module-level _*_cache / _*_CACHE dict: session memos go through
     @staged."""
     offenders = []
     for root, _, files in os.walk(PKG):
@@ -216,7 +232,7 @@ def test_no_hand_rolled_memos():
             rel = os.path.relpath(path, PKG)
             with open(path) as fh:
                 src = fh.read()
-            if rel != "staging.py" and "sparkContext.applicationId" in src:
+            if "sparkContext.applicationId" in src:
                 offenders.append(f"{rel}: sparkContext.applicationId")
             for node in ast.parse(src).body:
                 targets = (
