@@ -37,6 +37,9 @@ Failure records: BENCH_DETAIL.json carries {"status": ok|error|timeout,
 "error": "<Class>: <first line>"} for every in-suite entry (key "status")
 and every isolated subprocess (key "isolated_status"), so a -1 in the
 timings names its cause. Every subprocess goes through run_json_child.
+
+Codegen compile layer: BENCH_DETAIL.json key "codegen_compiles" holds,
+per key, the classes Spark's codegen compiled during its timed reps.
 """
 
 from __future__ import annotations
@@ -53,7 +56,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_cnpjs_spark import staging  # noqa: E402
 from etl_cnpjs_spark.plans import QUERIES  # noqa: E402
-from etl_cnpjs_spark.session import get_spark  # noqa: E402
+from etl_cnpjs_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 # The queries a reader of ONE line should see: flagship parity, TPC-H
 # spine, the LLM-pipeline north stars, and the layout/streaming keys.
@@ -200,10 +203,14 @@ def main() -> None:
     # one extra slow-key run.
     rep_budget = 12.0
     all_reps: dict[str, list[float]] = {}
+    # Classes codegen compiled during each key's timed reps (the codegen
+    # compile layer); a warm key whose classes stay cached compiles none.
+    compiles: dict[str, int] = {}
     failures = 0
     for name in sorted(QUERIES):
         runs: list[float] = []
         status[name] = ok()
+        compiles0 = codegen_compiles(spark)
         for _ in range(reps):
             try:
                 runs.append(round(run_once(spark, QUERIES[name].fn, sf_dir), 4))
@@ -214,6 +221,7 @@ def main() -> None:
             if len(runs) >= 2 and sum(runs) >= rep_budget:
                 break
         all_reps[name] = runs
+        compiles[name] = codegen_compiles(spark) - compiles0
         if status[name]["status"] != "ok" or not runs:
             timings[name] = -1.0
             failures += 1
@@ -373,6 +381,7 @@ def main() -> None:
                     "queries": timings,
                     "queries_reps": all_reps,
                     "queries_noise": noise_per_key,
+                    "codegen_compiles": compiles,
                     "isolated_reps": isolated_reps,
                     "isolated_status": isolated_status,
                     "status": status,

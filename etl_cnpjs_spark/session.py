@@ -14,6 +14,18 @@ multi-executor scale and merely *tested* on local[N]:
   (the DuckDB oracle runs timezone-naive).
 - Arrow enabled: every Python-side exchange (pandas UDFs, toPandas) is
   columnar-batched, never row-at-a-time pickling.
+- Codegen class cache sized to the plans' working set
+  (`CODEGEN_CACHE_ENTRIES`): Spark keeps compiled whole-stage classes in
+  one JVM-wide cache of 100 entries by default, and one long-lived
+  session runs many plans. At 100, the 18 perfbench plan_mix keys
+  recompile about 330 classes in every steady-state round, and a second
+  full-registry pass at sf0.001 recompiles about 5,000; at 8192 they
+  recompile 0-8 and about 120. Cost at registry scale (about 3,750
+  cached classes; 4 cores, 16 g heap), live after full GC: +118 MB heap,
+  +29 MB metaspace, +30 MB JIT code cache. The conf is static and
+  JVM-wide: it takes effect only when `get_spark` builds the JVM's first
+  session, and a vanilla session built elsewhere (as callers of
+  `__spark_entry__` do) keeps Spark's 100. No plan depends on it.
 """
 
 from __future__ import annotations
@@ -22,9 +34,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries in Spark's JVM-wide codegen class cache
+# (spark.sql.codegen.cache.maxEntries, default 100). One full-registry pass
+# at sf0.001 compiles about 3,750 distinct classes; 8192 leaves about 2x
+# headroom.
+CODEGEN_CACHE_ENTRIES = 8192
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's codegen has compiled in this JVM so far (the count of
+    its Janino compilation-time histogram)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def get_spark(app_name: str = "etl-cnpjs-spark", cpus: int | None = None) -> SparkSession:
@@ -50,5 +75,6 @@ def get_spark(app_name: str = "etl-cnpjs-spark", cpus: int | None = None) -> Spa
         .config("spark.ui.enabled", "false")
         .config("spark.sql.caseSensitive", "false")  # reference resolves
         # e.ID_MUNICIPIO against id_municipio (etl.py:224 vs :152)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()

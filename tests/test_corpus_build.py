@@ -6,12 +6,15 @@ asserted against BOTH the Spark plan and the DuckDB oracle."""
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
 
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from etl_cnpjs_spark.plans import QUERIES
@@ -533,3 +536,155 @@ def test_corpus_ingest_incremental_matches_pure_python(spark):
     # the fixture corpus must actually exercise the screen
     assert sum(v[1] + v[2] for v in expected.values()) > 0
 
+
+# --- corpus_decontaminate ----------------------------------------------------
+
+
+def _pick_ids(want_eval: int, want_train: int) -> tuple[list[int], list[int]]:
+    ev, tr, i = [], [], 1
+    while len(ev) < want_eval or len(tr) < want_train:
+        if _is_eval(i):
+            if len(ev) < want_eval:
+                ev.append(i)
+        elif len(tr) < want_train:
+            tr.append(i)
+        i += 1
+    return ev, tr
+
+
+@pytest.fixture()
+def decon_dir(tmp_path):
+    """Planted split-leakage cases. Doc ids are CHOSEN by evaluating the
+    Knuth hash in plain Python (independent of both engines):
+
+    - eval E0 duplicates train T0       -> E0 leaks.
+    - eval E1 duplicates eval E2 ONLY   -> no leak (both eval).
+    - train T1 duplicates train T2      -> no leak (train side only).
+    - eval E3 unique                    -> clean.
+    - train T3 unique                   -> nothing.
+
+    Expected (single source 'fix'): n_docs=8... (4 eval, 4 train),
+    n_eval=4, n_leaked=1 (E0), n_clean_eval=3.
+    """
+    ev, tr = _pick_ids(4, 4)
+    dup_a = " ".join(f"a_{i}" for i in range(12))
+    dup_b = " ".join(f"b_{i}" for i in range(12))
+    dup_c = " ".join(f"c_{i}" for i in range(12))
+    texts = {
+        ev[0]: dup_a,
+        tr[0]: dup_a,
+        ev[1]: dup_b,
+        ev[2]: dup_b,
+        tr[1]: dup_c,
+        tr[2]: dup_c,
+        ev[3]: " ".join(f"u_{i}" for i in range(12)),
+        tr[3]: " ".join(f"w_{i}" for i in range(12)),
+    }
+    docs = pd.DataFrame(
+        {
+            "doc_id": list(texts),
+            "text": list(texts.values()),
+            "lang": ["en"] * 8,
+            "source": ["fix"] * 8,
+            "n_chars": [len(t) for t in texts.values()],
+        }
+    )
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+    return str(tmp_path)
+
+
+DECON_EXPECTED = ("fix", 8, 4, 1, 3)
+
+
+def test_decontaminate_fixture_spark(spark, decon_dir):
+    rows = QUERIES["corpus_decontaminate"].fn(spark, decon_dir).collect()
+    assert len(rows) == 1
+    r = rows[0]
+    got = (r.source, r.n_docs, r.n_eval, r.n_leaked, r.n_clean_eval)
+    assert got == DECON_EXPECTED, f"{got} != hand-derived {DECON_EXPECTED}"
+
+
+def test_decontaminate_fixture_oracle(decon_dir):
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * "
+        f"FROM read_parquet('{decon_dir}/documents.parquet')"
+    )
+    rows = [tuple(r) for r in con.execute(QUERIES["corpus_decontaminate"].oracle).fetchall()]
+    assert rows == [DECON_EXPECTED]
+
+
+def test_decontaminate_eval_share_on_corpus(spark, sf_dir):
+    """Sanity on the shipped corpus: the hash split lands near 10% and
+    every reported count is internally consistent (leaked <= eval,
+    clean = eval - leaked)."""
+    rows = QUERIES["corpus_decontaminate"].fn(spark, sf_dir).collect()
+    n_docs = sum(r.n_docs for r in rows)
+    n_eval = sum(r.n_eval for r in rows)
+    assert n_docs > 0
+    assert 0.05 <= n_eval / n_docs <= 0.15
+    for r in rows:
+        assert 0 <= r.n_leaked <= r.n_eval
+        assert r.n_clean_eval == r.n_eval - r.n_leaked
+
+
+# --- property: decontaminate vs sequential Python ---------------------------
+
+_WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
+_doc = st.lists(st.sampled_from(_WORDS), min_size=0, max_size=10).map(" ".join)
+_corpus14 = st.lists(
+    st.tuples(_doc, st.sampled_from(["s1", "s2"])), min_size=1, max_size=10
+)
+
+
+def _py_shingles(text: str, n: int = 3) -> set:
+    toks = text.split()
+    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(docs=_corpus14)
+def test_decontaminate_matches_sequential(spark, tmp_path_factory, docs):
+    """Full-report equivalence vs an independent sequential derivation:
+    hash split, exact-Jaccard >= 0.8 pairs, cross-split leak rule and
+    the per-source rollup all recomputed in plain Python."""
+    from etl_cnpjs_spark.plans.dedup import JACCARD_THRESHOLD
+
+    leak = set()
+    for (i, (a, _)), (j, (b, _)) in itertools.combinations(enumerate(docs), 2):
+        sa, sb = _py_shingles(a), _py_shingles(b)
+        if sa and sb and len(sa & sb) / len(sa | sb) >= JACCARD_THRESHOLD:
+            for e, t in ((i, j), (j, i)):
+                if _is_eval(e) and not _is_eval(t):
+                    leak.add(e)
+    expected = {}
+    for i, (_, src) in enumerate(docs):
+        n, ne, nl = expected.get(src, (0, 0, 0))
+        expected[src] = (
+            n + 1,
+            ne + (1 if _is_eval(i) else 0),
+            nl + (1 if i in leak else 0),
+        )
+
+    d = tmp_path_factory.mktemp("decon_prop")
+    pd.DataFrame(
+        {
+            "doc_id": range(len(docs)),
+            "text": [t for t, _ in docs],
+            "lang": ["en"] * len(docs),
+            "source": [s for _, s in docs],
+            "n_chars": [len(t) for t, _ in docs],
+        }
+    ).to_parquet(d / "documents.parquet", index=False)
+
+    got = {
+        r.source: (r.n_docs, r.n_eval, r.n_leaked)
+        for r in QUERIES["corpus_decontaminate"].fn(spark, str(d)).collect()
+    }
+    assert got == expected

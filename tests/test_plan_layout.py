@@ -1,7 +1,7 @@
 """Plan layout guards: every registered key lives in the family module its
 name prefix selects, plans/ holds exactly those family modules, the rest
-of the package never imports the registry, and round-named test files
-already split into family test files stay gone.
+of the package never imports the registry, and no test file is named by
+round (the ones already split into family test files are listed).
 
 The prefix → family table lives only here. Adding a key with a new prefix
 means adding the prefix to one family below (or a new family module).
@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 import subprocess
 import sys
 
@@ -126,14 +127,21 @@ def test_streaming_library_import_leaves_registry_unloaded():
 
 
 # Round-named test files whose tests now live in family test files
-# (tests/test_<family>.py). ROADMAP item 3 moves the rest batch by batch.
+# (tests/test_<family>.py).
 MOVED_ROUND_TEST_FILES = (
     "test_adversarial_r7.py",
     "test_adversarial_r8.py",
     "test_adversarial_r9.py",
+    "test_extended14.py",
 )
 
 
 def test_moved_round_test_files_stay_gone():
     present = [f for f in MOVED_ROUND_TEST_FILES if os.path.exists(os.path.join(ROOT, "tests", f))]
     assert not present, present
+    round_named = sorted(
+        f
+        for f in os.listdir(os.path.join(ROOT, "tests"))
+        if re.fullmatch(r"test_extended.*\.py|test_.*_r\d+.*\.py", f)
+    )
+    assert not round_named, round_named
