@@ -6,7 +6,9 @@ sequential aggregate fold in element order, accumulating in double.
 DuckDB's list_dot_product uses the same sequential double accumulation, so
 scores are bit-identical across engines (validated empirically: 124,750
 pairs, zero bit mismatches) — similarity plans carry *exact* oracles, no
-tolerance.
+tolerance. The kernels (vec_double, dot, cosine) are Spark SQL text, so a
+plan written as one ``spark.sql`` statement inlines them, and a DataFrame
+caller wraps them in ``F.expr``.
 
 Scale regimes:
 - brute-force top-k: one broadcast of the query vector, one scan, a top-k
@@ -23,27 +25,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_cnpjs_spark.serde import pickle_by_value
-
-
-def vec_double(vec: Column) -> Column:
-    """Promote array<float> → array<double> so accumulation is all-double
-    (and engine-identical)."""
-    return F.transform(vec, lambda x: x.cast("double"))
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product in element order (bit-deterministic)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 ALL_PAIRS_MAX_ROWS = 50_000  # above this, brute force is the wrong shape
@@ -193,8 +178,6 @@ def knn_join_blocked(
     building the kNN graph for embedding dedup/clustering without ever
     materializing the full pair matrix. Arithmetic is the same
     bit-deterministic sequential fold as the oracle."""
-    from pyspark.sql import Window
-
     tasks = _block_tasks(
         vecs, id_col, vec_col, block_target, max_rows, "knn_join_blocked",
         "The blocked brute-force k-NN self-join scores O(n²) "
@@ -500,7 +483,26 @@ def bucket_cosine_pairs(
     return score_salted_buckets(salted_buckets(signed, bucket_cap), tau)
 
 
-# DuckDB twins (same math, same accumulation order):
+# --- vector kernels as SQL text ----------------------------------------------
+#
+# Spark SQL (vec_double, dot, cosine) and their DuckDB twin (sql_cosine):
+# same math, same accumulation order. Arguments are SQL expressions.
+
+
+def vec_double(vec: str) -> str:
+    """Promote array<float> → array<double> so accumulation is all-double
+    (and engine-identical)."""
+    return f"transform({vec}, x -> cast(x as double))"
+
+
+def dot(a: str, b: str) -> str:
+    """Sequential-fold dot product in element order (bit-deterministic).
+    The zero is ``0D``: ``0.0`` is DECIMAL in Spark SQL."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+
+
+def cosine(a: str, b: str) -> str:
+    return f"{dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)}))"
 
 
 def sql_cosine(a: str, b: str) -> str:
@@ -550,12 +552,10 @@ def gram_upper_map_in_pandas(df: DataFrame, vec_col: str = "v") -> DataFrame:
                 }
             )
 
-    from pyspark.sql import functions as _F
-
     return (
         df.mapInPandas(run, schema=GRAM_PARTIAL_SCHEMA)
         .groupBy("i", "j")
-        .agg(_F.sum("s").alias("gram_q"))
+        .agg(F.sum("s").alias("gram_q"))
     )
 
 

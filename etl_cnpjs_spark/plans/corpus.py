@@ -1099,7 +1099,7 @@ def corpus_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vector-less docs pass through unpruned)
     n = (
         table(spark, sf_dir, "embeddings")
-        .select("vec_id", "label", vec_double(F.col("embedding")).alias("v"))
+        .select("vec_id", "label", F.expr(vec_double("embedding")).alias("v"))
         .join(keep2.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi")
     )
     _, assign = _label_centroid_assignment(n)

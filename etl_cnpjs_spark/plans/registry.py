@@ -71,7 +71,9 @@ def quantize(col, digits: int = 6):
 
 
 def quantize_sql(expr: str, digits: int = 6) -> str:
-    """DuckDB twin of quantize(): identical arithmetic, textual form."""
+    """DuckDB twin of quantize(): identical arithmetic, textual form. The
+    text is Spark SQL too (its DECIMAL 0.5 widens to DOUBLE against the
+    double product), and one-statement Spark plans use it as such."""
     scale = f"1e{digits}"
     return f"floor(({expr}) * {scale} + 0.5) / {scale}"
 

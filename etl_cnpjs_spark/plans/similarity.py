@@ -15,19 +15,19 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_cnpjs_spark.catalog import table
+from etl_cnpjs_spark.catalog import scan_parallelism, table_path, views
 from etl_cnpjs_spark.operators.similarity import (
     cosine,
+    dot,
     gram_upper_map_in_pandas,
     knn_join_blocked,
     sql_cosine,
     vec_double,
 )
-from etl_cnpjs_spark.plans.registry import quantize, register
+from etl_cnpjs_spark.plans.registry import quantize_sql, register
 from etl_cnpjs_spark.staging import staged
 
 
@@ -39,62 +39,63 @@ N_PROBE = 2
 KMEANS_N_PROBE = 4
 
 
+def _emb(spark: SparkSession, sf_dir: str) -> str:
+    """The session view of the embeddings table."""
+    return views(spark, sf_dir)["embeddings"]
+
+
+def _vecs_sql(emb: str) -> str:
+    """(vec_id, label, v) over the embeddings relation ``emb``, v the
+    embedding promoted to double."""
+    return f"SELECT vec_id, label, {vec_double('embedding')} AS v FROM {emb}"
+
+
 def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT parallel=True: _vecs feeds the mapInPandas numpy scorers
     # (hyperplane signatures, blocked k-NN) whose per-batch vectorization
     # wants few LARGE Arrow batches — a 32-way repartition of 2k vectors
     # measured dedup_embedding_lsh +1.24 s / sim_knn_join +0.58 s (r13 A/B).
-    e = table(spark, sf_dir, "embeddings")
-    return e.select("vec_id", "label", vec_double(F.col("embedding")).alias("v"))
+    return spark.sql(_vecs_sql(_emb(spark, sf_dir)))
 
 
 _SQL_VECS = "SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings"
 
 
-def _query(n: DataFrame) -> DataFrame:
-    """The one query row (qv, qid): the vector with the lowest vec_id."""
-    return (
-        n.orderBy("vec_id")
-        .limit(1)
-        .select(F.col("v").alias("qv"), F.col("vec_id").alias("qid"))
-    )
+# The SQL fragments below compose one statement per key: each is a CTE
+# body or CTE list over relation names (``n`` the vectors, ``q`` the
+# query row), and a key's text is built inside its call.
 
 
-def _score_vs_query(df: DataFrame, q: DataFrame, *keep: str) -> DataFrame:
-    """``keep`` columns plus cos_sim of v against the broadcast query
-    row, every row but the query itself."""
-    return (
-        df.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(*keep, cosine(F.col("v"), F.col("qv")).alias("cos_sim"))
-    )
+def _query(src: str) -> str:
+    """CTE ``q``, the one query row (qv, qid): the vector of ``src`` with
+    the lowest vec_id."""
+    return f"q AS (SELECT v AS qv, vec_id AS qid FROM {src} ORDER BY vec_id LIMIT 1)"
 
 
-def _probe_topk(
-    assign: DataFrame, centroids: DataFrame, q: DataFrame, n_probe: int
-) -> DataFrame:
-    """The IVF probe-and-rank tail: rank the centroids (cid, cv) by cosine
-    to the query (ties to the smallest cid), keep the n_probe nearest,
-    and take the TOP_K of their assigned vectors (vec_id, label, v, cid)
-    by exact cosine."""
-    probes = (
-        centroids.crossJoin(F.broadcast(q))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.orderBy(F.desc(cosine(F.col("qv"), F.col("cv"))), F.asc("cid"))
-            ),
-        )
-        .filter(F.col("rn") <= n_probe)
-        .select("cid")
-    )
-    return (
-        _score_vs_query(
-            assign.join(F.broadcast(probes), "cid"), q, "vec_id", "label", "cid"
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
+def _score_vs_query(src: str, *keep: str) -> str:
+    """CTE body: ``keep`` columns of ``src`` plus cos_sim of v against the
+    broadcast query row ``q``, every row but the query itself."""
+    return f"""
+      SELECT /*+ BROADCAST(q) */ {", ".join(keep)}, {cosine("v", "qv")} AS cos_sim
+      FROM {src} CROSS JOIN q WHERE vec_id <> qid"""
+
+
+def _probe_topk(assign: str, centroids: str, n_probe: int) -> str:
+    """The IVF probe-and-rank tail as CTEs ``probes`` … ``topk``: rank
+    the centroids (cid, cv) by cosine to the query ``q`` (ties to the
+    smallest cid), keep the n_probe nearest, and take the TOP_K of their
+    assigned vectors (vec_id, label, v, cid) by exact cosine."""
+    return f"""
+    probes AS (
+      SELECT cid FROM (
+        SELECT /*+ BROADCAST(q) */ cid,
+               row_number() OVER (ORDER BY {cosine("qv", "cv")} DESC, cid) AS rn
+        FROM {centroids} CROSS JOIN q)
+      WHERE rn <= {n_probe}),
+    probed AS (
+      SELECT /*+ BROADCAST(probes) */ * FROM {assign} JOIN probes USING (cid)),
+    scored AS ({_score_vs_query("probed", "vec_id", "label", "cid")}),
+    topk AS (SELECT * FROM scored ORDER BY cos_sim DESC, vec_id LIMIT {TOP_K})"""
 
 
 @register(
@@ -114,9 +115,14 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for one query vector (the lowest vec_id):
     broadcast the single query row, scan once, TakeOrderedAndProject heap.
     The exact-ANN baseline; linear in corpus size at any scale."""
-    n = _vecs(spark, sf_dir)
-    scored = _score_vs_query(n, _query(n), "vec_id", "label")
-    return scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(TOP_K)
+    return spark.sql(
+        f"""
+        WITH n AS ({_vecs_sql(_emb(spark, sf_dir))}),
+        {_query("n")},
+        s AS ({_score_vs_query("n", "vec_id", "label")})
+        SELECT * FROM s ORDER BY cos_sim DESC, vec_id LIMIT {TOP_K}
+        """
+    )
 
 
 KNN_K = 5
@@ -178,13 +184,14 @@ def sim_topk_kmeans_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales with the corpus; the model is trained once per (session, sf)
     and reused (_kmeans_model), mirroring offline quantizer training. Because
     trained-model assignment depends on MLlib internals it cannot carry
-    a SQL oracle — this key is DELIBERATELY rows-only (the one such key
-    in the registry, r6 ADVICE item 1: benchmark output must not claim
+    a SQL oracle — this key is DELIBERATELY rows-only (one of the
+    registry's two rows-only keys, beside corpus.py's sample_hash_xx;
+    r6 ADVICE item 1: benchmark output must not claim
     trained-quantizer coverage through the label-seeded twin). Its
     correctness evidence is the measured recall-vs-exact test
     (tests/test_blocked_ops.py::test_kmeans_ivf_recall_vs_exact) and
     the structural invariants shared with the oracle-checked twin."""
-    from pyspark.ml.functions import array_to_vector  # noqa: F401
+    from pyspark.ml.functions import array_to_vector
 
     n = _vecs(spark, sf_dir).withColumn("features", array_to_vector(F.col("v")))
     model = _kmeans_model(spark, sf_dir)
@@ -193,7 +200,15 @@ def sim_topk_kmeans_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, list(map(float, c))) for i, c in enumerate(model.clusterCenters())],
         "cid int, cv array<double>",
     )
-    return _probe_topk(assign, centroids, _query(assign), KMEANS_N_PROBE)
+    return spark.sql(
+        f"""
+        WITH {_query("{assign}")},
+        {_probe_topk("{assign}", "{c}", KMEANS_N_PROBE)}
+        SELECT * FROM topk
+        """,
+        assign=assign,
+        c=centroids,
+    )
 
 
 # Shared CTE block: deterministic label-mean centroids (one exact
@@ -227,8 +242,49 @@ _SQL_ASSIGN_CTES = f"""
 _CENTROID_BROADCAST_MAX_K = 4096
 
 
+def _label_assignment_ctes(src: str) -> str:
+    """CTEs ``c`` (cid, cv) and ``assign`` (vec_id, label, v, cid) over the
+    vectors ``src``: the Spark twin of _SQL_ASSIGN_CTES, described at
+    _label_centroid_assignment. Built per call: the guard reads
+    _CENTROID_BROADCAST_MAX_K when the plan is built."""
+    k = _CENTROID_BROADCAST_MAX_K
+    # r13 guard (ADVICE r12 low #2): the k centroids collapse into ONE
+    # row holding k×dim doubles — fine for the small label alphabets
+    # this form exists for, but a single row hits Spark's per-row /
+    # collect_list limits far sooner than a k-row broadcast would. The
+    # bound is enforced at EXECUTION time through a filter on the
+    # collapsed row itself (assert_true returns NULL when the bound
+    # holds, so the filter passes; a driver-side count() would re-run
+    # the centroid aggregate as a second job). Above the bound, route
+    # through sim_topk_ivf's k-row broadcast-join assignment instead.
+    return f"""
+    cl AS (
+      SELECT label, pos0, {quantize_sql("sum(x) / count(1)")} AS cx
+      FROM (SELECT label, posexplode(v) AS (pos0, x) FROM {src})
+      GROUP BY label, pos0),
+    c AS (
+      SELECT label AS cid,
+             transform(array_sort(collect_list(struct(pos0, cx))), s -> s.cx) AS cv
+      FROM cl GROUP BY label),
+    cents AS (
+      SELECT __cs FROM (SELECT collect_list(struct(cid, cv)) AS __cs FROM c)
+      WHERE assert_true(
+        size(__cs) <= {k},
+        concat('_label_centroid_assignment: centroid count ',
+               cast(size(__cs) AS string),
+               ' exceeds the {k} single-row broadcast bound; use a k-row '
+               'broadcast join (sim_topk_ivf\\'s assignment shape) for large k.')
+      ) IS NULL),
+    assign AS (
+      SELECT /*+ BROADCAST(cents) */ vec_id, label, v,
+             -array_max(transform(__cs, s -> named_struct(
+               'cos', {cosine("v", "s.cv")}, 'ncid', -s.cid))).ncid AS cid
+      FROM {src} CROSS JOIN cents)"""
+
+
 def _label_centroid_assignment(n: DataFrame):
-    """Spark twin of _SQL_ASSIGN_CTES: returns (centroids c[cid, cv],
+    """_label_assignment_ctes over the DataFrame ``n``, one ``spark.sql``
+    per output: returns (centroids c[cid, cv],
     assignment[vec_id, label, v, cid]). Centroid build is one
     (label,pos) partial-agg shuffle; assignment is a TRUE
     broadcast-centroid map pass (r12): the k centroids collect into a
@@ -243,60 +299,12 @@ def _label_centroid_assignment(n: DataFrame):
     synthetic in tests/test_plans.py::test_centroid_assignment_argmax
     and the four consumer keys' oracles (sim_topk_kmeans,
     dedup_semantic, sim_recall_report, corpus_dedup_funnel)."""
-    cent_long = (
-        n.select("label", F.posexplode("v").alias("pos0", "x"))
-        .groupBy("label", "pos0")
-        .agg(quantize(F.sum("x") / F.count(F.lit(1))).alias("cx"))
+    text = f"WITH {_label_assignment_ctes('{n}')} SELECT "
+    sql = n.sparkSession.sql
+    return (
+        sql(text + "cid, cv FROM c", n=n),
+        sql(text + "vec_id, label, v, cid FROM assign", n=n),
     )
-    c = cent_long.groupBy(F.col("label").alias("cid")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos0", "cx"))), lambda s: s.cx
-        ).alias("cv")
-    )
-    # r13 guard (ADVICE r12 low #2): the k centroids collapse into ONE
-    # row holding k×dim doubles — fine for the small label alphabets
-    # this form exists for, but a single row hits Spark's per-row /
-    # collect_list limits far sooner than a k-row broadcast would. The
-    # bound is enforced at EXECUTION time through a filter on the
-    # collapsed row itself (assert_true returns NULL when the bound
-    # holds, so the filter passes; a driver-side count() would re-run
-    # the centroid aggregate as a second job). Above the bound, route
-    # through sim_topk_ivf's k-row broadcast-join assignment instead.
-    call = c.agg(F.collect_list(F.struct("cid", "cv")).alias("__cs")).filter(
-        F.assert_true(
-            F.size("__cs") <= _CENTROID_BROADCAST_MAX_K,
-            F.concat(
-                F.lit(
-                    "_label_centroid_assignment: centroid count "
-                ),
-                F.size("__cs").cast("string"),
-                F.lit(
-                    f" exceeds the {_CENTROID_BROADCAST_MAX_K} single-row "
-                    "broadcast bound; use a k-row broadcast join "
-                    "(sim_topk_ivf's assignment shape) for large k."
-                ),
-            ),
-        ).isNull()
-    )
-    best = F.array_max(
-        F.transform(
-            F.col("__cs"),
-            lambda s: F.struct(
-                cosine(F.col("v"), s.cv).alias("cos"),
-                (-s.cid).alias("ncid"),
-            ),
-        )
-    )
-    assign = (
-        n.crossJoin(F.broadcast(call))
-        .select(
-            "vec_id",
-            "label",
-            "v",
-            (-best.getField("ncid")).alias("cid"),
-        )
-    )
-    return c, assign
 
 
 _SQL_KMEANS = f"""
@@ -340,9 +348,15 @@ def sim_topk_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid build is one (label,pos) partial-agg shuffle; assignment is
     a broadcast-centroid map pass; a probe touches nprobe/k of the
     corpus."""
-    n = _vecs(spark, sf_dir)
-    c, assign = _label_centroid_assignment(n)
-    return _probe_topk(assign, c, _query(n), KMEANS_N_PROBE)
+    return spark.sql(
+        f"""
+        WITH n AS ({_vecs_sql(_emb(spark, sf_dir))}),
+        {_label_assignment_ctes("n")},
+        {_query("n")},
+        {_probe_topk("assign", "c", KMEANS_N_PROBE)}
+        SELECT * FROM topk
+        """
+    )
 
 
 @register(
@@ -365,15 +379,18 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle carries (label, pos, partial sums), n·dim small rows, and
     map-side partial aggregation collapses them before the wire. Output
     stays long-form (label, pos, value) — rebuilding arrays is a
-    presentation step, not a compute one. quantize(6) (floor-based,
-    registry.quantize) absorbs partition-order float-sum drift
+    presentation step, not a compute one. quantize_sql(6) (floor-based,
+    registry.quantize_sql) absorbs partition-order float-sum drift
     (sum/count, same op order both engines) without the round()
     half-boundary divergence."""
-    n = _vecs(spark, sf_dir)
-    u = n.select("label", F.posexplode("v").alias("pos0", "x"))
-    return (
-        u.groupBy("label", (F.col("pos0") + 1).cast("int").alias("pos"))
-        .agg(quantize(F.sum("x") / F.count(F.lit(1))).alias("centroid"))
+    return spark.sql(
+        f"""
+        WITH n AS ({_vecs_sql(_emb(spark, sf_dir))})
+        SELECT label, CAST(pos0 + 1 AS INT) AS pos,
+               {quantize_sql("sum(x) / count(1)")} AS centroid
+        FROM (SELECT label, posexplode(v) AS (pos0, x) FROM n)
+        GROUP BY label, CAST(pos0 + 1 AS INT)
+        """
     )
 
 
@@ -424,26 +441,21 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins this one). A probe touches |corpus|·nprobe/|centroids|
     vectors instead of all. The oracle re-derives the same algorithm,
     so this approximate plan still hash-matches exactly."""
-    n = _vecs(spark, sf_dir)
-    c = n.filter(F.col("vec_id") % CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+    return spark.sql(
+        f"""
+        WITH n AS ({_vecs_sql(_emb(spark, sf_dir))}),
+        c AS (SELECT vec_id AS cid, v AS cv FROM n WHERE vec_id % {CENTROID_MOD} = 0),
+        assign AS (
+          SELECT vec_id, b.label AS label, b.v AS v, b.cid AS cid FROM (
+            SELECT /*+ BROADCAST(c) */ vec_id,
+                   max_by(struct(label, v, cid),
+                          named_struct('cos', {cosine("v", "cv")}, 'ncid', -cid)) AS b
+            FROM n CROSS JOIN c GROUP BY vec_id)),
+        {_query("n")},
+        {_probe_topk("assign", "c", N_PROBE)}
+        SELECT * FROM topk
+        """
     )
-    score = F.struct(
-        cosine(F.col("v"), F.col("cv")).alias("cos"),
-        (-F.col("cid")).alias("ncid"),
-    )
-    assign = (
-        n.crossJoin(F.broadcast(c))
-        .groupBy("vec_id")
-        .agg(F.max_by(F.struct("label", "v", "cid"), score).alias("b"))
-        .select(
-            "vec_id",
-            F.col("b.label").alias("label"),
-            F.col("b.v").alias("v"),
-            F.col("b.cid").alias("cid"),
-        )
-    )
-    return _probe_topk(assign, c, _query(n), N_PROBE)
 
 
 @register(
@@ -480,23 +492,20 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     The int8 codes are emitted as a csv scalar (q8_csv) at the output
     boundary (driver canonicalizer can't sort raw array columns); a
     real sink would of course store the packed array/binary form."""
-    e = table(spark, sf_dir, "embeddings")
-    d = e.select(
-        "vec_id", F.expr("transform(embedding, x -> cast(x as double))").alias("v")
-    )
-    s = d.select(
-        "vec_id", "v", F.array_min("v").alias("mn"), F.array_max("v").alias("mx")
-    )
-    return s.selectExpr(
-        "vec_id",
-        "mn",
-        "mx",
-        """array_join(
-             CASE WHEN mx = mn THEN transform(v, x -> '0')
-                  ELSE transform(v,
-                         x -> cast(cast(floor((x - mn) * 255 / (mx - mn) + 0.5)
-                                        as int) as string))
-             END, ',') AS q8_csv""",
+    return spark.sql(
+        f"""
+        WITH d AS (SELECT vec_id, {vec_double("embedding")} AS v
+                   FROM {_emb(spark, sf_dir)}),
+        s AS (SELECT vec_id, v, array_min(v) AS mn, array_max(v) AS mx FROM d)
+        SELECT vec_id, mn, mx,
+               array_join(
+                 CASE WHEN mx = mn THEN transform(v, x -> '0')
+                      ELSE transform(v,
+                             x -> cast(cast(floor((x - mn) * 255 / (mx - mn) + 0.5)
+                                            as int) as string))
+                 END, ',') AS q8_csv
+        FROM s
+        """
     )
 
 
@@ -530,8 +539,9 @@ def embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine-primitive twin of pyspark.ml's Summarizer/RowMatrix
     covariance (which are float-accumulating and rows-only-checkable
     by construction)."""
-    e = table(spark, sf_dir, "embeddings")
-    d = e.select("vec_id", vec_double(F.col("embedding")).alias("v"))
+    d = spark.sql(
+        f"SELECT vec_id, {vec_double('embedding')} AS v FROM {_emb(spark, sf_dir)}"
+    )
     return gram_upper_map_in_pandas(d, "v")
 
 
@@ -583,44 +593,26 @@ def embedding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plans/registry.py). No UDF, no shuffle — the scan is the cost, and
     at 100 TB this runs as a side-output of whatever scan touches the
     embeddings anyway."""
-    e = table(spark, sf_dir, "embeddings")
-    d = e.select(
-        "vec_id", F.expr("transform(embedding, x -> cast(x as double))").alias("v")
-    )
-    nonempty = F.size("v") > 0
-    n = d.withColumn(
-        "norm_raw",
-        F.when(
-            nonempty,
-            F.sqrt(
-                F.expr(
-                    "aggregate(transform(v, x -> x * x), cast(0 as double), (a, x) -> a + x)"
-                )
-            ),
-        ),
-    )
-    return n.select(
-        "vec_id",
-        quantize(F.col("norm_raw")).alias("l2_norm"),
-        F.size("v").alias("dim"),
-        quantize(
-            F.when(F.col("norm_raw") > 0, F.expr("v[0]") / F.col("norm_raw"))
-        ).alias("unit0"),
-        quantize(
-            F.when(
-                nonempty,
-                F.expr("aggregate(v, cast(0 as double), (a, x) -> a + x)")
-                / F.size("v"),
-            )
-        ).alias("mean_c"),
-        quantize(
-            F.when(
-                nonempty,
-                F.expr(
-                    "aggregate(transform(v, x -> abs(x)), cast(0 as double), (a, x) -> greatest(a, x))"
-                ),
-            )
-        ).alias("max_abs"),
+    return spark.sql(
+        f"""
+        WITH d AS (SELECT vec_id, {vec_double("embedding")} AS v
+                   FROM {_emb(spark, sf_dir)}),
+        n AS (SELECT vec_id, v,
+                     CASE WHEN size(v) > 0 THEN sqrt({dot("v", "v")}) END AS norm_raw
+              FROM d)
+        SELECT vec_id,
+               {quantize_sql("norm_raw")} AS l2_norm,
+               size(v) AS dim,
+               {quantize_sql("CASE WHEN norm_raw > 0 THEN v[0] / norm_raw END")} AS unit0,
+               {quantize_sql(
+                   "CASE WHEN size(v) > 0 THEN aggregate(v, 0D, (a, x) -> a + x) / size(v) END"
+               )} AS mean_c,
+               {quantize_sql(
+                   "CASE WHEN size(v) > 0 THEN"
+                   " aggregate(transform(v, x -> abs(x)), 0D, (a, x) -> greatest(a, x)) END"
+               )} AS max_abs
+        FROM n
+        """
     )
 
 
@@ -674,34 +666,26 @@ def sim_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the top-k. At 100 TB: token vectors never shuffle — only
     (gid, qix, max) partials; this is the documented scale shape of
     late-interaction scoring (score-then-prune, no index)."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", vec_double(F.col("embedding")).alias("v")
-    )
-    g = e.select(
-        F.expr(f"vec_id DIV {_MAXSIM_GROUP}").alias("gid"),
-        (F.col("vec_id") % _MAXSIM_GROUP).alias("tix"),
-        "v",
-    )
-    q = g.filter(F.col("gid") == 0).select(
-        F.col("tix").alias("qix"), F.col("v").alias("qv")
-    )
-    s = (
-        g.filter(F.col("gid") != 0)
-        .crossJoin(F.broadcast(q))
-        .groupBy("gid", "qix")
-        .agg(F.max(cosine(F.col("v"), F.col("qv"))).alias("m"))
-    )
-    p = s.groupBy("gid").agg(
-        *[
-            F.max(F.when(F.col("qix") == i, F.col("m"))).alias(f"m{i}")
-            for i in range(_MAXSIM_GROUP)
-        ]
-    )
-    maxsim = F.col("m0") + F.col("m1") + F.col("m2") + F.col("m3") + F.col("m4")
-    return (
-        p.select(F.col("gid").cast("bigint").alias("gid"), maxsim.alias("maxsim"))
-        .orderBy(F.desc("maxsim"), F.asc("gid"))
-        .limit(_MAXSIM_TOPK)
+    ms = range(_MAXSIM_GROUP)
+    return spark.sql(
+        f"""
+        WITH g AS (SELECT vec_id DIV {_MAXSIM_GROUP} AS gid,
+                          vec_id % {_MAXSIM_GROUP} AS tix,
+                          {vec_double("embedding")} AS v
+                   FROM {_emb(spark, sf_dir)}),
+        q AS (SELECT tix AS qix, v AS qv FROM g WHERE gid = 0),
+        s AS (
+          SELECT /*+ BROADCAST(q) */ gid, qix, max({cosine("v", "qv")}) AS m
+          FROM g CROSS JOIN q WHERE gid <> 0
+          GROUP BY gid, qix),
+        p AS (
+          SELECT gid, {", ".join(f"max(CASE WHEN qix = {i} THEN m END) AS m{i}" for i in ms)}
+          FROM s GROUP BY gid)
+        SELECT CAST(gid AS BIGINT) AS gid, {" + ".join(f"m{i}" for i in ms)} AS maxsim
+        FROM p
+        ORDER BY maxsim DESC, gid
+        LIMIT {_MAXSIM_TOPK}
+        """
     )
 
 
@@ -718,8 +702,6 @@ _FILTERED_TOPK = 3
 
 
 def _filtered_sql() -> str:
-    from etl_cnpjs_spark.operators.similarity import sql_cosine
-
     return f"""
     WITH n AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
     q AS (SELECT v AS qv FROM n ORDER BY vec_id LIMIT 1),
@@ -753,20 +735,19 @@ def sim_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production argument for storing label as a partition column.
     Determinism: cosine is the sequential-fold dot (bit-exact), rank
     ties break on vec_id."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", vec_double(F.col("embedding")).alias("v")
-    )
-    s = _score_vs_query(e, _query(e), "vec_id", "label")
-    from pyspark.sql.window import Window as W
-
-    r = s.withColumn(
-        "rk",
-        F.row_number().over(
-            W.partitionBy("label").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        ),
-    )
-    return r.filter(F.col("rk") <= _FILTERED_TOPK).select(
-        "label", F.col("rk").cast("bigint").alias("rk"), "vec_id", "cos_sim"
+    return spark.sql(
+        f"""
+        WITH n AS ({_vecs_sql(_emb(spark, sf_dir))}),
+        {_query("n")},
+        s AS ({_score_vs_query("n", "vec_id", "label")}),
+        r AS (
+          SELECT vec_id, label, cos_sim,
+                 row_number() OVER (PARTITION BY label
+                                    ORDER BY cos_sim DESC, vec_id) AS rk
+          FROM s)
+        SELECT label, CAST(rk AS BIGINT) AS rk, vec_id, cos_sim
+        FROM r WHERE rk <= {_FILTERED_TOPK}
+        """
     )
 
 
@@ -812,19 +793,16 @@ def sim_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/similarity.py established. At 100 TB this is the
     cheapest pre-LSH compaction: 8 doubles/row downstream instead of
     64 floats."""
-    from etl_cnpjs_spark.operators.similarity import dot, vec_double
-
-    e = table(spark, sf_dir, "embeddings")
-    v = vec_double(F.col("embedding"))
-    out = [F.col("vec_id")]
+    v = vec_double("embedding")
+    cols = []
     for k, row in enumerate(_RP_SIGNS):
-        signs = F.array(*[F.lit(s) for s in row])
-        out.append(
-            (
-                F.floor(dot(v, signs) * _RP_SCALE * 1e6 + 0.5) / 1e6
-            ).alias(f"proj_{k}")
+        signs = "array(" + ", ".join(f"{s}D" for s in row) + ")"
+        cols.append(
+            f"floor({dot(v, signs)} * {_RP_SCALE}D * 1e6 + 0.5D) / 1e6 AS proj_{k}"
         )
-    return e.select(*out)
+    return spark.sql(
+        f"SELECT vec_id, {', '.join(cols)} FROM {_emb(spark, sf_dir)}"
+    )
 
 
 # --- embedding_pq -----------------------------------------------------------
@@ -891,47 +869,35 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned on (vec_id, s) — same exchange). At 100 TB: PQ codes
     shrink the ANN candidate scan 32×; assignment is embarrassingly
     parallel, exactly this plan with a trained codebook."""
-    from etl_cnpjs_spark.operators.similarity import dot, vec_double
-
-    e = table(spark, sf_dir, "embeddings", parallel=True).select(
-        "vec_id", vec_double(F.col("embedding")).alias("v")
-    )
-    seeds = e.filter(F.col("vec_id") < _PQ_K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    sub = F.expr(f"explode(sequence(0, {_PQ_SUBS - 1}))").alias("s")
-    exp = e.select("vec_id", "v", sub).crossJoin(F.broadcast(seeds))
-    va = F.expr(f"slice(v, s * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})")
-    vb = F.expr(f"slice(cv, s * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})")
-    dist = dot(va, va) - 2 * dot(va, vb) + dot(vb, vb)
-    d = exp.select(
-        "vec_id",
-        "s",
-        "cid",
-        F.floor(dist * 1000000 + 0.5).cast("bigint").alias("dist_micro"),
-    )
-    best = d.select(
-        "vec_id",
-        "s",
-        "cid",
-        "dist_micro",
-        F.row_number()
-        .over(W.partitionBy("vec_id", "s").orderBy("dist_micro", "cid"))
-        .alias("rk"),
-    )
-    aggs = [
-        F.max(F.when(F.col("s") == k, F.col("cid")))
-        .cast("bigint")
-        .alias(f"code_{k}")
+    emb = _emb(spark, sf_dir)
+    n = scan_parallelism(spark, table_path(sf_dir, "embeddings"))
+    hint = f"/*+ REPARTITION({n}) */ " if n else ""
+    va = f"slice(v, s * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})"
+    vb = f"slice(cv, s * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})"
+    dist = f"{dot(va, va)} - 2 * {dot(va, vb)} + {dot(vb, vb)}"
+    codes = ", ".join(
+        f"CAST(max(CASE WHEN s = {k} THEN cid END) AS BIGINT) AS code_{k}"
         for k in range(_PQ_SUBS)
-    ]
-    return (
-        best.filter(F.col("rk") == 1)
-        .groupBy("vec_id")
-        .agg(
-            *aggs,
-            F.sum("dist_micro").cast("bigint").alias("err_micro"),
-        )
+    )
+    return spark.sql(
+        f"""
+        WITH e AS (SELECT vec_id, {vec_double("embedding")} AS v
+                   FROM (SELECT {hint}* FROM {emb})),
+        seeds AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_PQ_K}),
+        d AS (
+          SELECT /*+ BROADCAST(seeds) */ vec_id, s, cid,
+                 CAST(floor(({dist}) * 1000000 + 0.5D) AS BIGINT) AS dist_micro
+          FROM (SELECT vec_id, v, explode(sequence(0, {_PQ_SUBS - 1})) AS s FROM e)
+          CROSS JOIN seeds),
+        best AS (
+          SELECT vec_id, s, cid, dist_micro,
+                 row_number() OVER (PARTITION BY vec_id, s
+                                    ORDER BY dist_micro, cid) AS rk
+          FROM d)
+        SELECT vec_id, {codes},
+               CAST(sum(dist_micro) AS BIGINT) AS err_micro
+        FROM best WHERE rk = 1 GROUP BY vec_id
+        """
     )
 
 
@@ -951,8 +917,6 @@ RECALL_NQ = 20  # probe-set size: the NQ lowest vec_ids query the index
 
 
 def _recall_oracle() -> str:
-    from etl_cnpjs_spark.operators.similarity import sql_cosine
-
     return f"""
     WITH n AS ({_SQL_VECS}),
     {_SQL_ASSIGN_CTES},
@@ -1017,68 +981,38 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall evidence in tests/test_blocked_ops.py — this key makes the
     oracle-derivable index's quality a hash-checked, distributed
     query."""
-    from etl_cnpjs_spark.operators.similarity import cosine
-
-    n = _vecs(spark, sf_dir)
-    q = (
-        n.orderBy("vec_id")
-        .limit(RECALL_NQ)
-        .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"))
-    )
-    wq = Window.partitionBy("qid")
-
-    ex = (
-        n.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                wq.orderBy(F.desc(cosine(F.col("v"), F.col("qv"))), F.asc("vec_id"))
-            ),
-        )
-        .filter(F.col("rn") <= TOP_K)
-        .select("qid", "vec_id")
-    )
-
-    c, assign = _label_centroid_assignment(n)
-    pr = (
-        c.crossJoin(F.broadcast(q))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                wq.orderBy(F.desc(cosine(F.col("qv"), F.col("cv"))), F.asc("cid"))
-            ),
-        )
-        .filter(F.col("rn") <= KMEANS_N_PROBE)
-        .select("qid", "cid")
-    )
-    iv = (
-        assign.join(F.broadcast(pr), "cid")
-        .join(F.broadcast(q), "qid")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                wq.orderBy(F.desc(cosine(F.col("v"), F.col("qv"))), F.asc("vec_id"))
-            ),
-        )
-        .filter(F.col("rn") <= TOP_K)
-        .select("qid", F.col("vec_id").alias("iv_id"), F.lit(1).alias("_hit"))
-    )
-
-    return (
-        ex.join(
-            iv,
-            (ex["qid"] == iv["qid"]) & (ex["vec_id"] == iv["iv_id"]),
-            "left",
-        )
-        .select(ex["qid"], "_hit")
-        .groupBy("qid")
-        .agg(
-            F.lit(TOP_K).cast("bigint").alias("k"),
-            F.count("_hit").cast("bigint").alias("n_overlap"),
-            F.expr(f"CAST(count(_hit) * 1000000 DIV {TOP_K} AS BIGINT)").alias(
-                "recall_micro"
-            ),
-        )
+    return spark.sql(
+        f"""
+        WITH n AS ({_vecs_sql(_emb(spark, sf_dir))}),
+        {_label_assignment_ctes("n")},
+        q AS (SELECT vec_id AS qid, v AS qv FROM n ORDER BY vec_id LIMIT {RECALL_NQ}),
+        ex AS (
+          SELECT qid, vec_id FROM (
+            SELECT /*+ BROADCAST(q) */ qid, vec_id,
+                   row_number() OVER (PARTITION BY qid
+                     ORDER BY {cosine("v", "qv")} DESC, vec_id) AS rn
+            FROM n CROSS JOIN q WHERE vec_id <> qid)
+          WHERE rn <= {TOP_K}),
+        pr AS (
+          SELECT qid, cid FROM (
+            SELECT /*+ BROADCAST(q) */ qid, cid,
+                   row_number() OVER (PARTITION BY qid
+                     ORDER BY {cosine("qv", "cv")} DESC, cid) AS rn
+            FROM c CROSS JOIN q)
+          WHERE rn <= {KMEANS_N_PROBE}),
+        iv AS (
+          SELECT qid, vec_id AS iv_id, 1 AS _hit FROM (
+            SELECT /*+ BROADCAST(pr, q) */ qid, vec_id,
+                   row_number() OVER (PARTITION BY qid
+                     ORDER BY {cosine("v", "qv")} DESC, vec_id) AS rn
+            FROM assign JOIN pr USING (cid) JOIN q USING (qid)
+            WHERE vec_id <> qid)
+          WHERE rn <= {TOP_K})
+        SELECT ex.qid,
+               CAST({TOP_K} AS BIGINT) AS k,
+               CAST(count(_hit) AS BIGINT) AS n_overlap,
+               CAST(count(_hit) * 1000000 DIV {TOP_K} AS BIGINT) AS recall_micro
+        FROM ex LEFT JOIN iv ON ex.qid = iv.qid AND ex.vec_id = iv.iv_id
+        GROUP BY ex.qid
+        """
     )

@@ -29,6 +29,17 @@ ONE_STATEMENT_KEYS = [
     "layout_zorder",
     "join_asof_nearest",
     "tpch_q1",
+    "sim_topk",
+    "sim_topk_ivf",
+    "sim_topk_kmeans",
+    "sim_recall_report",
+    "sim_topk_filtered",
+    "sim_maxsim",
+    "sim_random_projection",
+    "embedding_centroids",
+    "embedding_quantize",
+    "embedding_normalize",
+    "embedding_pq",
 ]
 
 PY4J_BUDGET = 20

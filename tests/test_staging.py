@@ -191,16 +191,18 @@ def test_table_and_views_name_one_view(spark, sf_dir):
 def test_stagers_serve_a_new_session(spark):
     """Temp views belong to one SparkSession: after the first session
     has read a table, a ``newSession()`` reads it through ``table()``,
-    a SQL statement over ``views()`` and a plan, each from views of its
-    own."""
+    a SQL statement over ``views()`` and plans, each from views of its
+    own. ``sim_topk_ivf`` inlines the vector kernels' SQL text, so it
+    needs nothing registered in the new session beyond the views."""
     sf = SMOKE_SF_DIR
     n = table(spark, sf, "nation").count()
     s2 = spark.newSession()
     assert table(s2, sf, "nation").count() == n
     v = views(s2, sf)["nation"]
     assert s2.sql(f"SELECT count(*) AS n FROM {v}").first().n == n
-    flagship = QUERIES["flagship"].fn
-    assert sorted(flagship(s2, sf).collect()) == sorted(flagship(spark, sf).collect())
+    for key in ("flagship", "sim_topk_ivf"):
+        fn = QUERIES[key].fn
+        assert sorted(fn(s2, sf).collect()) == sorted(fn(spark, sf).collect()), key
 
 
 def test_aliased_self_join_over_table_handles(spark, sf_dir):

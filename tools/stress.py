@@ -109,7 +109,7 @@ def main() -> None:
     from etl_cnpjs_spark.operators.similarity import embedding_lsh_pairs, vec_double
 
     def lsh_pairs(e, tau=0.4, bands=32, rows=2):
-        v = e.select("vec_id", vec_double(F.col("embedding")).alias("v"))
+        v = e.select("vec_id", F.expr(vec_double("embedding")).alias("v"))
         return embedding_lsh_pairs(v, "vec_id", "v", tau, bands=bands, rows=rows)
 
     ev = table(spark, SF_DIR, "events")
